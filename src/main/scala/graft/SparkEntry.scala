@@ -182,7 +182,7 @@ object SparkEntry {
   // d08/d10/d18/ml23 its connected components, d05/d16 the brute-force
   // Jaccard truth, d16/d20 the raw candidate set, d02/d14 the shingle
   // frame. Before round 13 each rebuilt the whole pipeline from the raw
-  // corpus (4 full LSH builds + 4 pointer-jumping component runs per
+  // corpus (4 full LSH builds + 4 connected-component runs per
   // pass); the frames below follow the span/LM shared-profile discipline —
   // built once per (session, sfDir), pinned, swept at pass boundaries, the
   // first family member to run pays the build.

@@ -28,19 +28,49 @@ object Tables {
     * (parquet decode, hash/regex expressions, aggregate partials)
     * serializes on one core. For such frames a round-robin repartition to
     * the default parallelism costs one tiny shuffle and unlocks the whole
-    * machine. Guarded two ways so it is a strict no-op outside that regime:
-    * frames above `wideBytes` (their scans are already thousands of
-    * partitions wide at the 100 TB design point) and frames below
-    * `tinyBytes` (dimension tables — a shuffle would cost more than the
-    * scan) pass through untouched. Size comes from optimizer statistics —
-    * no job is triggered.
+    * machine.
+    *
+    * The decision reads the frame's PLANNED partition count
+    * ([[plannedPartitions]]): a frame narrower than the default
+    * parallelism is widened, one already at least that wide passes
+    * through untouched, and so does a frame whose width is only decided
+    * at run time (it ends in a shuffle). Frames below `tinyBytes` by
+    * optimizer statistics (dimension tables — a shuffle would cost more
+    * than the scan) pass through too. Size statistics are NOT used to
+    * spot wide frames: a checkpointed 0.3 MB frame under an explode and
+    * a join estimates at tens of GB. No job is triggered.
     */
-  def spread(df: DataFrame,
-      tinyBytes: Long = 1L << 20, wideBytes: Long = 256L << 20): DataFrame = {
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes >= BigInt(tinyBytes) && bytes <= BigInt(wideBytes))
-      df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+  def spread(df: DataFrame, tinyBytes: Long = 1L << 20): DataFrame = {
+    val width = df.sparkSession.sparkContext.defaultParallelism
+    val narrow = plannedPartitions(df).exists(_ < width)
+    if (narrow && df.queryExecution.optimizedPlan.stats.sizeInBytes >= BigInt(tinyBytes))
+      df.repartition(width)
     else df
+  }
+
+  /** The number of partitions `df` will have, when the physical plan fixes
+    * it without running anything: a narrow pipeline (project / filter /
+    * generate) over a checkpointed or in-memory RDD, a local table, a file
+    * scan, or an explicit `repartition(n)`. `None` when the count is only
+    * known at run time — the output of a join, an aggregate or a
+    * by-column repartition, which AQE may coalesce. Planning only: file
+    * splits come from the already-listed file index, so no job runs.
+    */
+  private[graft] def plannedPartitions(df: DataFrame): Option[Int] = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    def walk(p: SparkPlan): Option[Int] = p match {
+      case s: RDDScanExec => Some(s.rdd.getNumPartitions)
+      case s: ExternalRDDScanExec[_] => Some(s.rdd.getNumPartitions)
+      case s: LocalTableScanExec => Some(s.inputRDD.getNumPartitions)
+      case s: FileSourceScanExec => Some(s.inputRDD.getNumPartitions)
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM =>
+        Some(e.numPartitions)
+      case n @ (_: ProjectExec | _: FilterExec | _: GenerateExec) =>
+        walk(n.children.head)
+      case _ => None
+    }
+    walk(df.queryExecution.sparkPlan)
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =

@@ -54,11 +54,18 @@ object DedupOps {
   /** LSH band keys: `bands` keys per doc, each the md5 of `rowsPerBand`
     * consecutive minhash components. Output: (id, band, band_key), one row
     * per band — the unit that gets bucket-joined.
+    *
+    * A doc with no shingles has null components and gets a NULL band key
+    * in every band (as SQL's `m00 || '|' || m01` does): `concat_ws` would
+    * skip the nulls and hash "", putting every shingle-less doc into one
+    * shared bucket per band.
     */
   def lshBandKeys(signatures: DataFrame, id: String, bands: Int, rowsPerBand: Int): DataFrame = {
     val perBand = (0 until bands).map { b =>
       val parts = (0 until rowsPerBand).map(r => col(f"mh${b * rowsPerBand + r}%02d"))
-      struct(lit(b).as("band"), md5(concat_ws("|", parts: _*)).as("band_key"))
+      val key = when(parts.map(_.isNotNull).reduce(_ && _),
+        md5(concat_ws("|", parts: _*)))
+      struct(lit(b).as("band"), key.as("band_key"))
     }
     signatures
       .select(col(id), explode(array(perBand: _*)).as("bk"))
@@ -101,34 +108,49 @@ object DedupOps {
       .distinct()
   }
 
-  /** Exact shingle-set Jaccard for the given pairs, via an inverted index:
-    * |A∩B| from a shingle equi-join restricted to candidate docs, |A∪B| from
-    * per-doc set sizes. Keeps pairs with jaccard >= `threshold`.
+  /** Exact shingle-set Jaccard for the given pairs, computed IN-ROW: each
+    * pair is joined to its two shingle arrays and |A∩B| is
+    * `size(array_intersect(a, b))` — both arrays are already per-doc
+    * distinct, so that is exactly the intersection count the inverted
+    * index would produce, without exploding every shingle of every
+    * candidate doc. |A∪B| comes from the two set sizes. Keeps pairs that
+    * share at least one shingle and have jaccard >= `threshold`.
     *
     * `maxDf` (default off) applies the [[capPostings]] vocabulary cap to
-    * the verification index: with the cap, similarities are exact over the
-    * SURVIVING shingles (sizes shrink coherently with intersections via
-    * [[cappedSetSizes]]), so a corpus-wide boilerplate shingle neither
-    * inflates the per-pair intersection work nor biases scores low.
+    * the verification sets: with the cap, similarities are exact over the
+    * SURVIVING shingles (each doc's set shrinks to its kept shingles, so
+    * sizes shrink coherently with intersections), so a corpus-wide
+    * boilerplate shingle neither inflates the per-pair intersection work
+    * nor biases scores low.
     */
   def jaccardVerify(pairs: DataFrame, shingled: DataFrame, id: String,
       threshold: Double, maxDf: Long = Long.MaxValue): DataFrame = {
-    val ex = capPostings(
-      shingled.select(col(id), explode(col("shingles")).as("s")), "s", maxDf)
-    val sizes = cappedSetSizes(shingled, ex, id, maxDf)
-    val inter = pairs
-      .join(ex.select(col(id).as("id_a"), col("s")), Seq("id_a"))
-      .join(ex.select(col(id).as("id_b"), col("s")), Seq("id_b", "s"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.select(col(id).as("id_a"), col("sz").as("sz_a")), Seq("id_a"))
-      .join(sizes.select(col(id).as("id_b"), col("sz").as("sz_b")), Seq("id_b"))
+    val sets = cappedShingleSets(shingled, id, maxDf)
+    val nInter = size(array_intersect(col("__sa"), col("__sb"))).cast("long")
+    pairs.select("id_a", "id_b")
+      .join(sets.select(col(id).as("id_a"), col("shingles").as("__sa")), Seq("id_a"))
+      .join(sets.select(col(id).as("id_b"), col("shingles").as("__sb")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"), nInter.as("n_inter"),
+        size(col("__sa")).cast("long").as("sz_a"),
+        size(col("__sb")).cast("long").as("sz_b"))
+      // a pair sharing nothing never met in the inverted index; it also
+      // keeps the union below positive
+      .filter(col("n_inter") > 0)
       .withColumn("__j", col("n_inter").cast("double") /
         (col("sz_a") + col("sz_b") - col("n_inter")))
       .filter(col("__j") >= threshold) // threshold on the raw value, round only for output
       .select(col("id_a"), col("id_b"), round(col("__j"), 6).as("jaccard"))
   }
+
+  /** (id, shingles) restricted to the shingles that survive the
+    * [[capPostings]] cap. With no cap, the input itself; with a cap, the
+    * capped postings regrouped per doc — docs left with no shingle drop
+    * out, as they would from the inverted index.
+    */
+  private def cappedShingleSets(shingled: DataFrame, id: String, maxDf: Long): DataFrame =
+    if (maxDf == Long.MaxValue) shingled.select(col(id), col("shingles"))
+    else capPostings(shingled.select(col(id), explode(col("shingles")).as("s")), "s", maxDf)
+      .groupBy(col(id)).agg(collect_list(col("s")).as("shingles"))
 
   /** Document-frequency cap for inverted-index postings: a posting whose
     * term appears in k documents contributes k² candidate rows to the
@@ -398,96 +420,88 @@ object DedupOps {
     * smallest doc id reachable from it — the "keep one canonical copy"
     * step that turns pairwise near-dup evidence into a drop list.
     *
-    * Min-label propagation WITH pointer jumping: labels start at the
-    * doc's own id; each round every doc takes the min of (its label, its
-    * neighbors' labels, its LABEL's label — the hash-to-min shortcut);
-    * stop when the label sum stops falling (labels only ever decrease, so
-    * the sum is a strict convergence witness read as ONE driver-side
-    * scalar per round — no data is collected). The label-of-label jump
-    * halves the remaining distance to each component's min every round,
-    * so rounds needed = O(log diameter), NOT diameter — a PATH of 10⁶
-    * docs (the shape ExactSubstr boilerplate chains actually produce:
-    * a span shared by k docs is a k−1-edge chain in rank-adjacency
-    * order) converges in ~20 rounds where plain propagation needs 10⁶.
-    * Each round is three equi-joins keyed on doc id over the
-    * |nodes-in-any-pair|-sized label frame, and `localCheckpoint`
-    * truncates the growing lineage so round k doesn't replay rounds
-    * 1..k-1. The jump preserves the fixpoint exactly: a label is always
-    * some same-component node's id, ≥ the component min, and
-    * monotonically decreasing — so converged labels are identical to
-    * plain propagation's (same hash), only reached in fewer rounds.
+    * Alternating large-star / small-star (Kiveris et al., "Connected
+    * Components in MapReduce and Beyond", SoCC 2014) over the canonical
+    * edge list (hi, lo), hi > lo. Large-star re-points every edge
+    * (hi, lo) at lo's smallest neighbor; small-star links every smaller
+    * neighbor of a node to the smallest of them. Both keep each
+    * component's node set and its minimum, and their fixpoint is a star
+    * per component whose center is the component minimum — at which
+    * point the edges ARE the labels (leaf → center). The round count is
+    * logarithmic in the component size for ANY id order; min-label
+    * propagation with pointer jumping needs about the diameter when ids
+    * do not follow the path (a 200-node path with shuffled ids took 57
+    * rounds). Each round is one aggregate + join (large-star), one
+    * window (small-star) and one distinct over the |edges|-sized frame,
+    * and the frame is checkpointed so round k never replays rounds
+    * 1..k-1; earlier rounds' blocks are released as soon as the next
+    * round is materialized, so only the final edge list stays pinned.
     *
-    * A graph whose diameter exceeds `maxIter` FAILS FAST
-    * (IllegalStateException) instead of silently returning
-    * mid-propagation labels — wrong canonical ids would poison every
-    * downstream keep-list/fold/quarantine decision, and the loop knows
-    * exactly whether its convergence witness fired (the kCore
-    * `converged`-flag argument, applied to a function whose caller
-    * contract is the TRUE closure, not a fixed-round approximation).
+    * Convergence is tested exactly, not by a checksum: every output row
+    * carries whether a step changed it (large-star: lo had a smaller
+    * neighbor; small-star: the node had more than one smaller neighbor),
+    * and the loop stops after a round that changed nothing — the edge
+    * list is then a star forest rooted at the component minima.
+    *
+    * A graph that has not converged after `maxIter` rounds FAILS FAST
+    * (IllegalStateException) instead of returning mid-propagation labels
+    * — wrong canonical ids would poison every downstream
+    * keep-list/fold/quarantine decision.
     */
   def connectedComponents(pairs: DataFrame, idA: String, idB: String,
       maxIter: Int = 20): DataFrame = {
-    // the symmetric edge list is the static big side of EVERY round's
-    // neighbor-min join, always probed on __dst: partition AND sort it on
-    // __dst once and CACHE it (the g06/g07 adjacency discipline —
-    // serialized, so the footprint stays compact/spill-friendly at
-    // scale), so each round exchanges only the per-node label frame.
-    // Same caller contract as kCore: the returned frame references the
-    // cache; harnesses sweep non-shared blocks between queries.
-    val edges = pairs.select(col(idA).as("__src"), col(idB).as("__dst"))
-      .unionByName(pairs.select(col(idB).as("__src"), col(idA).as("__dst")))
+    def rddsOf(df: DataFrame) = df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }
+    var edges = pairs
+      .select(greatest(col(idA), col(idB)).as("hi"), least(col(idA), col(idB)).as("lo"))
       .distinct()
-      .repartition(col("__dst"))
-      .sortWithinPartitions("__dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    var labels = edges.select(col("__src").as("doc_id")).distinct()
-      .withColumn("canonical_id", col("doc_id"))
       .localCheckpoint(false)
-    var prevSum = BigDecimal(-1)
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
-      val neighborMin = edges
-        .join(labels.select(col("doc_id").as("__dst"), col("canonical_id").as("__nlab")),
-          Seq("__dst"))
-        .groupBy(col("__src").as("doc_id"))
-        .agg(min(col("__nlab")).as("__nmin"))
-      // lazily cached: the pointer-jump self-join below references this
-      // frame on BOTH sides — uncached, the whole neighbor-min join would
-      // execute twice per round
-      val propagated = labels.join(neighborMin, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("canonical_id"), coalesce(col("__nmin"), col("canonical_id")))
-            .as("canonical_id"))
+      // large-star: (hi, lo) → (hi, min(lo, smallest neighbor of lo))
+      val lowest = edges.groupBy(col("hi").as("__u")).agg(min(col("lo")).as("__m"))
+      val large = edges.join(lowest, col("lo") === col("__u"), "left")
+        .select(col("hi"), least(col("lo"), coalesce(col("__m"), col("lo"))).as("lo"),
+          coalesce(col("__m") < col("lo"), lit(false)).as("__chg"))
+      // small-star: with m = hi's smallest neighbor, emit (hi, m) and
+      // (lo, m) for every other smaller neighbor lo of hi
+      val byHi = org.apache.spark.sql.expressions.Window.partitionBy("hi")
+      val next = large
+        .withColumn("__m", min(col("lo")).over(byHi))
+        .withColumn("__chg", col("__chg") || max(col("lo")).over(byHi) =!= col("__m"))
+        .select(explode(array(
+          struct(col("hi").as("hi"), col("__m").as("lo"), col("__chg").as("chg")),
+          struct(when(col("lo") =!= col("__m"), col("lo")).as("hi"), col("__m").as("lo"),
+            col("__chg").as("chg")))).as("__e"))
+        .filter(col("__e.hi").isNotNull)
+        .groupBy(col("__e.hi").as("hi"), col("__e.lo").as("lo"))
+        .agg(max(col("__e.chg")).as("__chg"))
         .localCheckpoint(false)
-      // pointer jump: follow the label one hop (label := min(label,
-      // label(label))) — canonical_id is always a node id present in
-      // `labels`, so the self-join always matches; the left+coalesce is
-      // belt-and-braces for the empty-frame edge
-      labels = propagated.alias("x")
-        .join(propagated.select(col("doc_id").as("__lab"),
-          col("canonical_id").as("__lablab")).alias("y"),
-          col("x.canonical_id") === col("y.__lab"), "left")
-        .select(col("x.doc_id").as("doc_id"),
-          least(col("x.canonical_id"),
-            coalesce(col("__lablab"), col("x.canonical_id")))
-            .as("canonical_id"))
-        .localCheckpoint(false)
-      val row = labels.agg(sum(col("canonical_id").cast("decimal(38,0)"))).collect()(0)
-      // null sum = empty graph (no near-dup pairs at all) → nothing to converge
-      val s = if (row.isNullAt(0)) BigDecimal(0) else BigDecimal(row.getDecimal(0).toString)
-      converged = row.isNullAt(0) || s == prevSum
-      prevSum = s
+      // one job over the pinned rows: did any row change this round?
+      // (it also materializes the checkpoint, so the previous round's
+      // blocks can go)
+      converged = !next.filter(col("__chg")).queryExecution.toRdd
+        .mapPartitions(rows => Iterator(rows.hasNext)).collect().contains(true)
+      rddsOf(edges).foreach(_.unpersist(blocking = false))
+      edges = next.select("hi", "lo")
       iter += 1
     }
-    if (!converged)
+    if (!converged) {
+      rddsOf(edges).foreach(_.unpersist(blocking = false))
       throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds — with " +
-          "pointer jumping that means a component of diameter greater " +
-          s"than ~2^$maxIter, which should be unreachable for any real " +
-          "pair graph. Raise maxIter; returning mid-propagation labels " +
-          "would mis-canonicalize every downstream dedup decision.")
-    labels
+        s"connectedComponents did not converge in $maxIter rounds — " +
+          "large-star/small-star needs rounds logarithmic in the component " +
+          "size, so this is an unexpectedly large component. Raise " +
+          "maxIter; returning mid-propagation labels would mis-canonicalize " +
+          "every downstream dedup decision.")
+    }
+    // converged: each non-root node has exactly one edge, to its root
+    edges.filter(col("hi") =!= col("lo"))
+      .select(col("hi").as("doc_id"), col("lo").as("canonical_id"))
+      .unionByName(edges.select(col("lo").as("doc_id"), col("lo").as("canonical_id"))
+        .distinct())
   }
 
   /** 32-bit set-based SimHash over the distinct-token set, emitted as a

@@ -436,10 +436,14 @@ object FoldOps {
     //  - long division q/tot promotes both sides to double, as Spark's
     //    Divide does. Each iteration is therefore the same pure function
     //    of the previous 6dp-pinned p as before, value for value.
-    val nijRows = nij.collect()
-    require(nijRows.length <= 2000000,
-      s"bradleyTerry: ${nijRows.length} directed item pairs — items must " +
+    //  - the state is bounded BEFORE it is collected: the count runs over
+    //    the checkpointed pair frame (and materializes it for the collect),
+    //    so an unbounded item key fails here, not with a driver OOM.
+    val nPairs = nij.count()
+    require(nPairs <= 2000000,
+      s"bradleyTerry: $nPairs directed item pairs — items must " +
         "be a bounded categorical key (models/policies/sources)")
+    val nijRows = nij.collect()
     val baseRows = base.collect()
     def r(x: Double, s: Int): Double =
       java.math.BigDecimal.valueOf(x)
@@ -459,8 +463,11 @@ object FoldOps {
         item -> r(winsOf(item).toDouble * 1e12 / d * 1e6, 0).toLong
       }.toMap
       val tot = q.valuesIterator.sum
+      // no item has a positive q (every win sits on a key the wins join
+      // cannot match, e.g. a null winner): each strength takes the 1e-6
+      // floor a never-winning item gets, instead of 0/0
       p = q.map { case (item, qi) =>
-        item -> math.max(r(qi.toDouble / tot.toDouble, 6), 1e-6)
+        item -> (if (tot == 0L) 1e-6 else math.max(r(qi.toDouble / tot.toDouble, 6), 1e-6))
       }
     }
     val itemField = base.schema("item")

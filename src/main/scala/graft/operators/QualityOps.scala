@@ -575,7 +575,7 @@ object QualityOps {
 
   /** Cluster-level closure of [[dupSpanPairs]]: the adjacent-pair graph
     * fed through [[graft.dedup.DedupOps.connectedComponents]] (bounded-
-    * round min-label propagation), so a duplication cluster of ≥3 docs
+    * round large-star/small-star), so a duplication cluster of ≥3 docs
     * reports ALL members as mutually attributed — the transitivity the
     * rank-adjacent spanning set alone cannot promise ((a, c) may never be
     * suffix-rank-adjacent even when a, b, c all carry the same span).

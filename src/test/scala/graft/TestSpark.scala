@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (Test / fork := true → one JVM). */
@@ -17,6 +17,35 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Runs `f` and returns once `l` has seen every job start and task end
+    * `f` caused, even when `f` throws (only those two events are passed
+    * on). Listener events arrive asynchronously but in order, so a marker
+    * job started afterwards flushes them; `l` never sees the marker job.
+    */
+  def observing[T](l: SparkListener)(f: => T): T = {
+    val sc = spark.sparkContext
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val gate = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty(MarkerKey) != null)
+          marker.countDown()
+        else l.onJobStart(j)
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (marker.getCount > 0) l.onTaskEnd(te)
+    }
+    sc.addSparkListener(gate)
+    try f
+    finally {
+      sc.setLocalProperty(MarkerKey, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(MarkerKey, null)
+      marker.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      sc.removeSparkListener(gate)
+    }
+  }
+
+  private val MarkerKey = "graft.test.marker"
 
   /** Total shuffle records written by every task while `f` runs — the
     * LOAD-INSENSITIVE work proxy the scale probes (DocScaleSpec,

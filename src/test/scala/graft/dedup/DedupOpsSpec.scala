@@ -285,6 +285,92 @@ class DedupOpsSpec extends AnyFunSuite {
     assert(got.values.toSet === Set(1L))
   }
 
+  test("connectedComponents closes a 200-node path with shuffled ids inside the default maxIter") {
+    // the same path with ids NOT in path order: pointer jumping needs about
+    // the diameter here (57 rounds for this permutation), large-star /
+    // small-star stays logarithmic in the component size
+    val ids = new scala.util.Random(7).shuffle((1L to 200L).toVector)
+    val path = ids.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("id_a", "id_b")
+    val got = DedupOps.connectedComponents(path, "id_a", "id_b")
+      .as[(Long, Long)].collect().toMap
+    assert(got.size === 200)
+    assert(got.values.toSet === Set(1L))
+  }
+
+  test("connectedComponents matches a driver-side union-find on seeded random graphs") {
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      val nodes = rnd.shuffle((1 to 80).map(i => i.toLong * 7919L % 100003L).toVector)
+      val edges = Seq.fill(70)((nodes(rnd.nextInt(80)), nodes(rnd.nextInt(80))))
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      // the root of each union-find set is its minimum (smaller root wins)
+      val want = parent.keys.map(x => x -> find(x)).toMap
+      val got = DedupOps.connectedComponents(edges.toDF("id_a", "id_b"), "id_a", "id_b")
+        .as[(Long, Long)].collect()
+      assert(got.length === want.size, s"seed $seed: one row per node")
+      assert(got.toMap === want, s"seed $seed")
+    }
+  }
+
+  test("connectedComponents pins one frame, however many rounds it runs") {
+    val sc = spark.sparkContext
+    def pinnedBy(pairs: org.apache.spark.sql.DataFrame): Int = {
+      val before = if (sc.getPersistentRDDs.isEmpty) -1 else sc.getPersistentRDDs.keys.max
+      val labels = DedupOps.connectedComponents(pairs, "id_a", "id_b")
+      assert(labels.count() > 0)
+      sc.getPersistentRDDs.keys.count(_ > before)
+    }
+    val onePair = Seq((1L, 2L)).toDF("id_a", "id_b")
+    val ids = new scala.util.Random(3).shuffle((1L to 64L).toVector)
+    val longPath = ids.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("id_a", "id_b")
+    val short = pinnedBy(onePair)
+    assert(short <= 1)
+    assert(pinnedBy(longPath) === short)
+  }
+
+  test("docs with no shingles get no LSH band key and form no candidate pair") {
+    // every shingle-less doc has null minhash lanes; a key over them must
+    // be null, not md5(""), or all such docs share one bucket per band
+    val tiny = (1L to 50L).map(i => (i, "tiny")).toDF("doc_id", "text")
+    val keys = DedupOps.lshBandKeys(
+      DedupOps.minhashSignatures(tiny, "doc_id", "text", 3, 12), "doc_id", 6, 2)
+    assert(keys.filter(col("band_key").isNotNull).count() === 0L)
+    assert(DedupOps.lshCandidatePairs(keys, "doc_id").count() === 0L)
+    assert(DedupOps.nearDupPairs(tiny, "doc_id", "text", 3, 12, 6, 0.5).count() === 0L)
+  }
+
+  test("jaccardVerify equals the inverted-index jaccard and skips pairs sharing nothing") {
+    val rnd = new scala.util.Random(11)
+    val vocab = (1 to 12).map(i => s"w$i")
+    val corpus = (1L to 40L).map(i =>
+      (i, Seq.fill(4 + rnd.nextInt(8))(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
+      .toDF("doc_id", "text")
+    val sh = DedupOps.withShingles(corpus, "doc_id", "text", 2)
+    val allPairs = sh.select(col("doc_id").as("id_a"))
+      .crossJoin(sh.select(col("doc_id").as("id_b")))
+      .filter(col("id_a") < col("id_b"))
+    for (maxDf <- Seq(Long.MaxValue, 6L)) {
+      val got = DedupOps.jaccardVerify(allPairs, sh, "doc_id", 0.0, maxDf)
+        .as[(Long, Long, Double)].collect().toSet
+      val want = DedupOps.jaccardAllPairs(sh, "doc_id", 0.0, maxDf)
+        .as[(Long, Long, Double)].collect().toSet
+      assert(got === want, s"maxDf $maxDf")
+    }
+    // two shingle-less docs: no shared shingle, no pair, no 0/0
+    val empty = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text")
+    val pair = Seq((1L, 2L)).toDF("id_a", "id_b")
+    assert(DedupOps.jaccardVerify(pair,
+      DedupOps.withShingles(empty, "doc_id", "text", 3), "doc_id", 0.0).count() === 0L)
+  }
+
   test("containmentPairs flags short-in-long quoting that Jaccard misses") {
     val quote = "alpha beta gamma delta epsilon"
     val long = ("x1 x2 x3 x4 x5 x6 x7 x8 x9 x10 x11 x12 x13 x14 x15 " +

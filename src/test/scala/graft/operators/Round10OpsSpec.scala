@@ -395,6 +395,33 @@ class Round10OpsSpec extends AnyFunSuite {
     assert(r("A").getAs[Double]("strength") === 1.0)
   }
 
+  test("bradleyTerry: all-zero q (only null winners) floors every strength") {
+    // the null winner's wins cannot join back to its item, so every q is 0
+    // and the normalizing total is 0 — strengths floor instead of 0/0
+    val m = Seq((Option.empty[String], "B"), (Option.empty[String], "C"))
+      .toDF("winner", "loser")
+    val r = FoldOps.bradleyTerry(m, "winner", "loser", iters = 4)
+      .collect().map(x => x.getAs[String]("item") -> x.getAs[Double]("strength")).toMap
+    assert(r === Map("B" -> 1e-6, "C" -> 1e-6))
+  }
+
+  test("bradleyTerry: an unbounded item key fails before any pair reaches the driver") {
+    // 1,000,001 matches of distinct consecutive items → 2,000,002 directed
+    // pairs, past the 2,000,000 bound: the guard must fire on a count, so
+    // no task ships the pair rows back
+    val resultBytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null) resultBytes.addAndGet(te.taskMetrics.resultSize)
+    }
+    val m = spark.range(0L, 1000001L).select(col("id").as("winner"), (col("id") + 1).as("loser"))
+    val ex = intercept[IllegalArgumentException] {
+      TestSpark.observing(l)(FoldOps.bradleyTerry(m, "winner", "loser", iters = 1))
+    }
+    assert(ex.getMessage.contains("2000002 directed item pairs"))
+    assert(resultBytes.get < (4L << 20), s"${resultBytes.get} result bytes")
+  }
+
   // --- rankEval -----------------------------------------------------------
 
   private def rankedDf(rows: Seq[(Long, Long, Int)]) =
