@@ -92,8 +92,7 @@ object SparkEntry {
     */
   private[graft] def sharedToks(s: SparkSession, d: String): DataFrame =
     cached(s, d, "toks") {
-      pinCk(s)(Tables.spread(docs(s, d).select(col("doc_id"), col("text")),
-          tinyBytes = 0L)
+      pinCk(s)(Tables.spread(docs(s, d).select(col("doc_id"), col("text")))
         .select(col("doc_id"), TextFns.tokens(col("text")).as("__t"))
         .select(col("doc_id"), col("__t"), size(col("__t")).as("n_toks")))
     }
@@ -242,7 +241,7 @@ object SparkEntry {
       val src = Tables.spread(docs(s, d).select(col("doc_id"),
           col("text").cast("binary").as("payload"),
           (octet_length(col("text")) % 16 + 1).as("w"),
-          (col("doc_id") % 8 + 1).as("h")), tinyBytes = 0L)
+          (col("doc_id") % 8 + 1).as("h")))
       pinCk(s)(BinaryOps.withPngPayload(s, src, "doc_id", "payload", "w", "h"))
     }
   // -------------------------------------------------------------------------

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Loaders for the harness test tables (TESTDATA.md).
   *
@@ -34,18 +33,13 @@ object Tables {
     * ([[plannedPartitions]]): a frame narrower than the default
     * parallelism is widened, one already at least that wide passes
     * through untouched, and so does a frame whose width is only decided
-    * at run time (it ends in a shuffle). Frames below `tinyBytes` by
-    * optimizer statistics (dimension tables — a shuffle would cost more
-    * than the scan) pass through too. Size statistics are NOT used to
-    * spot wide frames: a checkpointed 0.3 MB frame under an explode and
-    * a join estimates at tens of GB. No job is triggered.
+    * at run time (it ends in a shuffle). Size statistics are NOT used: a
+    * checkpointed 0.3 MB frame under an explode and a join estimates at
+    * tens of GB. No job is triggered.
     */
-  def spread(df: DataFrame, tinyBytes: Long = 1L << 20): DataFrame = {
+  def spread(df: DataFrame): DataFrame = {
     val width = df.sparkSession.sparkContext.defaultParallelism
-    val narrow = plannedPartitions(df).exists(_ < width)
-    if (narrow && df.queryExecution.optimizedPlan.stats.sizeInBytes >= BigInt(tinyBytes))
-      df.repartition(width)
-    else df
+    if (plannedPartitions(df).exists(_ < width)) df.repartition(width) else df
   }
 
   /** The number of partitions `df` will have, when the physical plan fixes
@@ -89,27 +83,16 @@ object Tables {
 
   /** `events` with `ts` as a proper TimestampType (µs). Harness data has
     * shipped `ts` both as TIMESTAMP_NS (early rounds) and TIMESTAMP(µs)
-    * (current), so the loader adapts to the file instead of assuming:
-    * with `nanosAsLong` set, a ns column surfaces as LongType and is
-    * truncated to µs by integer division (a Double intermediate would
-    * corrupt epoch-nanos > 2^53 — and DuckDB truncates identically when
-    * casting TIMESTAMP_NS, so oracles line up); a native µs column passes
-    * through untouched.
+    * (current), so the loader adapts to the file instead of assuming
+    * (`EventStreams.withEventTime`): with `nanosAsLong` set, a ns column
+    * surfaces as LongType and is truncated to µs by integer division (a
+    * Double intermediate would corrupt epoch-nanos > 2^53 — and DuckDB
+    * truncates identically when casting TIMESTAMP_NS, so oracles line up);
+    * a native µs column passes through untouched.
     */
   def events(spark: SparkSession, dir: String): DataFrame =
     cache.getOrElseUpdate((System.identityHashCode(spark), s"$dir/events.parquet#ts"), {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/events.parquet")
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          // value-preserving under the UTC session tz; keeps every
-          // downstream operator on the TimestampType semantics the suite
-          // was built against
-          raw.withColumn("ts",
-            col("ts").cast(org.apache.spark.sql.types.TimestampType))
-        case _ => raw
-      }
+      graft.streaming.EventStreams.withEventTime(spark.read.parquet(s"$dir/events.parquet"))
     })
 }

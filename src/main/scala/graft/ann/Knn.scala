@@ -151,7 +151,7 @@ object Knn {
     // the corpus is consumed iters+2 times (init, per-round means, final
     // assignment): project+widen+checkpoint once so every round reads the
     // decoded double vectors instead of replaying the scan+cast
-    val base = graft.Tables.spread(corpus.select(col(id), e.as("__e")), tinyBytes = 0L)
+    val base = graft.Tables.spread(corpus.select(col(id), e.as("__e")))
       .localCheckpoint(false)
     var centroids: Seq[Seq[Double]] = base
       .orderBy(col(id))

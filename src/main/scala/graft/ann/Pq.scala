@@ -155,7 +155,7 @@ object Pq {
       m: Int = 8, subDim: Int = 8, k: Int = 16, iters: Int = 2): DataFrame = {
     val subs = graft.Tables.spread(
         corpus.select(col(id).cast("long").as("__vid"),
-          VectorFns.toDoubleArr(col(emb)).as("__e")), tinyBytes = 0L)
+          VectorFns.toDoubleArr(col(emb)).as("__e")))
       .select(col("__vid"),
         explode(sequence(lit(0), lit(m - 1))).as("subspace"), col("__e"))
       .select(col("__vid"), col("subspace"),

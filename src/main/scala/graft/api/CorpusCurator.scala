@@ -44,7 +44,7 @@ object CorpusCurator {
       // quadratic self-join, and (when `verifyMaxDf` is set) shingles with
       // document frequency above it leave the verification index — both
       // bound the damage a corpus-wide boilerplate shingle can do
-      lshMaxBucket: Int = 100000,
+      lshMaxBucket: Int = DedupOps.DefaultMaxBucket,
       verifyMaxDf: Long = Long.MaxValue,
       decontamShingleN: Int = 5,
       sampleSixteenths: Map[String, Int] = Map.empty,

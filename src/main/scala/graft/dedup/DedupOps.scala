@@ -13,8 +13,9 @@ import graft.functions.TextFns
   * aggregate on a 16-byte key; LSH turns near-dup search into an equi-join
   * on band keys (shuffle on band_key, AQE handles hot buckets, and
   * degenerate buckets are capped before the self-join — see
-  * `lshCandidatePairs`); Jaccard verification runs only on LSH candidates
-  * via a shingle inverted index, never on the full cross product.
+  * `lshCandidatePairs`); Jaccard verification runs only on LSH candidates,
+  * in-row on each pair's two shingle arrays, never on the full cross
+  * product.
   */
 object DedupOps {
 
@@ -28,14 +29,14 @@ object DedupOps {
 
   /** (id, shingles) with distinct `n`-token shingles per document.
     *
-    * The input is spread across the cluster first (`Tables.spread`,
-    * tiny-frame guard off): shingling + the downstream MinHash tower are
-    * hash-heavy per row, so a narrow scan (one row group ⇒ one task) would
-    * serialize the whole kernel on one core. No-op when the corpus scan is
+    * The input is spread across the cluster first (`Tables.spread`):
+    * shingling + the downstream MinHash tower are hash-heavy per row, so a
+    * narrow scan (one row group ⇒ one task) would serialize the whole
+    * kernel on one core. No-op when the corpus scan is
     * already wide.
     */
   def withShingles(docs: DataFrame, id: String, text: String, n: Int): DataFrame =
-    graft.Tables.spread(docs.select(col(id), col(text)), tinyBytes = 0L)
+    graft.Tables.spread(docs.select(col(id), col(text)))
       .select(col(id), TextFns.shingles(TextFns.tokens(col(text)), n).as("shingles"))
 
   /** MinHash signature: `k` lexicographic-min seeded md5s over the shingle
@@ -72,34 +73,30 @@ object DedupOps {
       .select(col(id), col("bk.band").as("band"), col("bk.band_key").as("band_key"))
   }
 
+  /** Default LSH bucket cap for every near-dup entry point (see
+    * [[lshCandidatePairs]]): 2000 members → ≤ ~2×10⁶ pairs per bucket.
+    * Sized for corpus scale: a bucket that big is boilerplate collapse,
+    * not genuine near-duplication, and admitting it would let ONE bucket
+    * dominate the join (a 100k cap allows ~5×10⁹ pairs from a single
+    * degenerate bucket). Raise it only for small corpora where exhaustive
+    * recall inside mega-buckets matters more than the quadratic cost.
+    */
+  val DefaultMaxBucket: Int = 2000
+
   /** Candidate pairs: distinct (a, b) with a < b sharing at least one LSH
     * bucket. The self-join is an equi-join on (band, band_key).
     *
     * Degenerate-bucket guard: a band bucket with B members contributes
-    * B(B−1)/2 candidate pairs — an adversarial bucket (e.g. every
-    * empty-shingle doc hashing to the same null-ish key, or boilerplate
+    * B(B−1)/2 candidate pairs — an adversarial bucket (e.g. boilerplate
     * that collapses a whole crawl segment) turns the equi-join quadratic.
-    * Buckets larger than `maxBucket` are dropped BEFORE the self-join (a
-    * count window keyed on the bucket, no extra shuffle beyond the join's
-    * own key), and null band keys (docs with no shingles) are filtered
-    * outright. Members of an over-cap bucket can still pair through their
-    * other bands — recall degrades gracefully instead of the job dying.
-    *
-    * The default (2000 → ≤ ~2×10⁶ pairs per bucket) is sized for corpus
-    * scale: a bucket that big is boilerplate collapse, not genuine
-    * near-duplication, and admitting it would let ONE bucket dominate the
-    * join (the previous 100k default allowed ~5×10⁹ pairs from a single
-    * degenerate bucket). Raise it only for small corpora where exhaustive
-    * recall inside mega-buckets matters more than the quadratic cost.
+    * [[capBuckets]] drops buckets larger than `maxBucket` and null band
+    * keys (docs with no shingles) BEFORE the self-join. Members of an
+    * over-cap bucket can still pair through their other bands — recall
+    * degrades gracefully instead of the job dying.
     */
   def lshCandidatePairs(bandKeys: DataFrame, id: String,
-      maxBucket: Int = 2000): DataFrame = {
-    val wB = org.apache.spark.sql.expressions.Window.partitionBy("band", "band_key")
-    val capped = bandKeys
-      .filter(col("band_key").isNotNull)
-      .withColumn("__bsz", count(lit(1)).over(wB))
-      .filter(col("__bsz") <= maxBucket)
-      .drop("__bsz")
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
+    val capped = capBuckets(bandKeys, maxBucket)
     val l = capped.select(col("band"), col("band_key"), col(id).as("id_a"))
     val r = capped.select(col("band"), col("band_key"), col(id).as("id_b"))
     l.join(r, Seq("band", "band_key"))
@@ -108,13 +105,22 @@ object DedupOps {
       .distinct()
   }
 
-  /** Exact shingle-set Jaccard for the given pairs, computed IN-ROW: each
-    * pair is joined to its two shingle arrays and |A∩B| is
-    * `size(array_intersect(a, b))` — both arrays are already per-doc
-    * distinct, so that is exactly the intersection count the inverted
-    * index would produce, without exploding every shingle of every
-    * candidate doc. |A∪B| comes from the two set sizes. Keeps pairs that
-    * share at least one shingle and have jaccard >= `threshold`.
+  /** Band-key rows without null keys and without the members of any
+    * bucket over `maxBucket`: a count window keyed on the bucket, so the
+    * only exchange is the one the bucket join shuffles on anyway.
+    */
+  private def capBuckets(bandKeys: DataFrame, maxBucket: Int): DataFrame = {
+    val wB = org.apache.spark.sql.expressions.Window.partitionBy("band", "band_key")
+    bandKeys
+      .filter(col("band_key").isNotNull)
+      .withColumn("__bsz", count(lit(1)).over(wB))
+      .filter(col("__bsz") <= maxBucket)
+      .drop("__bsz")
+  }
+
+  /** Exact shingle-set Jaccard for the given pairs, computed in-row by
+    * [[pairOverlaps]]. Keeps pairs that share at least one shingle and
+    * have jaccard >= `threshold`.
     *
     * `maxDf` (default off) applies the [[capPostings]] vocabulary cap to
     * the verification sets: with the cap, similarities are exact over the
@@ -126,21 +132,44 @@ object DedupOps {
   def jaccardVerify(pairs: DataFrame, shingled: DataFrame, id: String,
       threshold: Double, maxDf: Long = Long.MaxValue): DataFrame = {
     val sets = cappedShingleSets(shingled, id, maxDf)
-    val nInter = size(array_intersect(col("__sa"), col("__sb"))).cast("long")
-    pairs.select("id_a", "id_b")
-      .join(sets.select(col(id).as("id_a"), col("shingles").as("__sa")), Seq("id_a"))
-      .join(sets.select(col(id).as("id_b"), col("shingles").as("__sb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), nInter.as("n_inter"),
+    jaccardAtLeast(pairOverlaps(pairs.select("id_a", "id_b"), "id_a", "id_b", sets, sets, id),
+      "id_a", "id_b", threshold)
+  }
+
+  /** `pairs` plus `n_inter` = |A∩B|, `sz_a` = |A| and `sz_b` = |B|, where
+    * A is `setsA`'s and B is `setsB`'s (id, shingles) row for the pair's
+    * `idA` and `idB`. In-row: each pair is joined to its two shingle
+    * arrays and |A∩B| is `size(array_intersect(a, b))` — both arrays are
+    * per-doc distinct, so that is exactly the count an inverted index
+    * would produce, without exploding every shingle of every pair's docs.
+    */
+  private def pairOverlaps(pairs: DataFrame, idA: String, idB: String,
+      setsA: DataFrame, setsB: DataFrame, id: String): DataFrame =
+    pairs
+      .join(setsA.select(col(id).as(idA), col("shingles").as("__sa")), Seq(idA))
+      .join(setsB.select(col(id).as(idB), col("shingles").as("__sb")), Seq(idB))
+      .select(pairs.columns.map(col) ++ Seq(
+        size(array_intersect(col("__sa"), col("__sb"))).cast("long").as("n_inter"),
         size(col("__sa")).cast("long").as("sz_a"),
-        size(col("__sb")).cast("long").as("sz_b"))
+        size(col("__sb")).cast("long").as("sz_b")): _*)
+
+  /** |A∩B| / |A∪B| over the `n_inter`, `sz_a`, `sz_b` columns. */
+  private def jaccardOf: Column =
+    col("n_inter").cast("double") / (col("sz_a") + col("sz_b") - col("n_inter"))
+
+  /** (idA, idB, jaccard) for the overlap rows that share at least one
+    * shingle and reach `threshold`; the raw value is compared, the output
+    * rounded to 6 places.
+    */
+  private def jaccardAtLeast(overlaps: DataFrame, idA: String, idB: String,
+      threshold: Double): DataFrame =
+    overlaps
       // a pair sharing nothing never met in the inverted index; it also
       // keeps the union below positive
       .filter(col("n_inter") > 0)
-      .withColumn("__j", col("n_inter").cast("double") /
-        (col("sz_a") + col("sz_b") - col("n_inter")))
-      .filter(col("__j") >= threshold) // threshold on the raw value, round only for output
-      .select(col("id_a"), col("id_b"), round(col("__j"), 6).as("jaccard"))
-  }
+      .withColumn("__j", jaccardOf)
+      .filter(col("__j") >= threshold)
+      .select(col(idA), col(idB), round(col("__j"), 6).as("jaccard"))
 
   /** (id, shingles) restricted to the shingles that survive the
     * [[capPostings]] cap. With no cap, the input itself; with a cap, the
@@ -160,12 +189,12 @@ object DedupOps {
     * carry near-zero discriminative signal (IDF ≈ 0). With the cap on,
     * pairs that share ONLY capped terms are missed, and both intersections
     * AND set sizes are computed over the SURVIVING vocabulary (see
-    * [[cappedSetSizes]]) — so jaccard/containment are exact similarities
-    * over the kept terms, the same coherent-shrinking semantics
-    * `tfidfCosinePairs` applies to its weights and norms, rather than a
-    * biased-low hybrid of capped intersections against uncapped sizes.
-    * `Long.MaxValue` (the default) bypasses the df aggregate entirely, so
-    * default plans and hashes are unchanged.
+    * [[cappedShingleSets]]) — so jaccard/containment are exact
+    * similarities over the kept terms, the same coherent-shrinking
+    * semantics `tfidfCosinePairs` applies to its weights and norms, rather
+    * than a biased-low hybrid of capped intersections against uncapped
+    * sizes. `Long.MaxValue` (the default) bypasses the df aggregate
+    * entirely, so default plans and hashes are unchanged.
     *
     * Plan shape: one extra hash aggregate over |distinct terms| and one
     * equi-join back on the term — both linear in the index, the price that
@@ -181,20 +210,35 @@ object DedupOps {
       postings.join(dfreq, Seq(term), "left_semi")
     }
 
-  /** Per-doc set size consistent with [[capPostings]]: with no cap, the
-    * cheap `size(shingles)` projection; with a cap, the count of SURVIVING
-    * postings per doc — one more hash aggregate over the already-capped
-    * index, linear and map-side-combining. Keeping sizes and intersections
-    * on the same vocabulary makes capped jaccard/containment exact over
-    * the kept terms (a doc pair identical except for boilerplate scores
-    * 1.0, not below-threshold).
+  /** Inverted-index pair counts over (id, term) `postings`: one row
+    * (id_a, id_b, n_inter) per id_a < id_b sharing at least one term
+    * that survives the `maxDf` cap, n_inter the number of shared
+    * postings. Docs only meet through a shared term, never doc×doc.
     */
-  private def cappedSetSizes(ck: DataFrame, capped: DataFrame, id: String,
-      maxDf: Long): DataFrame =
-    if (maxDf == Long.MaxValue)
-      ck.select(col(id), size(col("shingles")).cast("long").as("sz"))
-    else
-      capped.groupBy(col(id)).agg(count(lit(1)).as("sz"))
+  private def postingPairCounts(postings: DataFrame, id: String, term: String,
+      maxDf: Long): DataFrame = {
+    val p = capPostings(postings.select(col(id), col(term)), term, maxDf)
+    p.select(col(id).as("id_a"), col(term))
+      .join(p.select(col(id).as("id_b"), col(term)), Seq(term))
+      .filter(col("id_a") < col("id_b"))
+      .groupBy("id_a", "id_b")
+      .agg(count(lit(1)).as("n_inter"))
+  }
+
+  /** [[pairOverlaps]]' columns for EVERY pair sharing a shingle, found
+    * through the inverted index; set sizes count the same capped
+    * vocabulary the intersections do.
+    */
+  private def indexedOverlaps(shingled: DataFrame, id: String, maxDf: Long): DataFrame = {
+    // three consumers of the shingle arrays (sizes + both join sides) —
+    // truncate lineage so shingling runs once (see nearDupPairs)
+    val ck = shingled.localCheckpoint(false)
+    val sizes = cappedShingleSets(ck, id, maxDf)
+      .select(col(id), size(col("shingles")).cast("long").as("sz"))
+    postingPairCounts(ck.select(col(id), explode(col("shingles")).as("s")), id, "s", maxDf)
+      .join(sizes.select(col(id).as("id_a"), col("sz").as("sz_a")), Seq("id_a"))
+      .join(sizes.select(col(id).as("id_b"), col("sz").as("sz_b")), Seq("id_b"))
+  }
 
   /** n-gram Jaccard near-dup WITHOUT LSH: all pairs sharing >=1 shingle via
     * the inverted index, thresholded. Exact but heavier than `nearDupPairs`
@@ -203,63 +247,32 @@ object DedupOps {
     * the posting document frequency (see [[capPostings]]).
     */
   def jaccardAllPairs(shingled: DataFrame, id: String, threshold: Double,
-      maxDf: Long = Long.MaxValue): DataFrame = {
-    // three consumers of the shingle arrays (sizes + both join sides) —
-    // truncate lineage so shingling runs once (see nearDupPairs)
-    val ck = shingled.localCheckpoint(false)
-    val ex = capPostings(
-      ck.select(col(id), explode(col("shingles")).as("s")), "s", maxDf)
-    val sizes = cappedSetSizes(ck, ex, id, maxDf)
-    val inter = ex.select(col(id).as("id_a"), col("s"))
-      .join(ex.select(col(id).as("id_b"), col("s")), Seq("s"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.select(col(id).as("id_a"), col("sz").as("sz_a")), Seq("id_a"))
-      .join(sizes.select(col(id).as("id_b"), col("sz").as("sz_b")), Seq("id_b"))
-      .withColumn("__j", col("n_inter").cast("double") /
-        (col("sz_a") + col("sz_b") - col("n_inter")))
-      .filter(col("__j") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("__j"), 6).as("jaccard"))
-  }
+      maxDf: Long = Long.MaxValue): DataFrame =
+    jaccardAtLeast(indexedOverlaps(shingled, id, maxDf), "id_a", "id_b", threshold)
 
   /** Asymmetric containment similarity: |A ∩ B| / |A| over distinct
     * shingle sets — the quote-inclusion detector. A short document fully
     * quoted inside a long one scores containment ≈ 1 while its Jaccard
     * stays low (the union is dominated by the long side), so Jaccard-gated
-    * dedup misses it. Same inverted-index join shape as
-    * [[jaccardAllPairs]] — docs only meet through a shared shingle, never
-    * doc×doc — emitting BOTH directions of each pair (containment is not
+    * dedup misses it. Same inverted-index join as [[jaccardAllPairs]],
+    * emitting BOTH directions of each pair (containment is not
     * symmetric). `threshold` gates on the containment of the smaller side.
     */
   def containmentPairs(shingled: DataFrame, id: String, threshold: Double,
-      maxDf: Long = Long.MaxValue): DataFrame = {
-    val ck = shingled.localCheckpoint(false)
-    val ex = capPostings(
-      ck.select(col(id), explode(col("shingles")).as("s")), "s", maxDf)
-    val sizes = cappedSetSizes(ck, ex, id, maxDf)
-    val inter = ex.select(col(id).as("id_a"), col("s"))
-      .join(ex.select(col(id).as("id_b"), col("s")), Seq("s"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.select(col(id).as("id_a"), col("sz").as("sz_a")), Seq("id_a"))
-      .join(sizes.select(col(id).as("id_b"), col("sz").as("sz_b")), Seq("id_b"))
+      maxDf: Long = Long.MaxValue): DataFrame =
+    indexedOverlaps(shingled, id, maxDf)
       .withColumn("__c", col("n_inter").cast("double") / least(col("sz_a"), col("sz_b")))
       .filter(col("__c") >= threshold)
       .select(col("id_a"), col("id_b"),
         round(col("n_inter").cast("double") / col("sz_a"), 6).as("containment_a"),
         round(col("n_inter").cast("double") / col("sz_b"), 6).as("containment_b"))
-  }
 
   /** Full MinHash-LSH near-dup pipeline: shingle → sign → band → bucket-join
     * → exact-Jaccard verify.
     */
   def nearDupPairs(docs: DataFrame, id: String, text: String,
       shingleN: Int, k: Int, bands: Int, threshold: Double,
-      maxBucket: Int = 2000, maxDf: Long = Long.MaxValue): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket, maxDf: Long = Long.MaxValue): DataFrame = {
     // The shingle set feeds three consumers (signatures, the verify join's
     // two sides); localCheckpoint truncates the lineage so the md5/shingle
     // work runs once instead of once per branch. Lazy: nothing computes
@@ -270,34 +283,16 @@ object DedupOps {
     jaccardVerify(cands, shingled, id, threshold, maxDf)
   }
 
-  /** MinHash estimator audit over the LSH candidate set: for every
-    * candidate pair, the signature-agreement estimate ĵ = |matching
-    * lanes|/k NEXT TO the exact Jaccard and their signed error — the
-    * tuning report that tells you whether k is large enough BEFORE you
-    * trust ĵ as a verify shortcut at scale (E[ĵ] = J, sd = √(J(1−J)/k);
-    * at k = 12 that's ±0.14 at J = 0.5 — this report makes the spread
-    * visible on real data instead of assumed).
-    *
-    * Same bounded machinery as [[nearDupPairs]]: one checkpointed
-    * shingle frame, band equi-join candidates with the bucket cap, the
-    * inverted-index intersect for truth — never all-pairs, and the k
-    * lane equality checks are one codegen'd projection on the joined
-    * signature rows.
-    */
-  def minhashEstimateAudit(docs: DataFrame, id: String, text: String,
-      shingleN: Int, k: Int, bands: Int,
-      maxBucket: Int = 2000): DataFrame = {
-    val shingled = withShingles(docs, id, text, shingleN)
-      .localCheckpoint(false)
-    val cands = lshCandidatePairs(
-      lshBandKeys(signaturesFromShingles(shingled, id, k), id, bands,
-        k / bands), id, maxBucket)
-    minhashEstimateFrom(shingled, cands, id, k)
-  }
-
-  /** [[minhashEstimateAudit]] over prebuilt (pinned) shingle and candidate
-    * frames — the shared-front-end entry: the signature lanes are a
-    * map-only projection off `shingled`, so no stage is repaid.
+  /** MinHash estimator audit over prebuilt (pinned) shingle and LSH
+    * candidate frames: for every candidate pair, the signature-agreement
+    * estimate ĵ = |matching lanes|/k NEXT TO the exact Jaccard and their
+    * signed error — the tuning report that tells you whether k is large
+    * enough BEFORE you trust ĵ as a verify shortcut at scale (E[ĵ] = J,
+    * sd = √(J(1−J)/k); at k = 12 that's ±0.14 at J = 0.5). The signature
+    * lanes are a map-only projection off `shingled`, the k lane equality
+    * checks one codegen'd projection on the joined signature rows, and the
+    * exact Jaccard is in-row ([[pairOverlaps]]); pairs sharing no shingle
+    * report 0.
     */
   def minhashEstimateFrom(shingled: DataFrame, cands: DataFrame,
       id: String, k: Int): DataFrame = {
@@ -310,25 +305,14 @@ object DedupOps {
     val agree = lanes.map(c =>
         when(col(s"__a_$c") === col(s"__b_$c"), 1L).otherwise(0L))
       .reduce(_ + _)
-    val ex = shingled.select(col(id), explode(col("shingles")).as("__s"))
-    val sz = shingled.select(col(id), size(col("shingles")).cast("long").as("__sz"))
-    val inter = cands
-      .join(ex.select(col(id).as("id_a"), col("__s")), Seq("id_a"))
-      .join(ex.select(col(id).as("id_b"), col("__s")), Seq("id_b", "__s"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("__ni"))
-    val est = col("lanes_agree").cast("double") / k
-    val jac = coalesce(col("__ni"), lit(0L)).cast("double") /
-      (col("__sa") + col("__sb") - coalesce(col("__ni"), lit(0L)))
-        .cast("double")
-    cands
+    val scored = cands
       .join(a, Seq("id_a")).join(b, Seq("id_b"))
       .select(col("id_a"), col("id_b"), agree.as("lanes_agree"))
-      .join(inter, Seq("id_a", "id_b"), "left")
-      .join(sz.select(col(id).as("id_a"), col("__sz").as("__sa")), Seq("id_a"))
-      .join(sz.select(col(id).as("id_b"), col("__sz").as("__sb")), Seq("id_b"))
+    val est = col("lanes_agree").cast("double") / k
+    pairOverlaps(scored, "id_a", "id_b", shingled, shingled, id)
       .select(col("id_a"), col("id_b"), col("lanes_agree"),
-        round(est, 6).as("est"), round(jac, 6).as("jaccard"),
-        round(est - jac, 6).as("err"))
+        round(est, 6).as("est"), round(jaccardOf, 6).as("jaccard"),
+        round(est - jaccardOf, 6).as("err"))
   }
 
   /** Incremental near-dup: a NEW ingest batch tested against an EXISTING
@@ -337,37 +321,24 @@ object DedupOps {
     * corpus: each batch pays LSH cost proportional to the batch, while the
     * index side is the historical band-key + shingle frames (persistable
     * as bucketed tables, so the join co-locates without a fresh shuffle of
-    * the corpus). The bucket cap guards the unbounded index side.
+    * the corpus). The bucket cap guards the unbounded index side; a null
+    * new-side key never meets it in the equi-join.
     */
   def nearDupAgainstIndex(newDocs: DataFrame, indexDocs: DataFrame, id: String,
       text: String, shingleN: Int, k: Int, bands: Int, threshold: Double,
-      maxBucket: Int = 2000): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val shNew = withShingles(newDocs, id, text, shingleN).localCheckpoint(false)
     val shIdx = withShingles(indexDocs, id, text, shingleN).localCheckpoint(false)
-    val bkNew = lshBandKeys(signaturesFromShingles(shNew, id, k), id, bands, k / bands)
-    val bkIdx = lshBandKeys(signaturesFromShingles(shIdx, id, k), id, bands, k / bands)
-    val wB = org.apache.spark.sql.expressions.Window.partitionBy("band", "band_key")
-    val cappedIdx = bkIdx.filter(col("band_key").isNotNull)
-      .withColumn("__bsz", count(lit(1)).over(wB))
-      .filter(col("__bsz") <= maxBucket).drop("__bsz")
-    val cands = bkNew.filter(col("band_key").isNotNull)
+    def bandKeys(sh: DataFrame) =
+      lshBandKeys(signaturesFromShingles(sh, id, k), id, bands, k / bands)
+    val cands = bandKeys(shNew)
       .select(col("band"), col("band_key"), col(id).as("id_new"))
-      .join(cappedIdx.select(col("band"), col("band_key"), col(id).as("id_old")),
+      .join(capBuckets(bandKeys(shIdx), maxBucket)
+        .select(col("band"), col("band_key"), col(id).as("id_old")),
         Seq("band", "band_key"))
       .select("id_new", "id_old").distinct()
-    val sizesNew = shNew.select(col(id).as("id_new"),
-      size(col("shingles")).cast("long").as("sz_new"))
-    val sizesIdx = shIdx.select(col(id).as("id_old"),
-      size(col("shingles")).cast("long").as("sz_old"))
-    val exNew = shNew.select(col(id).as("id_new"), explode(col("shingles")).as("s"))
-    val exIdx = shIdx.select(col(id).as("id_old"), explode(col("shingles")).as("s"))
-    val inter = cands.join(exNew, Seq("id_new")).join(exIdx, Seq("id_old", "s"))
-      .groupBy("id_new", "id_old").agg(count(lit(1)).as("n_inter"))
-    inter.join(sizesNew, Seq("id_new")).join(sizesIdx, Seq("id_old"))
-      .withColumn("__j", col("n_inter").cast("double") /
-        (col("sz_new") + col("sz_old") - col("n_inter")))
-      .filter(col("__j") >= threshold)
-      .select(col("id_new"), col("id_old"), round(col("__j"), 6).as("jaccard"))
+    jaccardAtLeast(pairOverlaps(cands, "id_new", "id_old", shNew, shIdx, id),
+      "id_new", "id_old", threshold)
   }
 
   /** SimHash near-duplicate pairs: band on the signature's first
@@ -568,7 +539,7 @@ object DedupOps {
     */
   def tfidfCosinePairs(docs: DataFrame, id: String, text: String,
       shingleN: Int, threshold: Double, maxDf: Long = Long.MaxValue): DataFrame = {
-    val toks = graft.Tables.spread(docs.select(col(id), col(text)), tinyBytes = 0L)
+    val toks = graft.Tables.spread(docs.select(col(id), col(text)))
       .select(col(id),
         explode(TextFns.rawShingles(TextFns.tokens(col(text)), shingleN)).as("term"))
     // df stays an AGGREGATE + join-back, NOT a `count().over(partitionBy
@@ -621,7 +592,7 @@ object DedupOps {
     */
   def dropNearDups(docs: DataFrame, id: String, text: String,
       shingleN: Int, k: Int, bands: Int, threshold: Double,
-      maxBucket: Int = 2000, maxDf: Long = Long.MaxValue): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket, maxDf: Long = Long.MaxValue): DataFrame = {
     val pairs = nearDupPairs(docs, id, text, shingleN, k, bands, threshold,
       maxBucket, maxDf)
     val victims = connectedComponents(pairs, "id_a", "id_b")
@@ -630,16 +601,6 @@ object DedupOps {
     docs.join(victims, Seq(id), "left_anti")
   }
 
-  /** Benchmark decontamination (training-data hygiene): for each corpus
-    * document, the number of distinct `n`-token shingles it shares with a
-    * benchmark/eval set, plus a 0/1 contamination flag.
-    *
-    * Both sides reduce to DISTINCT (id, shingle) / (shingle) frames and
-    * meet in ONE equi-join on the shingle string — never doc×doc. The
-    * benchmark shingle set is data-dependent (an eval suite can be millions
-    * of shingles), so there is no broadcast hint: AQE promotes the join at
-    * runtime iff the set actually fits.
-    */
   /** Segment-level boilerplate removal (the RefinedWeb/CCNet "line dedup"
     * pass, adapted to whitespace corpora with no line structure): each doc
     * is cut into aligned `w`-token segments, segments whose corpus-wide
@@ -658,7 +619,7 @@ object DedupOps {
     // that must keep them attach the result with a left join — see
     // CorpusCurator.scrubBoilerplate); unguarded, sequence(0, -1) would
     // walk backwards and fabricate two empty-string segments per empty doc
-    val segs = graft.Tables.spread(docs.select(col(id), col(text)), tinyBytes = 0L)
+    val segs = graft.Tables.spread(docs.select(col(id), col(text)))
       .select(col(id), TextFns.tokens(col(text)).as("__toks"))
       .withColumn("__n", size(col("__toks")))
       .filter(col("__n") > 0)
@@ -683,6 +644,16 @@ object DedupOps {
           " ").as("clean_text"))
   }
 
+  /** Benchmark decontamination (training-data hygiene): for each corpus
+    * document, the number of distinct `n`-token shingles it shares with a
+    * benchmark/eval set, plus a 0/1 contamination flag.
+    *
+    * Both sides reduce to DISTINCT (id, shingle) / (shingle) frames and
+    * meet in ONE equi-join on the shingle string — never doc×doc. The
+    * benchmark shingle set is data-dependent (an eval suite can be millions
+    * of shingles), so there is no broadcast hint: AQE promotes the join at
+    * runtime iff the set actually fits.
+    */
   def decontaminate(corpus: DataFrame, benchmark: DataFrame, id: String,
       text: String, n: Int): DataFrame = {
     // `withShingles` is per-doc distinct and `id` is unique, so the exploded
@@ -702,28 +673,6 @@ object DedupOps {
           .as("contaminated"))
   }
 
-  /** Sorted-neighborhood near-duplicate pairs (Hernández–Stolfo SNM, the
-    * classic record-linkage blocking): sort the corpus by a normalized
-    * blocking key, then compare each record only against its `window`
-    * successors in that order, keeping pairs within `maxDist` edits of
-    * each other's keys.
-    *
-    * Complements the d-family's set-similarity methods: MinHash/SimHash
-    * block on CONTENT OVERLAP; SNM blocks on SORT-ORDER LOCALITY, which
-    * catches near-identical records whose small early edits leave them
-    * adjacent (typos, truncations, boilerplate prefixes).
-    *
-    * Shape: the global sort rank comes from [[graft.operators.RankOps
-    * .globalRowNumber]] (two-phase range bucketing — no single-partition
-    * exchange), then each row is exploded to its `window` forward anchor
-    * ranks and the candidate pairs form with ONE equi-join on the anchor
-    * (fan-out = `window`, linear in corpus size — never the quadratic
-    * blowup naive blocking risks when one key bucket is hot). The edit
-    * distance runs only on the `keyLen`-bounded keys, not full documents.
-    *
-    * Determinism: the sort is total-ordered by (key, id); ranks, anchors
-    * and edit distances are exact integers.
-    */
   /** Candidate-generation quality audit: LSH band-bucket candidate pairs
     * measured against the exact-Jaccard ground truth at `threshold` —
     * recall ("what fraction of true near-dup pairs did banding surface")
@@ -760,6 +709,28 @@ object DedupOps {
         round(col("n_hit").cast("double") / col("n_cand"), 6).as("precision"))
   }
 
+  /** Sorted-neighborhood near-duplicate pairs (Hernández–Stolfo SNM, the
+    * classic record-linkage blocking): sort the corpus by a normalized
+    * blocking key, then compare each record only against its `window`
+    * successors in that order, keeping pairs within `maxDist` edits of
+    * each other's keys.
+    *
+    * Complements the d-family's set-similarity methods: MinHash/SimHash
+    * block on CONTENT OVERLAP; SNM blocks on SORT-ORDER LOCALITY, which
+    * catches near-identical records whose small early edits leave them
+    * adjacent (typos, truncations, boilerplate prefixes).
+    *
+    * Shape: the global sort rank comes from [[graft.operators.RankOps
+    * .globalRowNumber]] (two-phase range bucketing — no single-partition
+    * exchange), then each row is exploded to its `window` forward anchor
+    * ranks and the candidate pairs form with ONE equi-join on the anchor
+    * (fan-out = `window`, linear in corpus size — never the quadratic
+    * blowup naive blocking risks when one key bucket is hot). The edit
+    * distance runs only on the `keyLen`-bounded keys, not full documents.
+    *
+    * Determinism: the sort is total-ordered by (key, id); ranks, anchors
+    * and edit distances are exact integers.
+    */
   def sortedNeighborhood(docs: DataFrame, id: String, text: String,
       window: Int, maxDist: Int, keyLen: Int = 64): DataFrame = {
     val keyed = docs.select(col(id),
@@ -808,7 +779,7 @@ object DedupOps {
     // parquet scan tasks a small docs table yields — widen it across the
     // cores (no-op ≥256 MB, the PNG-family discipline), or the whole
     // fingerprint pass runs 2-wide on 32 cores
-    graft.Tables.spread(docs.select(col(id), col(text)), tinyBytes = 0L)
+    graft.Tables.spread(docs.select(col(id), col(text)))
       .select(col(id), toks.as("__t"))
       .filter(size(col("__t")) >= k + w - 1)
       .select(col(id), transform(
@@ -821,25 +792,18 @@ object DedupOps {
 
   /** Shared-fingerprint pair report over [[winnowedFingerprints]] — the
     * MOSS "documents with overlapping passages" join. The fingerprint
-    * equi-join is an inverted index; `maxDf` drops stop-fingerprints
-    * (shared boilerplate) to cap the quadratic posting tail exactly like
-    * the Jaccard index's `capPostings`.
+    * equi-join is the same inverted index as [[jaccardAllPairs]]; `maxDf`
+    * drops stop-fingerprints (shared boilerplate) through [[capPostings]]
+    * to cap the quadratic posting tail.
     */
   def winnowSharedPairs(docs: DataFrame, id: String, text: String,
       k: Int = 3, w: Int = 4, minShared: Long = 2,
       maxDf: Long = 50): DataFrame = {
     val fp = winnowedFingerprints(docs, id, text, k, w)
       .localCheckpoint(false)
-    val keep = fp.groupBy(col("fp")).agg(count(lit(1)).as("__df"))
-      .filter(col("__df") <= maxDf)
-      .select(col("fp"))
-    val capped = fp.join(keep, Seq("fp"))
-    capped.select(col("fp"), col(id).as("id_a"))
-      .join(capped.select(col("fp"), col(id).as("id_b")), Seq("fp"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+    postingPairCounts(fp, id, "fp", maxDf)
+      .filter(col("n_inter") >= minShared)
+      .select(col("id_a"), col("id_b"), col("n_inter").as("n_shared"))
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,

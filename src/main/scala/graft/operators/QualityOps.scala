@@ -190,9 +190,7 @@ object QualityOps {
     */
   private def bucketedBigrams(docs: DataFrame, id: String, text: String,
       isTarget: Column, dim: Int): DataFrame =
-    graft.Tables.spread(
-        docs.select(col(id), col(text), isTarget.cast("int").as("__tgt")),
-        tinyBytes = 0L)
+    graft.Tables.spread(docs.select(col(id), col(text), isTarget.cast("int").as("__tgt")))
       .select(col(id), col("__tgt"),
         explode(TextFns.rawShingles(TextFns.tokens(col(text)), 2)).as("__bg"))
       .withColumn("__b",
@@ -270,8 +268,7 @@ object QualityOps {
     */
   def charGramCounts(docs: DataFrame, id: String, text: String,
       lang: String, n: Int): DataFrame = {
-    val base = graft.Tables.spread(
-        docs.select(col(id), col(text), col(lang)), tinyBytes = 0L)
+    val base = graft.Tables.spread(docs.select(col(id), col(text), col(lang)))
       .filter(col(text).isNotNull && length(col(text)) >= n)
     base.select(col(id), col(lang), col(text),
         explode(sequence(lit(1), length(col(text)) - (n - 1))).as("__p"))
@@ -332,7 +329,7 @@ object QualityOps {
 
   def dupSpanCoverage(docs: DataFrame, id: String, text: String,
       k: Int): DataFrame = {
-    val toks = graft.Tables.spread(docs.select(col(id), col(text)), tinyBytes = 0L)
+    val toks = graft.Tables.spread(docs.select(col(id), col(text)))
       .select(col(id), TextFns.tokens(col(text)).as("__t"))
       .select(col(id), col("__t"), size(col("__t")).as("n_toks"))
     val gramsFixed = toks
@@ -665,8 +662,7 @@ object QualityOps {
   def spanDecontaminateMarked(docs: DataFrame, id: String, text: String,
       isEval: Column, minLen: Int = 5, cap: Int = 64,
       ccMaxIter: Int = 30): DataFrame = {
-    val base = graft.Tables.spread(
-        docs.select(col(id), col(text), isEval.as("__eval")), tinyBytes = 0L)
+    val base = graft.Tables.spread(docs.select(col(id), col(text), isEval.as("__eval")))
       .select(col(id), TextFns.tokens(col(text)).as("__t"), col("__eval"))
       .select(col(id), col("__t"), size(col("__t")).as("n_toks"),
         col("__eval"))
@@ -727,7 +723,7 @@ object QualityOps {
       checkpoint: DataFrame => DataFrame = _.localCheckpoint(false))
       : SpanProfile = {
     val toks = checkpoint(
-      graft.Tables.spread(docs.select(col(id), col(text)), tinyBytes = 0L)
+      graft.Tables.spread(docs.select(col(id), col(text)))
         .select(col(id), TextFns.tokens(col(text)).as("__t"))
         .select(col(id), col("__t"), size(col("__t")).as("n_toks")))
     spanProfileFromToks(toks, id, minLen, cap, ccMaxIter, checkpoint)
@@ -811,7 +807,7 @@ object QualityOps {
   def gopherRepetition(docs: DataFrame, id: String, text: String,
       maxTopBigramFrac: Double = 0.20,
       maxDupCoverage: Double = 0.30): DataFrame = {
-    val base = graft.Tables.spread(docs.select(col(id), col(text)), tinyBytes = 0L)
+    val base = graft.Tables.spread(docs.select(col(id), col(text)))
       .filter(col(text).isNotNull)
       .select(col(id), TextFns.tokens(col(text)).as("__t"))
       .select(col(id), col("__t"), size(col("__t")).as("n_toks"),
@@ -871,7 +867,7 @@ object QualityOps {
     * and the shuffle never carries more than the distinct-token frame.
     */
   def lexicalRichness(docs: DataFrame, id: String, text: String): DataFrame = {
-    val tf = graft.Tables.spread(docs.select(col(id), col(text)), tinyBytes = 0L)
+    val tf = graft.Tables.spread(docs.select(col(id), col(text)))
       .filter(col(text).isNotNull)
       .select(col(id), explode(TextFns.tokens(col(text))).as("__tok"))
       .groupBy(col(id), col("__tok")).agg(count(lit(1)).as("__m"))

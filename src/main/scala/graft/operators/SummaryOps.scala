@@ -80,7 +80,7 @@ object SummaryOps {
     */
   def pmiBigrams(docs: DataFrame, text: String, minCount: Long): DataFrame = {
     import graft.functions.TextFns
-    val toks = graft.Tables.spread(docs.select(col(text)), tinyBytes = 0L)
+    val toks = graft.Tables.spread(docs.select(col(text)))
       .select(TextFns.tokens(col(text)).as("__toks"))
     val uni = toks.select(explode(col("__toks")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("__uc"))
@@ -116,7 +116,7 @@ object SummaryOps {
     */
   def klFromCorpus(docs: DataFrame, group: String, text: String): DataFrame = {
     import graft.functions.TextFns
-    val tok = graft.Tables.spread(docs.select(col(group), col(text)), tinyBytes = 0L)
+    val tok = graft.Tables.spread(docs.select(col(group), col(text)))
       .select(col(group), explode(TextFns.tokens(col(text))).as("__tok"))
     val corpus = tok.groupBy("__tok").agg(count(lit(1)).as("__cc"))
     val stats = corpus.agg(sum("__cc").cast("double").as("__n"),
@@ -179,7 +179,7 @@ object SummaryOps {
     */
   def jsdFromRest(docs: DataFrame, group: String, text: String): DataFrame = {
     import graft.functions.TextFns
-    val tok = graft.Tables.spread(docs.select(col(group), col(text)), tinyBytes = 0L)
+    val tok = graft.Tables.spread(docs.select(col(group), col(text)))
       .select(col(group), explode(TextFns.tokens(col(text))).as("__tok"))
     val corpus = tok.groupBy("__tok").agg(count(lit(1)).as("__cc"))
     val total = corpus.agg(sum("__cc").as("__N"))
@@ -243,7 +243,7 @@ object SummaryOps {
     */
   def bigramLogProb(docs: DataFrame, id: String, text: String): DataFrame = {
     import graft.functions.TextFns
-    val toks = graft.Tables.spread(docs.select(col(id), col(text)), tinyBytes = 0L)
+    val toks = graft.Tables.spread(docs.select(col(id), col(text)))
       .select(col(id), TextFns.tokens(col(text)).as("__t"))
     bigramLogProb(gramProfile(toks, id))
   }
@@ -293,7 +293,7 @@ object SummaryOps {
       text: String): DataFrame = {
     import graft.functions.TextFns
     def toks(df: DataFrame) =
-      graft.Tables.spread(df.select(col(id), col(text)), tinyBytes = 0L)
+      graft.Tables.spread(df.select(col(id), col(text)))
         .select(col(id), TextFns.tokens(col(text)).as("__t"))
     val trainToks = toks(train)
     val bgCounts = trainToks
@@ -436,7 +436,7 @@ object SummaryOps {
   def knBigramLogProb(docs: DataFrame, id: String, text: String,
       discount: Double = 0.75): DataFrame = {
     import graft.functions.TextFns
-    val toks = graft.Tables.spread(docs.select(col(id), col(text)), tinyBytes = 0L)
+    val toks = graft.Tables.spread(docs.select(col(id), col(text)))
       .select(col(id), TextFns.tokens(col(text)).as("__t"))
     knBigramLogProb(gramProfile(toks, id), discount)
   }

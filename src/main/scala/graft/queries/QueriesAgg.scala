@@ -31,7 +31,7 @@ private[graft] object QueriesAgg {
 
     "a02_mean_frequency" -> ((s, d) =>
       SummaryOps.meanFrequency(
-        Tables.spread(li(s, d).select("l_orderkey", "l_partkey"), tinyBytes = 0L),
+        Tables.spread(li(s, d).select("l_orderkey", "l_partkey")),
         "l_orderkey", "l_partkey")),
 
 

@@ -98,7 +98,7 @@ private[graft] object QueriesMl {
       val aggs = cols.flatMap(stats)
       // spread: the countDistinct trio expands each input row 4× before the
       // partial aggregate — serialized on a narrow scan, cheap in parallel
-      val wide = Tables.spread(li(s, d).select(cols.map(col): _*), tinyBytes = 0L)
+      val wide = Tables.spread(li(s, d).select(cols.map(col): _*))
         .agg(aggs.head, aggs.tail: _*)
       val stacked = cols.map(c =>
         s"'$c', n_$c, null_$c, dist_$c, min_$c, max_$c, avg_$c").mkString(", ")

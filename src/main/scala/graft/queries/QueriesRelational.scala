@@ -341,7 +341,7 @@ private[graft] object QueriesRelational {
     // spread: per-row regex extraction is CPU-bound — parallelize the
     // narrow scan before the kernel
     "f15_try_cast_json" -> ((s, d) =>
-      Tables.spread(ev(s, d).select("event_id", "props"), tinyBytes = 0L)
+      Tables.spread(ev(s, d).select("event_id", "props"))
         .select(col("event_id"),
           expr("try_cast(regexp_extract(props, '\"k\": (\\\\d+)', 1) AS INT)").as("k_val"),
           expr("try_cast(substring(props, 1, 5) AS INT)").as("bad_cast"))),
@@ -906,7 +906,7 @@ private[graft] object QueriesRelational {
     // schema'd JSON ingestion (from_json, not regex): the typed parse of
     // a semi-structured column — f15's regex sibling done properly
     "f32_json_parse" -> ((s, d) =>
-      Tables.spread(ev(s, d).select("event_id", "props"), tinyBytes = 0L)
+      Tables.spread(ev(s, d).select("event_id", "props"))
         .select(col("event_id"),
           from_json(col("props"), "k INT", Map.empty[String, String])
             .getField("k").as("k_val"))),

@@ -50,7 +50,7 @@ private[graft] object QueriesText {
     // corpus granularity): hash-agg then TakeOrderedAndProject, never a
     // global window
     "t14_ngram_topk" -> ((s, d) =>
-      Tables.spread(docs(s, d).select("doc_id", "text"), tinyBytes = 0L)
+      Tables.spread(docs(s, d).select("doc_id", "text"))
         .select(explode(TextFns.rawShingles(TextFns.tokens(col("text")), 3)).as("tri"))
         .groupBy("tri").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("tri").asc)
@@ -187,7 +187,7 @@ private[graft] object QueriesText {
     // document's trigram positions occupied by its most frequent trigram —
     // high ratio = boilerplate/looped text
     "t12_repetition" -> ((s, d) => {
-      val tri = Tables.spread(docs(s, d).select("doc_id", "text"), tinyBytes = 0L)
+      val tri = Tables.spread(docs(s, d).select("doc_id", "text"))
         .select(col("doc_id"),
           explode(TextFns.rawShingles(TextFns.tokens(col("text")), 3)).as("tri"))
       tri.groupBy("doc_id", "tri").agg(count(lit(1)).as("__c"))
@@ -209,7 +209,7 @@ private[graft] object QueriesText {
 
 
     "t09_stem" -> ((s, d) =>
-      Tables.spread(docs(s, d).select("doc_id", "text"), tinyBytes = 0L)
+      Tables.spread(docs(s, d).select("doc_id", "text"))
         .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("tok"))
         .distinct()
         .select(col("doc_id"), col("tok"),
@@ -221,7 +221,7 @@ private[graft] object QueriesText {
     // Scala list feeds both the broadcast join and the oracle VALUES
     "t09b_lemmatize" -> ((s, d) =>
       graft.functions.NotesNlp.lemmatize(
-        Tables.spread(docs(s, d).select("doc_id", "text"), tinyBytes = 0L)
+        Tables.spread(docs(s, d).select("doc_id", "text"))
           .select(col("doc_id"),
             explode(TextFns.tokens(col("text"))).as("tok"))
           .distinct(),
@@ -280,7 +280,7 @@ private[graft] object QueriesText {
     // report): explode → two stacked hash aggregates
     "t16_source_entropy" -> ((s, d) =>
       SummaryOps.groupEntropy(
-        Tables.spread(docs(s, d).select("source", "text"), tinyBytes = 0L)
+        Tables.spread(docs(s, d).select("source", "text"))
           .select(col("source"), explode(TextFns.tokens(col("text"))).as("tok")),
         "source", "tok")
         .withColumnRenamed("n_rows", "n_tokens")
@@ -292,7 +292,7 @@ private[graft] object QueriesText {
     // gram also occurs in some OTHER doc — explode, corpus-wide
     // distinct-doc counts per gram, join back, per-doc ratio
     "t17_dup_ngrams" -> ((s, d) => {
-      val g = Tables.spread(docs(s, d).select("doc_id", "text"), tinyBytes = 0L)
+      val g = Tables.spread(docs(s, d).select("doc_id", "text"))
         .select(col("doc_id"),
           explode(TextFns.rawShingles(TextFns.tokens(col("text")), 5)).as("g"))
       val docsPerGram = g.groupBy("g").agg(countDistinct(col("doc_id")).as("__nd"))
@@ -308,7 +308,7 @@ private[graft] object QueriesText {
     // The 1-row (N, V) aggregate broadcasts (bounded by construction); the
     // token↔prob join shuffles on the token — vocab never sits on one task
     "t18_unigram_logprob" -> ((s, d) => {
-      val tok = Tables.spread(docs(s, d).select("doc_id", "text"), tinyBytes = 0L)
+      val tok = Tables.spread(docs(s, d).select("doc_id", "text"))
         .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("tok"))
       val counts = tok.groupBy("tok").agg(count(lit(1)).as("__c"))
       val stats = counts.agg(sum("__c").cast("double").as("__n"),
@@ -414,7 +414,7 @@ private[graft] object QueriesText {
     // lexical diversity per doc: type-token ratio and its length-robust
     // root form — the vocabulary-richness quality signal
     "t30_lexical_diversity" -> ((s, d) =>
-      Tables.spread(docs(s, d).select("doc_id", "text"), tinyBytes = 0L)
+      Tables.spread(docs(s, d).select("doc_id", "text"))
         .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("__t"))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_tokens"),

@@ -15,10 +15,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventStreams {
 
-  /** Normalize `ts` to a microsecond timestamp on a streaming frame.
-    * Mirrors `Tables.events`: a raw epoch-nanos Long (TIMESTAMP_NS file
-    * read under `nanosAsLong`) is integer-truncated to µs; a native
-    * timestamp column passes through untouched.
+  /** Normalize `ts` to a microsecond TimestampType, on a batch or a
+    * streaming frame (`Tables.events` loads through it): a raw epoch-nanos
+    * Long (TIMESTAMP_NS file read under `nanosAsLong`) is integer-truncated
+    * to µs; a TimestampNTZ column is cast, value-preserving under the UTC
+    * session tz, so downstream operators keep TimestampType semantics; a
+    * native timestamp column passes through untouched.
     */
   def withEventTime(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {

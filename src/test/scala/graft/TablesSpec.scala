@@ -27,7 +27,7 @@ class TablesSpec extends AnyFunSuite {
     assert(inflated.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(256L << 20))
     assert(Tables.plannedPartitions(inflated) === Some(1))
     val (wide, jobs) = jobsDuring {
-      Tables.plannedPartitions(Tables.spread(inflated, tinyBytes = 0L))
+      Tables.plannedPartitions(Tables.spread(inflated))
     }
     assert(wide === Some(spark.sparkContext.defaultParallelism))
     assert(jobs === 0)
@@ -39,7 +39,7 @@ class TablesSpec extends AnyFunSuite {
       spark.range(0, 1000, 1, width).toDF().localCheckpoint(true),
       spark.range(0, 1000, 1, 1).repartition(width * 2).select(col("id") * 2))
     for (df <- frames) {
-      val (out, jobs) = jobsDuring(Tables.spread(df, tinyBytes = 0L))
+      val (out, jobs) = jobsDuring(Tables.spread(df))
       assert(out eq df)
       assert(jobs === 0)
     }
@@ -48,6 +48,6 @@ class TablesSpec extends AnyFunSuite {
   test("spread passes through a frame whose width is only known at run time") {
     val agg = spark.range(0, 1000, 1, 1).groupBy(col("id") % 7).count()
     assert(Tables.plannedPartitions(agg) === None)
-    assert(Tables.spread(agg, tinyBytes = 0L) eq agg)
+    assert(Tables.spread(agg) eq agg)
   }
 }

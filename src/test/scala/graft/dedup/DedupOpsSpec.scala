@@ -371,6 +371,53 @@ class DedupOpsSpec extends AnyFunSuite {
       DedupOps.withShingles(empty, "doc_id", "text", 3), "doc_id", 0.0).count() === 0L)
   }
 
+  /** 40 docs of 3-8 words drawn from `vocabSize` words: every doc has a
+    * bigram, and the smaller the vocabulary the more bigrams pairs share.
+    */
+  private def randomCorpus(seed: Int, vocabSize: Int) = {
+    val rnd = new scala.util.Random(seed)
+    val vocab = (1 to vocabSize).map(i => s"w$i")
+    (1L to 40L).map(i =>
+      (i, Seq.fill(3 + rnd.nextInt(6))(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
+      .toDF("doc_id", "text")
+  }
+
+  test("nearDupAgainstIndex jaccard equals jaccardAllPairs over the union corpus") {
+    val corpus = randomCorpus(5, vocabSize = 4)
+    val newBatch = corpus.filter(col("doc_id") % 4 === 0)
+    val index = corpus.filter(col("doc_id") % 4 =!= 0)
+    val got = DedupOps.nearDupAgainstIndex(newBatch, index, "doc_id", "text",
+        shingleN = 2, k = 12, bands = 6, threshold = 0.0)
+      .as[(Long, Long, Double)].collect()
+    val want = DedupOps.jaccardAllPairs(
+        DedupOps.withShingles(corpus, "doc_id", "text", 2), "doc_id", 0.0)
+      .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
+    assert(got.length >= 10)
+    for ((n, o, j) <- got)
+      assert(want.get((math.min(n, o), math.max(n, o))) === Some(j), s"pair ($n, $o)")
+  }
+
+  test("minhashEstimateFrom: exact jaccard matches jaccardVerify, est is lanes_agree / k") {
+    val k = 12
+    val sh = DedupOps.withShingles(randomCorpus(9, vocabSize = 14), "doc_id", "text", 2)
+    val cands = sh.select(col("doc_id").as("id_a"))
+      .crossJoin(sh.select(col("doc_id").as("id_b")))
+      .filter(col("id_a") < col("id_b"))
+    val verified = DedupOps.jaccardVerify(cands, sh, "doc_id", 0.0)
+      .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
+    val got = DedupOps.minhashEstimateFrom(sh, cands, "doc_id", k)
+      .select("id_a", "id_b", "lanes_agree", "est", "jaccard")
+      .as[(Long, Long, Long, Double, Double)].collect()
+    assert(got.length.toLong === cands.count())
+    val (sharing, disjoint) = got.partition(r => verified.contains((r._1, r._2)))
+    assert(sharing.nonEmpty && disjoint.nonEmpty)
+    for ((a, b, _, _, j) <- sharing) assert(j === verified((a, b)), s"pair ($a, $b)")
+    assert(disjoint.forall(_._5 == 0.0))
+    for ((a, b, agree, est, _) <- got)
+      assert(est === BigDecimal(agree.toDouble / k)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble, s"pair ($a, $b)")
+  }
+
   test("containmentPairs flags short-in-long quoting that Jaccard misses") {
     val quote = "alpha beta gamma delta epsilon"
     val long = ("x1 x2 x3 x4 x5 x6 x7 x8 x9 x10 x11 x12 x13 x14 x15 " +

@@ -101,6 +101,41 @@ class Round9OpsSpec extends AnyFunSuite {
     assert(fp.select("fp").distinct().count() === byDoc(1L))
   }
 
+  test("winnowing: a maxDf below a fingerprint's df loses exactly the pairs it alone linked") {
+    // passage P sits in docs 1-4 (its fingerprints have df 4), passage Q
+    // in docs 4 and 5 (df 2); every other token is unique to its doc
+    val p = (1 to 10).map(i => s"p$i").mkString(" ")
+    val q = (1 to 10).map(i => s"q$i").mkString(" ")
+    def own(d: Int) = (1 to 5).map(i => s"d${d}x$i").mkString(" ")
+    val docs = Seq(
+      (1L, s"${own(1)} $p"), (2L, s"$p ${own(2)}"), (3L, s"${own(3)} $p ${own(3)}"),
+      (4L, s"$p ${own(4)} $q"), (5L, s"$q ${own(5)}")).toDF("doc_id", "text")
+    def pairs(maxDf: Long) = graft.dedup.DedupOps
+      .winnowSharedPairs(docs, "doc_id", "text", k = 3, w = 4, minShared = 1, maxDf = maxDf)
+      .as[(Long, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
+    val fps = graft.dedup.DedupOps.winnowedFingerprints(docs, "doc_id", "text", 3, 4)
+      .as[(Long, String)].collect()
+    val df = fps.groupBy(_._2).map { case (f, rs) => f -> rs.length }
+    val byDoc = fps.groupBy(_._1).map { case (d, rs) => d -> rs.map(_._2).toSet }
+    def shared(p: (Long, Long)) = byDoc(p._1) & byDoc(p._2)
+    // plain-Scala reference: per pair, the shared fingerprints under the cap
+    def want(maxDf: Long) = (for {
+      a <- 1L to 5L; b <- a + 1 to 5L
+      n = shared((a, b)).count(df(_) <= maxDf) if n > 0
+    } yield (a, b) -> n.toLong).toMap
+    assert(df.values.max === 4)
+    val all = pairs(50)
+    val capped = pairs(3)
+    assert(all === want(50))
+    assert(capped === want(3))
+    // exactly the pairs whose every shared fingerprint has df 4 are lost;
+    // the Q pair survives with its full count
+    val lost = all.keySet -- capped.keySet
+    assert(lost === all.keySet.filter(p => shared(p).forall(df(_) > 3)))
+    assert(lost.contains((1L, 2L)) && lost.contains((1L, 4L)))
+    assert(capped((4L, 5L)) === all((4L, 5L)))
+  }
+
   test("semanticDedup: lower id survives, cross-cluster twins untouched") {
     // ids 1,2 are identical vectors in the [1,0] cluster → 2 dropped;
     // id 3 lands in the other cluster so its (identical) direction is
