@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (Test / fork := true → one JVM). */
+/** One shared local session per test JVM. Tests fork in two groups
+  * (build.sbt `testGrouping`): DeterminismSpec in a JVM of its own, every
+  * other suite in the second, the two running side by side.
+  */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
