@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The ONE SparkSession recipe for the bench and its dev tools (PlanDump,
-  * StageProfile, QueryProfile): each previously hand-copied the config
+/** The ONE SparkSession recipe for the bench, `Verify` and the dev tools
+  * (PlanDump, StageProfile, QueryProfile): each previously hand-copied the config
   * block and they had already drifted (committer settings present in some,
   * absent in others), weakening the claim that dumped plans/profiles are
   * exactly the ones the bench executes. Core count comes from

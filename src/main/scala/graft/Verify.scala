@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,38 +9,7 @@ object Verify {
     // always passes two args → full suite)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // load-bearing plan lint: the suite has ZERO single-partition global
-      // windows (w11 runs RankOps.globalCumsum), so the guard fails the
-      // round if one sneaks back in instead of warning about it
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.graft.failOnGlobalWindow", "true")
-      // the whole-suite working set is hundreds of codegen units; the
-      // default 100-entry cache thrashes between warmup and the timed pass,
-      // re-paying janino compilation (seconds for wide expression trees)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // InferFiltersFromGenerate clones the whole generator expression into
-      // a scan-side size()>0 filter, so shingle towers (zip_with chains)
-      // evaluate twice per row; nothing here prunes on it (no partitioned
-      // sources), so the inference is pure double-compute — excluded
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // shuffle/spill blocks on tmpfs: the harness box shows multi-second
-      // disk stalls on /tmp that randomize per-query timings
-      // v2 task-commit: files move once at task commit instead of a
-      // second job-level rename sweep, and no _SUCCESS markers — the
-      // file-sink roundtrip queries otherwise pay this committer floor
-      // per query (r7 verdict #7; pure fixed overhead, not plan work)
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .config("spark.local.dir", "/dev/shm/graft-local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchSession.build()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     var nFailed = 0

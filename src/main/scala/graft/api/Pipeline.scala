@@ -364,30 +364,18 @@ object TimeSeriesGenerator {
     *    and events before the shifted zero drop (point-event form; an
     *    interval straddling the boundary should be clipped upstream the
     *    way the reference clamps med start times to 0).
-    *
-    * Both joins are visit-keyed equi-joins (semi for the gate, inner for
-    * the shift) — the stay frame is one row per visit, so AQE broadcasts
-    * it when small and shuffles both sides on the key otherwise.
     */
   def bucketedFeatures(events: DataFrame, visitKey: String, offsetH: String,
       codeCol: String, valueCol: String, stayLos: DataFrame, losCol: String,
-      includeH: Int, bucketH: Int, window: TaskWindow): DataFrame =
-    window match {
-      case FirstWindow(predW) =>
-        val eligible = stayLos.filter(col(losCol) >= includeH + predW)
-          .select(col(visitKey))
-        bucketedFeatures(events.join(eligible, Seq(visitKey), "left_semi"),
-          visitKey, offsetH, codeCol, valueCol, includeH, bucketH)
-      case LastWindow =>
-        val sel = stayLos.filter(col(losCol) >= includeH)
-          .select(col(visitKey), (col(losCol) - includeH).as("__select"))
-        val shifted = events.join(sel, Seq(visitKey))
-          .withColumn("__off", col(offsetH) - col("__select"))
-          .filter(col("__off") >= 0 && col("__off") < includeH)
-        TimeSeriesOps.bucketize(shifted, col("__off"), lit(bucketH), "bucket")
-          .groupBy(col(visitKey), col(codeCol), col("bucket"))
-          .agg(avg(col(valueCol)).as("value"))
+      includeH: Int, bucketH: Int, window: TaskWindow): DataFrame = {
+    val rows = eligibleRows(events, visitKey, stayLos, losCol, includeH, window)
+    val (kept, off) = window match {
+      case _: FirstWindow => (rows, offsetH)
+      case LastWindow => (rows.withColumn("__off", col(offsetH) - col("__select"))
+        .filter(col("__off") >= 0), "__off")
     }
+    bucketedFeatures(kept, visitKey, off, codeCol, valueCol, includeH, bucketH)
+  }
 
   /** Interval-event (meds) window preparation — the Generator's med branch
     * under each task window, which differs from the point-event form
@@ -405,76 +393,69 @@ object TimeSeriesGenerator {
     *    shifted zero survives with its pre-window part truncated; one that
     *    ends before it drops.
     *
-    * Same join shapes as the point-event overload: a visit-keyed semi for
-    * the gate, a visit-keyed inner for the shift — the stay frame is one
-    * row per visit, so AQE broadcasts it when small. Columns other than
-    * `startCol`/`stopCol` pass through untouched.
+    * Columns other than `startCol`/`stopCol` pass through untouched.
     */
   def shiftClipIntervals(intervals: DataFrame, visitKey: String,
       startCol: String, stopCol: String, stayLos: DataFrame, losCol: String,
-      includeH: Int, window: TaskWindow): DataFrame =
+      includeH: Int, window: TaskWindow): DataFrame = {
+    val rows = eligibleRows(intervals, visitKey, stayLos, losCol, includeH, window)
     window match {
-      case FirstWindow(predW) =>
-        val eligible = stayLos.filter(col(losCol) >= includeH + predW)
-          .select(col(visitKey))
-        intervals.join(eligible, Seq(visitKey), "left_semi")
-          .filter(col(startCol) <= includeH)
+      case _: FirstWindow =>
+        rows.filter(col(startCol) <= includeH)
           .withColumn(stopCol, least(col(stopCol), lit(includeH)))
       case LastWindow =>
-        val sel = stayLos.filter(col(losCol) >= includeH)
-          .select(col(visitKey), (col(losCol) - includeH).as("__select"))
-        intervals.join(sel, Seq(visitKey))
-          .withColumn(startCol, col(startCol) - col("__select"))
+        rows.withColumn(startCol, col(startCol) - col("__select"))
           .withColumn(stopCol, col(stopCol) - col("__select"))
           .filter(col(stopCol) >= 0)
           .withColumn(startCol, greatest(col(startCol), lit(0)))
           .drop("__select")
     }
+  }
 
-  /** Bucket-grid med-active mask from window-prepared intervals (the tail
-    * the reference builds per-stay per-hour, `data_generation_icu.py:
-    * 497-501`, here one relational pass): an interval contributes its
-    * start bucket carrying a ceil'd stop bucket; per (visit, code) the
-    * grid densifies to `includeH / bucketH` buckets and W5's
-    * forward-filled active signal emits 1 while the latest stop bucket
-    * is ahead of the current one. Pure integer bucket arithmetic —
-    * `(stop + bucketH − 1) div bucketH` — so both engines agree bit-wise.
-    * Grid size is (pairs present) × (includeH / bucketH): bounded by the
-    * curated vocabulary times the cohort, never by raw event volume.
+  /** Rows of the stays eligible under `window`, by a visit-keyed semi join
+    * or, for [[LastWindow]], an inner one adding `__select = los − includeH`.
+    */
+  private def eligibleRows(rows: DataFrame, visitKey: String, stayLos: DataFrame,
+      losCol: String, includeH: Int, window: TaskWindow): DataFrame = window match {
+    case FirstWindow(predW) =>
+      rows.join(stayLos.filter(col(losCol) >= includeH + predW).select(col(visitKey)),
+        Seq(visitKey), "left_semi")
+    case LastWindow =>
+      rows.join(stayLos.filter(col(losCol) >= includeH)
+        .select(col(visitKey), (col(losCol) - includeH).as("__select")), Seq(visitKey))
+  }
+
+  /** Med-active mask of window-prepared intervals on the [[bucketGrid]]
+    * kernel (reference `data_generation_icu.py:497-501`): an interval with
+    * `start < includeH` is an entry at its start bucket carrying the stop
+    * bucket `(stop + bucketH − 1) div bucketH`, and a bucket is active while
+    * the latest (largest within a bucket) stop at or before it is ahead of
+    * it — W5's positional ffill. An entry off the grid (negative start)
+    * feeds no fill, but its (visit, code) still gets all its rows.
     */
   def activeMedSignal(intervals: DataFrame, visitKey: String, codeCol: String,
-      startCol: String, stopCol: String, includeH: Int, bucketH: Int): DataFrame = {
-    val nB = (includeH / bucketH).toLong
-    val sparse = intervals.filter(col(startCol) < includeH)
-      .groupBy(col(visitKey), col(codeCol),
-        floor(col(startCol) / bucketH).cast("long").as("bucket"))
-      .agg(max(expr(s"(`$stopCol` + ${bucketH - 1}) div $bucketH"))
-        .cast("long").as("__stop_b"))
-    val grid = sparse.select(visitKey, codeCol).distinct()
-      .select(col(visitKey), col(codeCol),
-        explode(sequence(lit(0L), lit(nB - 1L))).as("bucket"))
-    val dense = grid.join(sparse, Seq(visitKey, codeCol, "bucket"), "left")
-    TimeSeriesOps.activeSignal(dense, Seq(visitKey, codeCol), "bucket",
-        col("__stop_b"), "active")
-      .drop("__stop_b")
-  }
+      startCol: String, stopCol: String, includeH: Int, bucketH: Int): DataFrame =
+    bucketGrid(intervals.filter(col(startCol) < includeH), visitKey, codeCol,
+        floor(col(startCol) / bucketH).cast("long"),
+        expr(s"(`$stopCol` + ${bucketH - 1}) div $bucketH").cast("long"),
+        includeH / bucketH)
+      .select(col(visitKey), col(codeCol), col("bucket"),
+        when(col("__at.v") > col("bucket"), 1).otherwise(0).as("active"))
 
   /** §3.3 export — collapse the tall frame into one row per stay with a
     * code → bucket-ordered value series map (the reference's nested
     * `dataDic`, `data_generation_icu.py:441-729`). Two hash aggregates:
-    * per-(stay, code) the series is assembled by sorting the collected
-    * (bucket, value) structs — array_sort on the struct orders by bucket —
-    * then per-stay the code map is built with `map_from_entries`. Series
-    * length is bounded by the bucket grid and the map by the curated code
-    * vocabulary, so rows stay small no matter the corpus size.
+    * per (stay, code) the values of [[sortedEntries]], then per stay the
+    * code map by `map_from_entries`. Series length is bounded by the bucket
+    * grid and the map by the curated code vocabulary, so rows stay small no
+    * matter the corpus size.
     */
   def stayTensors(tall: DataFrame, visitKey: String, codeCol: String,
       bucketCol: String, valueCol: String): DataFrame =
     tall
       .groupBy(col(visitKey), col(codeCol))
-      .agg(transform(
-        array_sort(collect_list(struct(col(bucketCol).as("b"), col(valueCol).as("v")))),
-        x => x.getField("v")).as("__series"))
+      .agg(transform(sortedEntries(col(bucketCol), col(valueCol)), x => x.getField("v"))
+        .as("__series"))
       .groupBy(col(visitKey))
       // entries sorted by code before map assembly: collect_list order is
       // partition/merge-order dependent, and while map CONTENT would be
@@ -495,22 +476,39 @@ object TimeSeriesGenerator {
       .as[StayRecord]
   }
 
-  /** Densify every (visit, code) to the full bucket grid and impute:
-    * ffill → bfill → per-(visit,code) mean, exactly the reference's order
-    * (`data_generation_icu.py:620-630`).
+  /** Densify every (visit, code) to the grid `[0, nBuckets)` on the
+    * [[bucketGrid]] kernel and impute ffill → bfill (`data_generation_icu.py:
+    * 620-630`): the latest non-null value at or before the bucket, else the
+    * series' first. The reference's third step, the series mean, can never
+    * fire: after both fills a series has a value in every bucket, or none.
     */
   def densifyAndImpute(bucketed: DataFrame, visitKey: String, codeCol: String,
-      nBuckets: Int): DataFrame = {
-    val grid = bucketed.select(visitKey, codeCol).distinct()
-      .select(col(visitKey), col(codeCol),
-        explode(sequence(lit(0L), lit(nBuckets - 1L))).as("bucket"))
-    val dense = grid.join(bucketed, Seq(visitKey, codeCol, "bucket"), "left")
-    val part = Seq(visitKey, codeCol)
-    val ff = WindowOps.forwardFill(dense, part, Seq("bucket"), col("value"), "__ff")
-    val fb = WindowOps.backwardFill(ff, part, Seq("bucket"), col("__ff"), "__fb")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(part.map(col): _*)
-    fb.withColumn("value_imputed", coalesce(col("__fb"), avg(col("value")).over(w)))
-      .drop("__ff", "__fb")
-  }
+      nBuckets: Int): DataFrame =
+    bucketGrid(bucketed, visitKey, codeCol, col("bucket"), col("value"), nBuckets)
+      .select(col(visitKey), col(codeCol), col("bucket"),
+        when(col("__at.b") === col("bucket"), col("__at.v")).as("value"),
+        coalesce(col("__at.v"), try_element_at(col("__obs"), lit(1)).getField("v"))
+          .cast("double").as("value_imputed"))
+
+  /** The group's `struct(b, v)` entries, sorted by bucket then value. */
+  private def sortedEntries(bucket: Column, value: Column): Column =
+    array_sort(collect_list(struct(bucket.as("b"), value.as("v"))))
+
+  /** One row per (visit, code) of `df` and bucket of `[0, nB)`, no join or
+    * window: one `groupBy` keeps the [[sortedEntries]] inside the grid with
+    * a non-null value as `__obs` (none under a null key, which an equi-join
+    * never matches), one `explode` builds the grid, and `__at` is the last
+    * `__obs` entry at or before the row's bucket. `__obs` is its own column
+    * because a lambda re-evaluates a captured expression per element.
+    */
+  private def bucketGrid(df: DataFrame, visitKey: String, codeCol: String,
+      bucket: Column, value: Column, nB: Long): DataFrame =
+    df.groupBy(col(visitKey), col(codeCol))
+      .agg(sortedEntries(when(col(visitKey).isNotNull && col(codeCol).isNotNull, bucket),
+        value).as("__obs"))
+      .withColumn("__obs", filter(col("__obs"),
+        e => e("b") >= 0 && e("b") < nB && e("v").isNotNull))
+      .withColumn("bucket", explode(sequence(lit(0L), lit(nB - 1L))))
+      .withColumn("__at", try_element_at(
+        filter(col("__obs"), e => e("b") <= col("bucket")), lit(-1)))
 }

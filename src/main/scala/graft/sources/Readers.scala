@@ -13,7 +13,11 @@ import org.apache.spark.sql.types.StructType
   */
 object Readers {
 
-  /** S1 — CSV with explicit schema; handles `.csv` and `.csv.gz` alike. */
+  /** S1 — CSV with explicit schema; handles `.csv` and `.csv.gz` alike.
+    * FAILFAST: a value that does not parse as its declared type, or a line
+    * with the wrong number of fields, fails the read instead of turning
+    * into nulls ([[permissiveCsv]] is the counted alternative).
+    */
   def csv(spark: SparkSession, path: String, schema: StructType,
       header: Boolean = true, sep: String = ",", encoding: String = "UTF-8",
       multiLine: Boolean = false): DataFrame =
@@ -24,6 +28,7 @@ object Readers {
       .option("encoding", encoding)
       .option("multiLine", multiLine.toString)
       .option("escape", "\"")
+      .option("mode", "FAILFAST")
       .csv(path)
 
   /** S3 — tab-separated mapping tables (ICD9→10 map style). */

@@ -291,6 +291,61 @@ class PipelineSpec extends AnyFunSuite {
     assert(noPredW contains ((201L, 7L, 10L, 20L)))
   }
 
+  test("activeMedSignal: a start before admission feeds no fill, its pair keeps the grid") {
+    // FirstWindow keeps a med that started before admission (start <= includeH,
+    // no lower bound): its start bucket is negative, off the [0, nB) grid
+    val stays = Seq((1L, 240L)).toDF("hadm_id", "los_h")
+    val meds = Seq(
+      (1L, 5L, -30L, 40L),  // only interval of itemid 5: b -2, stop_b 2
+      (1L, 7L, -30L, 60L),  // b -2, stop_b 3 — must not fill bucket 0
+      (1L, 7L, 30L, 40L)    // b 1, stop_b 2
+    ).toDF("hadm_id", "itemid", "start_h", "stop_h")
+    val got = TimeSeriesGenerator.activeMedSignal(
+        TimeSeriesGenerator.shiftClipIntervals(meds, "hadm_id", "start_h",
+          "stop_h", stays, "los_h", includeH = 72, window = FirstWindow()),
+        "hadm_id", "itemid", "start_h", "stop_h", includeH = 72, bucketH = 24)
+      .select("hadm_id", "itemid", "bucket", "active")
+      .as[(Long, Long, Long, Int)].collect().sorted.toSeq
+    assert(got === Seq(
+      (1L, 5L, 0L, 0), (1L, 5L, 1L, 0), (1L, 5L, 2L, 0),
+      (1L, 7L, 0L, 0), (1L, 7L, 1L, 1), (1L, 7L, 2L, 0)))
+  }
+
+  test("densifyAndImpute: all-null series stays null, null buckets are filled over") {
+    val bucketed = Seq[(Long, String, Long, Option[Double])](
+      (1L, "a", 0L, Some(10.0)), (1L, "a", 1L, Some(20.0)),
+      (1L, "a", 2L, None), (1L, "a", 3L, Some(40.0)),
+      (1L, "b", 0L, None), (1L, "b", 1L, Some(5.0)),
+      (1L, "c", 1L, None), (1L, "c", 3L, None),
+      (1L, "d", 7L, Some(1.0))  // off the grid only
+    ).toDF("hadm_id", "code", "bucket", "value")
+    val dense = TimeSeriesGenerator.densifyAndImpute(bucketed, "hadm_id", "code", nBuckets = 5)
+    assert(dense.columns.toSeq === Seq("hadm_id", "code", "bucket", "value", "value_imputed"))
+    val got = dense.as[(Long, String, Long, Option[Double], Option[Double])].collect()
+      .groupBy(_._2).map { case (c, rs) => c -> rs.sortBy(_._3).map(r => (r._4, r._5)).toSeq }
+    val (n, d) = (None, (x: Double) => Some(x))
+    assert(got("a") === Seq((d(10), d(10)), (d(20), d(20)), (n, d(20)), (d(40), d(40)), (n, d(40))))
+    assert(got("b") === Seq((n, d(5)), (d(5), d(5)), (n, d(5)), (n, d(5)), (n, d(5))))
+    assert(got("c") === Seq.fill(5)((n, n)))
+    assert(got("d") === Seq.fill(5)((n, n)))
+  }
+
+  test("densifyAndImpute and activeMedSignal plan no Window and no join") {
+    val bucketed = Seq((1L, "a", 0L, 1.0), (1L, "a", 2L, 2.0))
+      .toDF("hadm_id", "code", "bucket", "value")
+    val meds = Seq((1L, 7L, 0L, 30L)).toDF("hadm_id", "itemid", "start_h", "stop_h")
+    for (df <- Seq(
+        TimeSeriesGenerator.densifyAndImpute(bucketed, "hadm_id", "code", nBuckets = 3),
+        TimeSeriesGenerator.activeMedSignal(meds, "hadm_id", "itemid", "start_h",
+          "stop_h", includeH = 72, bucketH = 24))) {
+      val plan = df.queryExecution.sparkPlan
+      val bad = plan.collect { case p if Seq("Window", "Join", "Cartesian")
+        .exists(p.nodeName.contains) => p.nodeName }
+      assert(bad.isEmpty, s"${bad.mkString(", ")} in\n$plan")
+      assert(plan.collect { case p if p.nodeName == "Generate" => p }.size === 1)
+    }
+  }
+
   test("facade dialect: ICU stay_id/intime/outtime bindings are bit-identical") {
     // the reference's ICU flag swaps hadm_id/admittime/dischtime for
     // stay_id/intime/outtime (day_intervals_cohort.py:282-307); the

@@ -99,4 +99,22 @@ class ReadersSpec extends AnyFunSuite {
     assert(got.filter($"_corrupt_record".isNull)
       .agg(org.apache.spark.sql.functions.sum($"size")).head.getLong(0) === 40L)
   }
+
+  test("csv fails fast on a value of the wrong type and on a short line") {
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("name", StringType), StructField("v", DoubleType)))
+    def read(body: String) = {
+      val dir = tmpDir()
+      Files.write(java.nio.file.Paths.get(dir, "feed.csv"),
+        ("id,name,v\n1,alpha,1.5\n" + body).getBytes(StandardCharsets.UTF_8))
+      Readers.csv(spark, dir, schema).collect()
+    }
+    assert(read("2,beta,2.5\n").length === 2) // clean input reads as before
+    def causes(e: Throwable) = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+    for (bad <- Seq("x2,beta,2.5\n", "2,beta\n")) {
+      val e = intercept[Exception](read(bad))
+      assert(causes(e).exists(c => String.valueOf(c.getMessage).contains("FAILFAST")),
+        s"no FAILFAST parse error for ${bad.trim}: $e")
+    }
+  }
 }
