@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
+import BenchSession.{force, releaseQueryBlocks, warmUp}
 
 /** Driver-run benchmark: times every SparkEntry query on
   * `SPARK_GRAFT_SF_DIR`, printing ONE JSON line
@@ -15,21 +14,11 @@ import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
   * single-shot pass randomly attributes those stalls to whichever query
   * they land on.
   *
-  * The timed action hashes every output column
-  * (`bit_xor(xxhash64(*))` — xor, so ANSI mode can't overflow; variadic
-  * hash, so no per-row struct allocation)
-  * instead of `.count()`: under count, Catalyst prunes unreferenced
-  * projections, so map-only queries would time the scan rather than the
-  * work. The hash forces every projected column to materialize while
-  * keeping the result a single row per partition — the closest cheap
-  * analogue of "the user actually consumed the frame".
+  * The timed action is [[BenchSession.force]], which hashes every output
+  * column — the closest cheap analogue of "the user actually consumed the
+  * frame".
   */
 object Bench {
-
-  private def force(df: DataFrame): Long = {
-    val r = df.agg(bit_xor(xxhash64(df.columns.map(col): _*))).collect()(0)
-    if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
   def main(args: Array[String]): Unit = {
     // protocol knobs: `--passes 5 --report min` (or SPARK_GRAFT_PASSES /
     // SPARK_GRAFT_REPORT). The artifact records both, so round-over-round
@@ -50,14 +39,11 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // session recipe (master local[$SPARK_GRAFT_CPUS], AQE, plan lint,
     // committer, tmpfs local dir) lives in BenchSession so PlanDump /
-    // StageProfile / QueryProfile profile EXACTLY the bench's settings
+    // StageProfile profile EXACTLY the bench's settings
     val spark = BenchSession.build()
     spark.sparkContext.setLogLevel("WARN")
 
-    val warmupDir = "/root/testdata/sf0.001"
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try force(fn(spark, warmupDir)) catch { case _: Throwable => () }
-    }
+    warmUp(spark, sfDir, SparkEntry.queries.keys)
 
     // prime the file-relation cache at the timed scale so listing/footer
     // costs don't land on whichever query runs first. Wrapped: a
@@ -86,14 +72,10 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
         }
         val t = (System.nanoTime() - t0) / 1e9
-        // drop the query's leftover localCheckpoint blocks (outside the
-        // timed window): without this every checkpointed intermediate in
-        // the suite stays pinned in the block manager until the run ends,
-        // and the accumulated dead blocks degrade later queries. Shared
-        // (pinned) frames are exempt — they are the cross-query reuse.
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => SparkEntry.isSharedRdd(id) }
-          .values.foreach(_.unpersist(false))
+        // outside the timed window: without this every checkpointed
+        // intermediate in the suite stays pinned in the block manager until
+        // the run ends, and the accumulated dead blocks degrade later queries
+        releaseQueryBlocks(spark)
         name -> t
       }
     }

@@ -1,9 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.Paths
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
 
 /** The ONE SparkSession recipe for the bench, `Verify` and the dev tools
-  * (PlanDump, StageProfile, QueryProfile): each previously hand-copied the config
+  * (PlanDump, StageProfile): each previously hand-copied the config
   * block and they had already drifted (committer settings present in some,
   * absent in others), weakening the claim that dumped plans/profiles are
   * exactly the ones the bench executes. Core count comes from
@@ -41,4 +44,32 @@ object BenchSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
   }
+
+  /** The timed action of the bench and the dev tools: `bit_xor(xxhash64(*))`
+    * over every output column (xor, so ANSI mode can't overflow; variadic
+    * hash, so no per-row struct allocation). Unlike `.count()`, which lets
+    * Catalyst prune unreferenced projections, it makes every projected
+    * column materialize while keeping the result one row per partition.
+    */
+  private[graft] def force(df: DataFrame): Long = {
+    val r = df.agg(bit_xor(xxhash64(df.columns.map(col): _*))).collect()(0)
+    if (r.isNullAt(0)) 0L else r.getLong(0)
+  }
+
+  /** Untimed warm-up (JIT, codegen, parquet footers): forces each named
+    * query once on the sf0.001 tables beside `sfDir`, ignoring failures.
+    */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String, names: Iterable[String]): Unit = {
+    val small = Paths.get(sfDir).resolveSibling("sf0.001").toString
+    names.foreach(n =>
+      try force(SparkEntry.queries(n)(spark, small)) catch { case _: Throwable => () })
+  }
+
+  /** Drops a finished query's leftover localCheckpoint blocks; the shared
+    * (pinned) frames are exempt — they are the cross-query reuse.
+    */
+  private[graft] def releaseQueryBlocks(spark: SparkSession): Unit =
+    spark.sparkContext.getPersistentRDDs
+      .filterNot { case (id, _) => SparkEntry.isSharedRdd(id) }
+      .values.foreach(_.unpersist(false))
 }

@@ -3,8 +3,8 @@ package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
+
+import BenchSession.{force, releaseQueryBlocks, warmUp}
 
 /** Dev-only stage-level attribution: for each named SparkEntry query, the
   * wall time of the Bench action alongside the number of Spark jobs,
@@ -12,18 +12,18 @@ import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}
   * does too many exchanges/jobs" (stage-count floor) from "the tasks are
   * slow" (per-task work) and "neither" (driver-side planning time).
   *
-  * Usage: runMain graft.StageProfile <sfDir> <q1,q2,...>
+  * Each query runs `reps` times in isolation under the Bench session
+  * settings, after an untimed warm-up at sf0.001 and with per-query block
+  * cleanup — the tool for attributing a slow suite row without paying a
+  * full bench pass.
+  *
+  * Usage: runMain graft.StageProfile <sfDir> <reps> <q1,q2,...>
   */
 object StageProfile {
-  private def force(df: DataFrame): Unit = {
-    df.agg(bit_xor(xxhash64(df.columns.map(col): _*))).collect(); ()
-  }
-
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: StageProfile <sfDir> <q1,q2,...>")
-    val d = args(0)
-    val names = args(1).split(",").toSeq
+    require(args.length >= 3,
+      "usage: StageProfile <sfDir> <reps> <q1,q2,...>")
+    val (d, reps, names) = (args(0), args(1).toInt, args(2).split(",").toSeq)
     val spark = BenchSession.build()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -45,15 +45,11 @@ object StageProfile {
       }
     })
 
-    // warmup at sf0.001 (JIT + codegen + footer cache)
-    names.foreach { n =>
-      try force(SparkEntry.queries(n)(spark, "/root/testdata/sf0.001"))
-      catch { case _: Throwable => () }
-    }
+    warmUp(spark, d, names)
     SparkEntry.resetShared(spark)
     println(f"${"query"}%-34s ${"wall"}%7s ${"jobs"}%5s ${"stage"}%5s " +
       f"${"tasks"}%6s ${"taskS"}%7s ${"shufKB"}%8s")
-    (1 to 2).foreach { rep =>
+    (1 to reps).foreach { rep =>
       names.foreach { n =>
         Thread.sleep(150) // let listener drain
         val (j0, s0, t0, m0, w0) =
@@ -66,9 +62,7 @@ object StageProfile {
         println(f"$n%-34s $wall%7.3f ${jobs.get - j0}%5d ${stages.get - s0}%5d " +
           f"${tasks.get - t0}%6d ${(taskMs.get - m0) / 1e3}%7.2f " +
           f"${(shufWrite.get - w0) / 1024}%8d")
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => SparkEntry.isSharedRdd(id) }
-          .values.foreach(_.unpersist(false))
+        releaseQueryBlocks(spark)
       }
       println(s"--- end rep $rep")
     }

@@ -202,21 +202,21 @@ object FeatureExtractor {
 object FeatureSelector {
 
   /** Per-code summary: mean events per (visit, code), missing count/rate of
-    * `valueCol`, total rows — one pass of hash aggregates.
+    * `valueCol`, total rows — one chain of two hash aggregates, per (visit,
+    * code) then per code. Events with a null code are left out.
     */
   def summary(events: DataFrame, visitKey: String, codeCol: String,
-      valueCol: Column): DataFrame = {
-    val perVisit = events.groupBy(col(visitKey), col(codeCol))
-      .agg(count(lit(1)).as("__n"))
+      valueCol: Column): DataFrame =
+    events.filter(col(codeCol).isNotNull)
+      .groupBy(col(visitKey), col(codeCol))
+      .agg(count(lit(1)).as("__n"),
+        sum(when(valueCol.isNull || valueCol === 0.0, 1L).otherwise(0L)).as("__miss"))
       .groupBy(col(codeCol))
-      .agg(round(avg(col("__n")), 6).as("mean_frequency"))
-    val missing = events.groupBy(col(codeCol)).agg(
-      sum(when(valueCol.isNull || valueCol === 0.0, 1L).otherwise(0L)).as("missing_count"),
-      count(lit(1)).as("total_count"))
-    perVisit.join(missing, Seq(codeCol))
+      .agg(round(avg(col("__n")), 6).as("mean_frequency"),
+        sum(col("__miss")).as("missing_count"),
+        sum(col("__n")).as("total_count"))
       .withColumn("missing_rate",
         round(col("missing_count").cast("double") / col("total_count"), 6))
-  }
 
   /** Keep only events whose code is in the reviewed list (P6 semi-join —
     * the reference re-reads a user-edited CSV; any one-column frame works).

@@ -24,19 +24,14 @@ object CleaningOps {
     * (the reference inherits pandas' value_counts order; we pin it).
     */
   def dominantCategoryFilter(df: DataFrame, key: String, category: String, cutoff: Double): DataFrame = {
-    val counts = df.groupBy(key, category).agg(count(lit(1)).as("__cnt"))
-    val wRank = Window.partitionBy(key).orderBy(col("__cnt").desc, col(category).asc)
-    val wKey = Window.partitionBy(key)
-    val stats = counts
-      .withColumn("__rn", row_number().over(wRank))
-      .withColumn("__tot", sum(col("__cnt")).over(wKey))
-      .withColumn("__ndist", count(lit(1)).over(wKey))
-      .filter(col("__rn") === 1)
-      .select(
-        col(key),
-        col(category).as("__mode"),
-        (col("__cnt").cast("double") / col("__tot")).as("__share"),
-        col("__ndist"))
+    // the struct minimum is the mode: higher count, then smaller category
+    // (struct order puts a null category first, as `asc` does)
+    val stats = df.groupBy(key, category).agg(count(lit(1)).as("__cnt"))
+      .groupBy(key)
+      .agg(min(struct((-col("__cnt")).as("n"), col(category).as("c"))).as("__top"),
+        sum(col("__cnt")).as("__tot"), count(lit(1)).as("__ndist"))
+      .select(col(key), col("__top.c").as("__mode"),
+        ((-col("__top.n")).cast("double") / col("__tot")).as("__share"), col("__ndist"))
     df.join(stats, Seq(key), "left")
       .filter(!(col("__ndist") > 1 && col("__share") > cutoff && col(category) =!= col("__mode")))
       .drop("__mode", "__share", "__ndist")

@@ -94,11 +94,11 @@ object FoldOps {
     *
     * Scale shape: sources are FEW and HUGE (languages, domains), so the
     * in-source rank is NOT a per-source window (that sorts a whole source
-    * in one task — the exact hazard [[perStratumTopN]] documents). Instead:
-    * one [[RankOps.globalRowNumber]] ordered by (source, orderCols) minus
-    * per-source prefix offsets from a triangular join over the ≤|sources|
-    * counts frame; the final position is a second distributed rank over
-    * virtual time. Nothing funnels through one task at any size.
+    * in one task — the exact hazard [[perStratumTopN]] documents). It is
+    * the [[RankOps.prefixSums]] kernel's running count with `partKeys` =
+    * [source]; the final position is a [[RankOps.globalRowNumber]] over
+    * virtual time. Nothing funnels through one task at any size. A null
+    * source is a source of its own (default weight), never dropped.
     *
     * `orderCols` must totally order rows WITHIN each source. Sources
     * missing from `weights` get weight `defaultWeight`. Virtual-time ties
@@ -107,18 +107,10 @@ object FoldOps {
   def interleaveByWeight(df: DataFrame, source: Column, orderCols: Seq[Column],
       weights: Map[String, Double], defaultWeight: Double = 1.0,
       posName: String = "pos"): DataFrame = {
-    val g = RankOps.globalRowNumber(df, source.asc +: orderCols, "__il_g")
-    val counts = df.groupBy(source.as("__il_s")).agg(count(lit(1)).as("__il_n"))
-    val offs = counts.alias("a")
-      .join(counts.alias("b"), col("b.__il_s") < col("a.__il_s"), "left")
-      .groupBy(col("a.__il_s").as("__il_s"))
-      .agg(coalesce(sum(col("b.__il_n")), lit(0L)).as("__il_off"))
     val wl = typedLit(weights)
-    val ranked = g.join(offs, source === col("__il_s"))
-      .withColumn("src_rank", col("__il_g") - col("__il_off"))
+    val ranked = RankOps.prefixSums(df, Seq(source), orderCols, Seq(lit(1L) -> "src_rank"))
       .withColumn("__il_vt", (col("src_rank").cast("double") - 0.5) /
         coalesce(element_at(wl, source.cast("string")), lit(defaultWeight)))
-      .drop("__il_s", "__il_n", "__il_off", "__il_g")
     RankOps.globalRowNumber(ranked,
         Seq(col("__il_vt").asc, source.asc, col("src_rank").asc), posName)
       .drop("__il_vt")
@@ -256,41 +248,19 @@ object FoldOps {
     * predecessor total crosses a capacity boundary). Oversized rows
     * (> capacity) get a bin of their own, as in standard packing practice.
     *
-    * The prefix sum is two-phase (`RankOps.globalRowNumber`'s scheme,
-    * generalized per stratum): range-partition on (stratum, order), local
-    * cumsum per range bucket, then per-(stratum, bucket) totals turned
-    * into prefix offsets by a tiny triangular join — strata are typically
-    * few and huge, so a plain per-stratum window would funnel a whole
-    * stratum through one task.
+    * The prefix sum is the [[RankOps.prefixSums]] kernel with `partKeys`
+    * as its strata — strata are typically few and huge, so a plain
+    * per-stratum window would funnel a whole stratum through one task. A
+    * null stratum is packed as a stratum of its own, never dropped.
     */
   def packByCumsum(df: DataFrame, partKeys: Seq[String], orderCols: Seq[String],
       size: Column, capacity: Int, name: String = "bin_id"): DataFrame = {
-    val keys = (partKeys ++ orderCols).map(col)
-    // checkpoint-pinned for the same reason as RankOps.pinnedRangeBuckets:
-    // `ranged` feeds both the local-cumsum window and the per-bucket totals,
-    // and repartitionByRange samples fresh boundaries per execution — the
-    // two consumers must see ONE bucketing or bins mix two numberings.
-    val ranged = df.repartitionByRange(keys: _*)
-      .withColumn("__pb_pid", spark_partition_id())
-      .localCheckpoint(false)
-    val bucketKeys = partKeys.map(col) :+ col("__pb_pid")
-    val wLocal = Window.partitionBy(bucketKeys: _*)
-      .orderBy(orderCols.map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val local = ranged.withColumn("__pb_cum", sum(size).over(wLocal))
-    val totals = ranged.groupBy(bucketKeys: _*).agg(sum(size).as("__pb_n"))
-    val offsets = totals.alias("a")
-      .join(totals.alias("b"),
-        partKeys.map(k => col(s"a.$k") === col(s"b.$k"))
-          .foldLeft(col("b.__pb_pid") < col("a.__pb_pid"))(_ && _), "left")
-      .groupBy(partKeys.map(k => col(s"a.$k").as(k)) :+
-        col("a.__pb_pid").as("__pb_pid"): _*)
-      .agg(coalesce(sum(col("b.__pb_n")), lit(0L)).as("__pb_off"))
-    local.join(offsets, partKeys :+ "__pb_pid")
-      .withColumn(name,
-        floor((col("__pb_cum") + col("__pb_off") - size) / lit(capacity.toDouble))
-          .cast("int"))
-      .drop("__pb_pid", "__pb_cum", "__pb_off")
+    val packed = RankOps.prefixSums(df, partKeys.map(col), orderCols.map(col),
+        Seq(size -> "__pb_cum"))
+      .withColumn(name, floor((col("__pb_cum") - size) / lit(capacity.toDouble)).cast("int"))
+      .drop("__pb_cum")
+    // output contract: the partition keys lead
+    packed.select((partKeys ++ packed.columns.filterNot(partKeys.contains)).map(col): _*)
   }
 
   /** Inverse-frequency class weights — `n_total / (k · n_class)` per label,

@@ -226,45 +226,30 @@ object MetricsOps {
     * AUC = (Σ ranks of positives − n⁺(n⁺+1)/2) / (n⁺ n⁻), with a
     * caller-supplied unique `tie` column pinning the rank order.
     *
-    * Ranks come from `RankOps.globalRowNumber` (range-partition + per-bucket
-    * window + prefix offsets), so a 10⁹-row prediction table never passes
-    * through a single-partition exchange — the old `Window.orderBy` form
-    * did, and was this operator's scale ceiling.
+    * Ranks ride the [[RankOps.prefixSums]] kernel's two private pieces —
+    * its pinned range bucketing and its exclusive offsets — so a 10⁹-row
+    * prediction table never passes through a single-partition exchange.
+    * Σ globalRank(pos) = Σ_buckets [ localRankSum(pos) + nPos(bucket)·offset(bucket) ],
+    * so the big frame is aggregated per range bucket FIRST and the global
+    * rank is never joined back onto it.
     */
   def aurocRankSum(df: DataFrame, score: Column, label: Column, tie: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // Σ globalRank(pos) = Σ_buckets [ localRankSum(pos) + nPos(bucket)·offset(bucket) ]
-    // — so the big frame is aggregated per range bucket FIRST and the
-    // global rank never needs to be joined back onto it.
     val base = df.select(label.cast("long").as("__lab"), score.as("__s"), tie.as("__t"))
-    // localCheckpoint pins ONE bucketing: repartitionByRange SAMPLES its
-    // range boundaries per execution, and `perBucket` below is consumed
-    // twice by the triangular self-join — without the pin, local rank sums
-    // from one sampling combine with offsets from another, giving wrong,
-    // nondeterministic AUC (observed at sf0.1). Exchange reuse is not a
-    // guarantee; the checkpoint is.
-    val ranged = base.repartitionByRange(col("__s").asc, col("__t").asc)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(false)
-    val w = Window.partitionBy(col("__pid")).orderBy(col("__s").asc, col("__t").asc)
-    val perBucket = ranged
+    val order = Seq(col("__s").asc, col("__t").asc)
+    val w = Window.partitionBy(col("__gr_pid")).orderBy(order: _*)
+    val perBucket = RankOps.pinnedRangeBuckets(base, order)
       .withColumn("__lrn", row_number().over(w).cast("long"))
-      .groupBy(col("__pid"))
+      .groupBy(col("__gr_pid"))
       .agg(
         count(lit(1)).as("__bn"),
         sum(col("__lab")).as("__bpos"),
         sum(when(col("__lab") === 1, col("__lrn")).otherwise(0L)).as("__blsum"))
-    // prefix offsets over the ≤ shuffle-partitions-row frame (triangular
-    // join, never a single-partition window)
-    val withOff = perBucket.alias("a")
-      .join(perBucket.alias("b"), col("b.__pid") < col("a.__pid"), "left")
-      .groupBy(col("a.__pid"), col("a.__bn"), col("a.__bpos"), col("a.__blsum"))
-      .agg(coalesce(sum(col("b.__bn")), lit(0L)).as("__off"))
-    withOff
+    RankOps.exclusiveOffsets(perBucket, Nil, Seq("__bn"))
       .agg(
-        sum(col("a.__blsum") + col("a.__bpos") * col("__off")).as("__rsum"),
-        sum(col("a.__bpos")).as("__npos"),
-        sum(col("a.__bn")).as("__n"))
+        sum(col("__blsum") + col("__bpos") * col("__bn_off")).as("__rsum"),
+        sum(col("__bpos")).as("__npos"),
+        sum(col("__bn")).as("__n"))
       .select(round(
         (col("__rsum") - col("__npos") * (col("__npos") + 1) / 2).cast("double") /
           (col("__npos") * (col("__n") - col("__npos"))), 6).as("auc"))

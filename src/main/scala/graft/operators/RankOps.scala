@@ -4,26 +4,29 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Distributed exact ranking — global `row_number`-style ids without ever
-  * funneling the frame through one task.
+/** Distributed exact prefix sums — global ranks, running sums and packing
+  * bins over unbounded frames without ever funneling the frame through one
+  * task (a `Window.orderBy` with no partition plans an `Exchange
+  * SinglePartition`, a non-starter for a billion-row prediction table or a
+  * corpus-scale vocabulary).
   *
-  * The classic `Window.orderBy(...)` (no partition) plan inserts an
-  * `Exchange SinglePartition`, which is a non-starter for unbounded frames
-  * (a billion-row prediction table, a corpus-scale vocabulary). The
-  * two-phase form here is the standard alternative:
+  * Every operator here, and `FoldOps.packByCumsum`,
+  * `FoldOps.interleaveByWeight` and `MetricsOps.aurocRankSum`, rides one
+  * kernel, [[prefixSums]] over `(partKeys, sortCols, values)`:
   *
-  *   1. `repartitionByRange` on the sort key — range buckets are globally
-  *      ordered by construction, each ~n/P rows;
-  *   2. a per-bucket `row_number` window (keyed on the bucket id, so the
-  *      window shuffle is P-way, never 1-way);
-  *   3. per-bucket row counts (≤ P rows, P = shuffle partitions) turned
-  *      into prefix offsets with a tiny triangular self-join — NOT a
-  *      single-partition window, so the whole plan stays exchange-parallel;
-  *   4. global rank = bucket offset + local rank.
+  *   1. [[pinnedRangeBuckets]]: `repartitionByRange` on `partKeys ++
+  *      sortCols`, the bucket id kept as `__gr_pid` and the result pinned
+  *      with a lazy localCheckpoint;
+  *   2. one running-sum window per `(partKeys, __gr_pid)` — keyed on the
+  *      bucket, so the window shuffle is P-way, never 1-way;
+  *   3. one totals aggregate per `(partKeys, __gr_pid)`, turned into
+  *      exclusive offsets by [[exclusiveOffsets]]: a triangular self-join,
+  *      null-safe on `partKeys`, over at most (strata + P) rows;
+  *   4. one join of the offsets back onto the rows: prefix = local running
+  *      sum + offset.
   *
-  * The range-bucketed frame is pinned with a lazy localCheckpoint (see
-  * [[RankOps.pinnedRangeBuckets]]) so the count branch and the window
-  * branch provably see the SAME bucketing and the input is shuffled once.
+  * A global rank is the kernel over `lit(1L)`: a running count over a ROWS
+  * frame equals `row_number` under a total order.
   */
 object RankOps {
 
@@ -31,55 +34,12 @@ object RankOps {
     * for deterministic output), assigned without a single-partition
     * exchange. Adds `outName` (long) to the frame.
     */
-  def globalRowNumber(df: DataFrame, sortCols: Seq[Column], outName: String): DataFrame = {
-    val ranged = pinnedRangeBuckets(df, sortCols)
-    val w = Window.partitionBy(col("__gr_pid")).orderBy(sortCols: _*)
-    val local = ranged.withColumn("__gr_lrn", row_number().over(w).cast("long"))
-    local.join(bucketOffsets(ranged), Seq("__gr_pid"))
-      .withColumn(outName, col("__gr_lrn") + col("__gr_off"))
-      .drop("__gr_pid", "__gr_lrn", "__gr_off")
-  }
-
-  /** Range-bucket the frame on `sortCols` and PIN the bucketing with a lazy
-    * localCheckpoint. `repartitionByRange` samples fresh range boundaries on
-    * every execution, and the bucketed frame always has two consumers here
-    * (the window branch and the offsets branch); if each triggered its own
-    * execution, local ranks from one sampling would combine with offsets
-    * from another — wrong, nondeterministic output. ReusedExchange usually
-    * collapses the two executions into one, but it is an optimization, not
-    * a contract (exactly this broke `aurocRankSum` before it pinned);
-    * the checkpoint makes single-execution semantics explicit.
-    */
-  private[operators] def pinnedRangeBuckets(df: DataFrame, sortCols: Seq[Column]): DataFrame =
-    df.repartitionByRange(sortCols: _*)
-      .withColumn("__gr_pid", spark_partition_id())
-      .localCheckpoint(false)
-
-  /** (__gr_pid, __gr_off): rows preceding each range bucket. The counts
-    * frame is bounded by the shuffle-partition count, so the triangular
-    * join is O(P²) tiny and fully distributed.
-    */
-  private[operators] def bucketOffsets(ranged: DataFrame): DataFrame =
-    bucketOffsetsOf(ranged, count(lit(1)).as("__gr_n"))
-
-  /** Generalization: prefix offsets of an arbitrary per-bucket aggregate
-    * (row counts for ranking, value sums for prefix sums). Same bounded
-    * triangular join, same exchange-parallel plan.
-    */
-  private[operators] def bucketOffsetsOf(ranged: DataFrame, perBucket: Column): DataFrame = {
-    val counts = ranged.groupBy(col("__gr_pid")).agg(perBucket.as("__gr_n"))
-    counts.alias("a")
-      .join(counts.alias("b"), col("b.__gr_pid") < col("a.__gr_pid"), "left")
-      .groupBy(col("a.__gr_pid").as("__gr_pid"))
-      .agg(coalesce(sum(col("b.__gr_n")), lit(0L)).as("__gr_off"))
-  }
+  def globalRowNumber(df: DataFrame, sortCols: Seq[Column], outName: String): DataFrame =
+    prefixSums(df, Nil, sortCols, Seq(lit(1L) -> outName))
 
   /** Exact global running sum of `value` in `sortCols` order (a total order
-    * for deterministic output), without a single-partition exchange — the
-    * same two-phase scheme as [[globalRowNumber]] with sums in place of
-    * counts. Adds `outName` = sum of `value` over all rows at-or-before the
-    * current row. The bucketing is checkpoint-pinned so the window branch
-    * and the per-bucket totals see one execution.
+    * for deterministic output), without a single-partition exchange. Adds
+    * `outName` = sum of `value` over all rows at-or-before the current row.
     */
   def globalCumsum(df: DataFrame, sortCols: Seq[Column], value: Column,
       outName: String): DataFrame =
@@ -91,30 +51,68 @@ object RankOps {
     * N (PR curves, CDF pairs) pays exactly the single-cumsum plan cost.
     */
   def globalCumsums(df: DataFrame, sortCols: Seq[Column],
-      values: Seq[(Column, String)]): DataFrame = {
-    val ranged = pinnedRangeBuckets(df, sortCols)
-    val w = Window.partitionBy(col("__gr_pid")).orderBy(sortCols: _*)
+      values: Seq[(Column, String)]): DataFrame =
+    prefixSums(df, Nil, sortCols, values)
+
+  /** The kernel: for each `(value, name)`, adds `name` = the sum of `value`
+    * over the rows of the same `partKeys` group at-or-before the current
+    * row in `sortCols` order (a total order within each group for
+    * deterministic output). Groups are compared null-safely, so a null key
+    * is a group of its own, placed first like a null-first
+    * `Window.partitionBy(partKeys).orderBy(sortCols)`. Strata may be few and
+    * huge: a group spanning several range buckets is summed across them.
+    */
+  private[operators] def prefixSums(df: DataFrame, partKeys: Seq[Column],
+      sortCols: Seq[Column], values: Seq[(Column, String)]): DataFrame = {
+    val keys = partKeys.indices.map(i => s"__gr_k$i")
+    val ranged = pinnedRangeBuckets(df, partKeys ++ sortCols)
+    val w = Window.partitionBy(partKeys :+ col("__gr_pid"): _*).orderBy(sortCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = values.foldLeft(ranged) { case (acc, (v, name)) =>
-      acc.withColumn(s"__gr_lcs_$name", sum(v).over(w))
+      acc.withColumn(s"__gr_cum_$name", sum(v).over(w))
     }
-    // one triangular pass produces every column's prefix offset
-    val perBucket = ranged.groupBy(col("__gr_pid")).agg(
-      sum(values.head._1).as(s"__gr_n_${values.head._2}"),
-      values.tail.map { case (v, name) => sum(v).as(s"__gr_n_$name") }: _*)
-    val offs = perBucket.alias("a")
-      .join(perBucket.alias("b"), col("b.__gr_pid") < col("a.__gr_pid"), "left")
-      .groupBy(col("a.__gr_pid").as("__gr_pid"))
-      .agg(
-        coalesce(sum(col(s"b.__gr_n_${values.head._2}")), lit(0L))
-          .as(s"__gr_off_${values.head._2}"),
-        values.tail.map { case (_, name) =>
-          coalesce(sum(col(s"b.__gr_n_$name")), lit(0L)).as(s"__gr_off_$name")
-        }: _*)
-    values.foldLeft(local.join(offs, Seq("__gr_pid"))) { case (acc, (_, name)) =>
-      acc.withColumn(name, col(s"__gr_lcs_$name") + col(s"__gr_off_$name"))
-        .drop(s"__gr_lcs_$name", s"__gr_off_$name")
-    }.drop("__gr_pid")
+    val sums = values.map { case (v, name) => sum(v).as(s"__gr_n_$name") }
+    val totals = ranged
+      .groupBy(partKeys.zip(keys).map { case (k, n) => k.as(n) } :+ col("__gr_pid"): _*)
+      .agg(sums.head, sums.tail: _*)
+    val offs = exclusiveOffsets(totals, keys, values.map(v => s"__gr_n_${v._2}"))
+      .withColumnRenamed("__gr_pid", "__gr_opid")
+    val on = partKeys.zip(keys).map { case (k, n) => k <=> col(n) }
+      .foldLeft(col("__gr_pid") === col("__gr_opid"))(_ && _)
+    values.foldLeft(local.join(offs, on)) { case (acc, (_, name)) =>
+      acc.withColumn(name, col(s"__gr_cum_$name") + col(s"__gr_n_${name}_off"))
+    }.drop(offs.columns ++ values.map(v => s"__gr_cum_${v._2}") :+ "__gr_pid": _*)
+  }
+
+  /** Range-bucket the frame on `keys` and PIN the bucketing with a lazy
+    * localCheckpoint. `repartitionByRange` samples fresh range boundaries on
+    * every execution, and the bucketed frame always has two consumers (the
+    * window branch and the totals branch); if each triggered its own
+    * execution, local sums from one sampling would combine with offsets
+    * from another — wrong, nondeterministic output. ReusedExchange usually
+    * collapses the two executions into one, but it is an optimization, not
+    * a contract; the checkpoint makes single-execution semantics explicit.
+    */
+  private[operators] def pinnedRangeBuckets(df: DataFrame, keys: Seq[Column]): DataFrame =
+    df.repartitionByRange(keys: _*)
+      .withColumn("__gr_pid", spark_partition_id())
+      .localCheckpoint(false)
+
+  /** Per-bucket totals → exclusive offsets. `totals` has one row per
+    * (`partKeys`, `__gr_pid`); every one of its columns passes through, and
+    * each `sums` column `c` gains `c_off` = the sum of `c` over the
+    * earlier buckets of the same (null-safe) `partKeys` group. The frame is
+    * bounded by strata + shuffle partitions, so the triangular join is tiny
+    * and fully distributed — NOT a single-partition window.
+    */
+  private[operators] def exclusiveOffsets(totals: DataFrame, partKeys: Seq[String],
+      sums: Seq[String]): DataFrame = {
+    val offs = sums.map(c => coalesce(sum(col(s"b.$c")), lit(0L)).as(s"${c}_off"))
+    totals.alias("a")
+      .join(totals.alias("b"), partKeys.map(k => col(s"a.$k") <=> col(s"b.$k"))
+        .foldLeft(col("b.__gr_pid") < col("a.__gr_pid"))(_ && _), "left")
+      .groupBy(totals.columns.map(c => col(s"a.$c").as(c)): _*)
+      .agg(offs.head, offs.tail: _*)
   }
 
   /** Dense vocabulary encoding (SURVEY F23): 1-based contiguous ids over the

@@ -428,15 +428,21 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("feature summary + user selection flow") {
-    val events = Seq(
-      (101L, "hr", Some(80.0)), (101L, "hr", Some(85.0)), (201L, "hr", None),
-      (101L, "rr", Some(20.0)), (201L, "bp", Some(0.0))
+    // a null visit is a visit group of its own; a null code is left out
+    val events = Seq[(Option[Long], String, Option[Double])](
+      (Some(101L), "hr", Some(80.0)), (Some(101L), "hr", Some(85.0)),
+      (Some(201L), "hr", None), (Some(101L), "rr", Some(20.0)),
+      (Some(201L), "bp", Some(0.0)), (None, "rr", Some(22.0)), (Some(301L), null, Some(1.0))
     ).toDF("hadm_id", "code", "valuenum")
-    val summ = FeatureSelector.summary(events, "hadm_id", "code", $"valuenum")
-      .collect().map(r => r.getString(0) ->
+    val summary = FeatureSelector.summary(events, "hadm_id", "code", $"valuenum")
+    assert(summary.columns.toSeq ===
+      Seq("code", "mean_frequency", "missing_count", "total_count", "missing_rate"))
+    val summ = summary.collect().map(r => r.getString(0) ->
         (r.getDouble(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
+    assert(summ.keySet === Set("hr", "rr", "bp"))
     assert(summ("hr") === ((1.5, 1L, 3L, 0.333333))) // avg of counts {2,1}; one null
     assert(summ("bp") === ((1.0, 1L, 1L, 1.0)))      // zero counts as missing
+    assert(summ("rr") === ((1.0, 0L, 2L, 0.0)))      // visits {101, null}
     val kept = FeatureSelector.select(events, "code", Seq("hr").toDF("c"))
     assert(kept.count() === 3)
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -344,6 +345,30 @@ class PrepOpsSpec extends AnyFunSuite {
       .select("id", "pos").as[(Long, Long)].collect().sortBy(_._2)
     // c (w=2): vt .25, .75; a (w=1): vt .5 → c2, a1, c3
     assert(got.map(_._1).toSeq === Seq(2L, 1L, 3L))
+  }
+
+  test("packByCumsum keeps null-stratum rows, binned as a stratum of their own") {
+    val df = Seq[(String, Int, Int)](("s", 1, 100), ("s", 2, 200), (null, 3, 300),
+        (null, 4, 10), ("s", 5, 10)).toDF("src", "id", "n")
+    val got = FoldOps.packByCumsum(df.repartition(3), Seq("src"), Seq("id"), col("n"), 256)
+      .select("id", "bin_id").as[(Int, Int)].collect().toMap
+    // s starts 0,100,300 → 0,0,1; null starts 0,300 → 0,1
+    assert(got === Map(1 -> 0, 2 -> 0, 3 -> 0, 4 -> 1, 5 -> 1))
+    val w = Window.partitionBy(col("src")).orderBy(col("id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val ref = df.select(col("id"),
+        floor((sum(col("n")).over(w) - col("n")) / 256.0).cast("int"))
+      .as[(Int, Int)].collect().toMap
+    assert(got === ref)
+  }
+
+  test("interleaveByWeight keeps null-source rows, ranked as a source of their own") {
+    val df = Seq[(String, Long)](("a", 1L), (null, 2L), (null, 3L), ("a", 4L)).toDF("src", "id")
+    val got = FoldOps.interleaveByWeight(df.repartition(3), col("src"),
+        Seq(col("id").asc), Map("a" -> 1.0))
+      .select("id", "src_rank", "pos").as[(Long, Long, Long)].collect().sortBy(_._3)
+    // vt: null 0.5, 1.5; a 0.5, 1.5 — ties break on source, null first
+    assert(got.toSeq === Seq((2L, 1L, 1L), (1L, 1L, 2L), (3L, 2L, 3L), (4L, 2L, 4L)))
   }
 
   test("classWeights: balanced classes weigh 1.0, minority inversely more") {
