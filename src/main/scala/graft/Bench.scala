@@ -19,6 +19,25 @@ import BenchSession.{force, releaseQueryBlocks, warmUp}
   * frame".
   */
 object Bench {
+  /** A previous BENCH_FULL.json's per-query seconds and its total. Fails
+    * with the name of the key it lacks (`"queries":{` or `"value":`)
+    * rather than comparing against nothing.
+    */
+  private[graft] def previousRun(txt: String): (Map[String, Double], Double) = {
+    def missing(key: String) =
+      new IllegalArgumentException(s"BENCH_FULL.json has no $key — cannot compare with it")
+    val key = "\"queries\":{"
+    val qStart = txt.indexOf(key)
+    val qEnd = if (qStart < 0) -1 else txt.indexOf("}", qStart)
+    if (qEnd < 0) throw missing(key)
+    val qRe = """"([A-Za-z0-9_]+)":(-?[0-9.eE+]+)""".r
+    val queries = qRe.findAllMatchIn(txt.substring(qStart + key.length, qEnd))
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    val total = """"value":(-?[0-9.eE+]+)""".r.findFirstMatchIn(txt)
+      .map(_.group(1).toDouble).getOrElse(throw missing("\"value\":"))
+    (queries, total)
+  }
+
   def main(args: Array[String]): Unit = {
     // protocol knobs: `--passes 5 --report min` (or SPARK_GRAFT_PASSES /
     // SPARK_GRAFT_REPORT). The artifact records both, so round-over-round
@@ -37,6 +56,12 @@ object Bench {
     require(Set("min", "median").contains(report),
       s"--report must be min or median, got $report")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // the previous run, parsed before any query runs so a malformed file
+    // fails the bench at once; an absent file means no comparison
+    val prevPath = java.nio.file.Paths.get("BENCH_FULL.json")
+    val prev =
+      if (!java.nio.file.Files.exists(prevPath)) None
+      else Some(previousRun(java.nio.file.Files.readString(prevPath)))
     // session recipe (master local[$SPARK_GRAFT_CPUS], AQE, plan lint,
     // committer, tmpfs local dir) lives in BenchSession so PlanDump /
     // StageProfile profile EXACTLY the bench's settings
@@ -186,32 +211,18 @@ object Bench {
 
     // ---- round-over-round self-comparison ---------------------------------
     // The harness captures only ~2 KB of output tail, so the full 367-entry
-    // per-query map can never ride the printed line — which went and made
-    // the driver's PERF per-query comparison go dark (r13 verdict #1). The
-    // comparison therefore rides the line itself: computed against the
-    // PREVIOUS round's committed BENCH_FULL.json (read before this run
-    // overwrites it; it is in-repo at every round close), keyed per query,
-    // reduced to the fields the PERF artifact needs — common-query count,
-    // previous total, geomean speedup (prev/now), regression/improvement
-    // counts at the ±10% noise threshold, and the worst five now/prev
-    // ratios by name. Missing/corrupt file degrades to "vs_prev":null.
-    val vsPrev: String = try {
-      val p = java.nio.file.Paths.get("BENCH_FULL.json")
-      if (!java.nio.file.Files.exists(p)) """"vs_prev":null"""
-      else {
-        val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        val key = "\"queries\":{"
-        val qStart = txt.indexOf(key)
-        val qEnd = txt.indexOf("}", qStart)
-        val body = txt.substring(qStart + key.length, qEnd)
-        val qRe = """"([A-Za-z0-9_]+)":(-?[0-9.eE+]+)""".r
-        val prev = qRe.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        val prevTotal = """"value":(-?[0-9.eE+]+)""".r
-          .findFirstMatchIn(txt).map(_.group(1).toDouble)
+    // per-query map can never ride the printed line. The comparison
+    // therefore rides the line itself: computed against the previous run's
+    // BENCH_FULL.json (read at start-up, before this run overwrites it),
+    // keyed per query, reduced to common-query count, previous total,
+    // geomean speedup (prev/now), regression/improvement counts at the ±10%
+    // noise threshold, and the worst five now/prev ratios by name.
+    val vsPrev: String = prev match {
+      case None => """"vs_prev":null"""
+      case Some((prevQueries, prevTotal)) =>
         val ratios = results
-          .filter { case (k, v) => prev.getOrElse(k, 0.0) > 0 && v > 0 }
-          .map { case (k, v) => k -> v / prev(k) } // now/prev: >1 regressed
+          .filter { case (k, v) => prevQueries.getOrElse(k, 0.0) > 0 && v > 0 }
+          .map { case (k, v) => k -> v / prevQueries(k) } // now/prev: >1 regressed
         if (ratios.isEmpty) """"vs_prev":null"""
         else {
           val geo = math.exp(ratios.map(r => -math.log(r._2)).sum / ratios.size)
@@ -219,16 +230,12 @@ object Bench {
             .map { case (k, r) => "\"" + k + "\":" + f"$r%.2f" }
             .mkString("{", ",", "}")
           s""""vs_prev":{"n":${ratios.size},""" +
-            s""""prev_total":${prevTotal.map(t => f"$t%.3f").getOrElse("null")},""" +
+            s""""prev_total":${f"$prevTotal%.3f"},""" +
             s""""geomean_speedup":${f"$geo%.3f"},""" +
             s""""n_regressed":${ratios.count(_._2 > 1.10)},""" +
             s""""n_improved":${ratios.count(_._2 < 0.90)},""" +
             s""""worst":$worst}"""
         }
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] vs_prev failed: ${e.getMessage}")
-      """"vs_prev":null"""
     }
     // The harness captures only the last ~2000 bytes of output, so the
     // printed line must stay well under that: rounded values, and only the

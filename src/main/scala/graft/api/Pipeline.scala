@@ -19,19 +19,13 @@ sealed trait Task
   */
 case class Mortality(deathCol: String) extends Task
 
-/** Label 1 iff a later visit of the same subject starts within `gapDays`
-  * of this visit's end (reference `:136-177`; boundary inclusive, last
-  * visit control).
-  *
-  * `strictOverlap = false` (default) uses the `lead(1)` window form — one
-  * shuffle, exact under the non-overlapping-visits contract most visit
-  * tables satisfy. Set `strictOverlap = true` for visit sets where
-  * admissions can OVERLAP (transfers, concurrent stays): that routes to
-  * the reference's all-later-visits semantics with the
-  * `admit_j > disch_i` guard (`day_intervals_cohort.py:158-161`) — the
-  * lead form could otherwise bind to a concurrent visit and mislabel.
+/** Label 1 iff another visit of the same subject starts after this visit's
+  * end and within `gapDays` of it (reference `:136-177`, with its
+  * `admit_j > disch_i` guard `:158-161`; boundary inclusive, last visit
+  * control) — exact on overlapping stays too
+  * ([[graft.operators.CohortOps.nextWithinGapLabelRange]]).
   */
-case class Readmission(gapDays: Int, strictOverlap: Boolean = false) extends Task
+case class Readmission(gapDays: Int) extends Task
 
 /** Label 1 iff the visit lasts at least `thresholdDays`
   * (reference `:114-133`).
@@ -88,46 +82,25 @@ object CohortExtractor {
     * the visit pool is semi-filtered to `diseaseIds` BEFORE labeling
     * (reference `day_intervals_cohort.py:37-40` — for readmission this is
     * load-bearing: "readmission due to X" counts only later DISEASE
-    * visits, so a later unrelated admission must not flip the label), and
-    * the labeled cohort is filtered AGAIN after (`:342-347`, the
-    * `use_disease` close — a no-op under the pre-filter, kept so the
-    * composition mirrors the reference's both-ends structure exactly).
-    * `diseaseIds` is any one-column visit-key frame — [[diseaseVisits]]
-    * output plugs in directly.
+    * visits, so a later unrelated admission must not flip the label). The
+    * reference's second filter after labeling (`:342-347`) keeps exactly
+    * the pre-filtered pool, so it is not repeated here. `diseaseIds` is any
+    * one-column visit-key frame — [[diseaseVisits]] output plugs in
+    * directly.
     */
   def extractPhenotype(visits: DataFrame, patients: DataFrame,
       cfg: CohortConfig, diseaseIds: DataFrame): DataFrame = {
     val keep = diseaseIds
       .select(col(diseaseIds.columns.head).as(cfg.visitKey)).distinct()
-    val pool = JoinOps.semiFilter(visits, Seq(cfg.visitKey), keep)
-    val labeled = extract(pool, patients, cfg)
-    JoinOps.semiFilter(labeled, Seq(cfg.visitKey), keep)
+    extract(JoinOps.semiFilter(visits, Seq(cfg.visitKey), keep), patients, cfg)
   }
 
   def label(cohort: DataFrame, cfg: CohortConfig): DataFrame = cfg.task match {
     case Mortality(dod) =>
       CohortOps.intervalLabel(cohort, col(dod), col(cfg.admitCol), col(cfg.dischCol), "label")
-    case Readmission(gap, strictOverlap) =>
-      if (strictOverlap)
-        // overlapping-visit route: all-later-visits scan with the
-        // reference's admit_j > disch_i guard, no window-order assumption
-        CohortOps.nextWithinGapLabelRange(cohort, cfg.subjectKey,
-          cfg.admitCol, cfg.dischCol, cfg.visitKey,
-          expr(s"INTERVAL ${gap} DAYS"), "label")
-      else {
-        // gap measured end→next-start; window keyed on subject, ordered by
-        // admit with the visit key as deterministic tie-break
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(cfg.subjectKey)
-          .orderBy(col(cfg.admitCol).asc, col(cfg.visitKey).asc)
-        cohort
-          .withColumn("__next_admit", lead(col(cfg.admitCol), 1).over(w))
-          .withColumn("label",
-            when(col("__next_admit").isNotNull &&
-              col("__next_admit") <= col(cfg.dischCol) + expr(s"INTERVAL ${gap} DAYS"), 1)
-              .otherwise(0))
-          .drop("__next_admit")
-      }
+    case Readmission(gap) =>
+      CohortOps.nextWithinGapLabelRange(cohort, cfg.subjectKey, cfg.admitCol,
+        cfg.dischCol, cfg.visitKey, expr(s"INTERVAL ${gap} DAYS"), "label")
     case LengthOfStay(days) =>
       CohortOps.thresholdLabel(cohort,
         col(cfg.dischCol) - col(cfg.admitCol), expr(s"INTERVAL ${days} DAYS"), "label")

@@ -35,7 +35,8 @@ object CohortOps {
     * The reference scans *all* later visits per subject in Python; with
     * in-order, non-overlapping visits the earliest later visit is the binding
     * one, so `lead(1)` is equivalent — and turns an O(n²) group loop into one
-    * window over one shuffle.
+    * window over one shuffle. Overlapping visits need
+    * [[nextWithinGapLabelRange]].
     */
   def nextWithinGapLabel(
       df: DataFrame,
@@ -57,18 +58,20 @@ object CohortOps {
   def groupMax(df: DataFrame, partKey: String, value: Column, name: String): DataFrame =
     df.withColumn(name, max(value).over(Window.partitionBy(partKey)))
 
-  /** J12 strict-semantics variant for OVERLAPPING visit sets: label 1 iff
-    * ANY other visit of the same subject starts strictly after this visit's
-    * end and within `gap` of it — the reference's all-later-visits scan
-    * (`day_intervals_cohort.py:158-168`) as an equi-join on the subject key
-    * with a range predicate, no window-order assumption.
+  /** J12 — the reference's readmission label (`day_intervals_cohort.py:158-168`):
+    * label 1 iff ANY other visit of the same subject starts strictly after
+    * this visit's end and within `gap` of it (boundary inclusive; the last
+    * visit is always a control). Exact for overlapping visit sets
+    * (transfers, concurrent stays), where the earliest later admission can
+    * start before this discharge; on non-overlapping visits it equals the
+    * `lead(1)` form [[nextWithinGapLabel]] (property-tested in PropertySpec).
     *
-    * With non-overlapping visits this agrees exactly with the `lead(1)`
-    * form (`nextWithinGapLabel`) — property-tested in PropertySpec; when
-    * admissions can overlap (transfers, concurrent stays), the lead form
-    * can bind to an overlapping visit while this form only credits true
-    * post-discharge returns. Requires `visitKey` unique per row (a visit
-    * table invariant).
+    * One window, no join: per subject, `collect_list` of (visit, admit)
+    * over an unordered `Window.partitionBy(subjectKey)`, then an in-row
+    * `exists`. `end + gap` is its own column below the window, so the
+    * lambda captures attributes only and the sum is computed once per row.
+    * A null subject or visit key matches nothing, as under an equi-join;
+    * every input row is kept, exact duplicates included.
     */
   def nextWithinGapLabelRange(
       df: DataFrame,
@@ -78,15 +81,13 @@ object CohortOps {
       visitKey: String,
       gap: Column,
       name: String): DataFrame = {
-    val later = df.select(
-      col(subjectKey).as("__s2"), col(startCol).as("__a2"), col(visitKey).as("__v2"))
-    df.join(later,
-        col(subjectKey) === col("__s2") &&
-          col("__v2") =!= col(visitKey) &&
-          col("__a2") > col(endCol) &&
-          col("__a2") <= col(endCol) + gap,
-        "left")
-      .groupBy(df.columns.map(col): _*)
-      .agg(max(when(col("__v2").isNotNull, 1).otherwise(0)).as(name))
+    val visits = collect_list(struct(col(visitKey).as("v"), col(startCol).as("a")))
+      .over(Window.partitionBy(col(subjectKey)))
+    val readmitted = exists(col("__visits"), o =>
+      o("v") =!= col(visitKey) && o("a") > col(endCol) && o("a") <= col("__hi"))
+    df.withColumn("__hi", col(endCol) + gap)
+      .withColumn("__visits", visits)
+      .withColumn(name, when(col(subjectKey).isNotNull && readmitted, 1).otherwise(0))
+      .drop("__hi", "__visits")
   }
 }

@@ -39,11 +39,12 @@ object ConcordanceOps {
     def query(i: Int): Long = { var x = i; var s = 0L; while (x > 0) { s += a(x); x -= x & -x }; s }
   }
 
-  /** One output row: `(n, permissible, concordant, tied_risk, c_index)`. */
-  def cIndex(df: DataFrame, time: Column, event: Column, risk: Column,
-      parts: Int = 0): DataFrame = {
+  /** One output row: `(n, permissible, concordant, tied_risk, c_index)`.
+    * The risk buckets number `spark.sql.shuffle.partitions`.
+    */
+  def cIndex(df: DataFrame, time: Column, event: Column, risk: Column): DataFrame = {
     val spark = df.sparkSession
-    val p = if (parts > 0) parts else spark.sessionState.conf.numShufflePartitions
+    val p = spark.sessionState.conf.numShufflePartitions
     val rows = df.select(time.cast("long").as("__t"),
         event.cast("int").as("__e"), risk.cast("double").as("__r"))
       .filter(col("__t").isNotNull && col("__e").isNotNull && col("__r").isNotNull)

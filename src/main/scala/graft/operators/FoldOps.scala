@@ -70,19 +70,6 @@ object FoldOps {
     df.withColumn(bucketCol, hashBucket16(key)).filter(col(bucketCol) < thr)
   }
 
-  /** Exact-n deterministic sample per stratum: rank rows inside each
-    * stratum by the md5 of their key (plus the key itself as tie-break)
-    * and keep the first `n`. The reservoir-sampling answer with none of
-    * its order-dependence — same `n` rows per stratum on any cluster.
-    *
-    * Two-phase, because strata are typically FEW and HUGE (languages,
-    * sources): a single per-stratum window would sort a whole stratum in
-    * one task. Phase 1 takes the top-n inside each (stratum, hash-salt)
-    * slice — uniform 1/fanout portions, so every sort is small; the global
-    * top-n is necessarily a subset of the ≤ fanout·n survivors, which
-    * phase 2 ranks exactly. For fraction-based sampling prefer
-    * `stratifiedHashSample`, which needs no sort at all.
-    */
   /** Deterministic weighted source interleaving (stride scheduling, the
     * public lottery-scheduling variant): source `s` emits its `r`-th row at
     * virtual time `(r − 0.5) / w(s)`, and the interleaved order is the
@@ -116,24 +103,26 @@ object FoldOps {
       .drop("__il_vt")
   }
 
+  /** Exact-n deterministic sample per stratum: rank rows inside each
+    * stratum by the md5 of their key (plus the key itself as tie-break)
+    * and keep the first `n`. The reservoir-sampling answer with none of
+    * its order-dependence — same `n` rows per stratum on any cluster.
+    * It is [[perStratumTopNBy]] ordered by that hash, so strata that are
+    * FEW and HUGE (languages, sources) never sort in one task. For
+    * fraction-based sampling prefer `stratifiedHashSample`, which needs no
+    * sort at all.
+    */
   def perStratumTopN(df: DataFrame, stratum: Column, key: Column, n: Int,
-      rankCol: String = "rk", fanout: Int = 64): DataFrame = {
-    val h = md5(key.cast("string"))
-    val salt = pmod(xxhash64(key.cast("string")), lit(fanout.toLong))
-    val wLocal = Window.partitionBy(stratum, salt).orderBy(h, key)
-    val survivors = df.withColumn("__tn_lr", row_number().over(wLocal))
-      .filter(col("__tn_lr") <= n).drop("__tn_lr")
-    val w = Window.partitionBy(stratum).orderBy(h, key)
-    survivors.withColumn(rankCol, row_number().over(w)).filter(col(rankCol) <= n)
-  }
+      rankCol: String = "rk"): DataFrame =
+    perStratumTopNBy(df, stratum, Seq(md5(key.cast("string")).asc), key, n, rankCol)
 
   /** Exact value-ordered top-n per stratum ("top 3 items per region by
-    * revenue"). Same two-phase scheme as [[perStratumTopN]], but ordered by
-    * caller-supplied columns instead of a sampling hash: strata are often
-    * FEW and HUGE, so the naive per-stratum window would sort a whole
-    * stratum in one task. Phase 1 takes the local top-n inside each
-    * (stratum, salt) slice — the global top-n is necessarily a subset of
-    * the ≤ fanout·n survivors — and phase 2 ranks that bounded set exactly.
+    * revenue"). Strata are often FEW and HUGE, so the naive per-stratum
+    * window would sort a whole stratum in one task. Two phases instead:
+    * phase 1 takes the local top-n inside each (stratum, salt) slice, one
+    * of [[TopNSlices]] uniform portions — the global top-n is necessarily a
+    * subset of the ≤ TopNSlices·n survivors — and phase 2 ranks that
+    * bounded set exactly.
     *
     * `orderCols` + `tieBreak` must form a total order per stratum (tie
     * ambiguity would make the kept set nondeterministic); `tieBreak` also
@@ -141,19 +130,21 @@ object FoldOps {
     * distribution.
     */
   def perStratumTopNBy(df: DataFrame, stratum: Column, orderCols: Seq[Column],
-      tieBreak: Column, n: Int, rankCol: String = "rk", fanout: Int = 64): DataFrame = {
+      tieBreak: Column, n: Int, rankCol: String = "rk"): DataFrame = {
     val fullOrder = orderCols :+ tieBreak.asc
     // the salt only has to SCATTER, not rank: any deterministic function of
     // the tie-break gives the same final top-n (every global top-n row is
-    // top-n of whichever slice holds it), so hash the native value — the
-    // per-row string render the old cast paid bought nothing
-    val salt = pmod(xxhash64(tieBreak), lit(fanout.toLong))
+    // top-n of whichever slice holds it)
+    val salt = pmod(xxhash64(tieBreak), lit(TopNSlices.toLong))
     val wLocal = Window.partitionBy(stratum, salt).orderBy(fullOrder: _*)
     val survivors = df.withColumn("__tb_lr", row_number().over(wLocal))
       .filter(col("__tb_lr") <= n).drop("__tb_lr")
     val w = Window.partitionBy(stratum).orderBy(fullOrder: _*)
     survivors.withColumn(rankCol, row_number().over(w)).filter(col(rankCol) <= n)
   }
+
+  /** Phase-1 slices per stratum in [[perStratumTopNBy]]. */
+  private final val TopNSlices = 64
 
   /** Global budget prefix: keep rows, in `sortCols` order (highest-priority
     * first; must be a total order), while the running total of `size` stays

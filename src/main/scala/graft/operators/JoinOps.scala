@@ -15,30 +15,23 @@ import org.apache.spark.sql.functions._
   */
 object JoinOps {
 
-  /** Broadcast hints are opt-in, never forced: an unconditional
-    * `broadcast()` on an unbounded side (a 10⁸-row cohort, a corpus
-    * vocabulary) is a driver/executor OOM at 100 TB. Callers that can PROVE
-    * the side is bounded (a literal lookup table, a top-k result) pass
-    * `smallSide = true`; everyone else leaves the decision to AQE, which
-    * broadcasts at runtime iff the built side is actually under the
-    * threshold.
-    */
-  private def hinted(df: DataFrame, small: Boolean): DataFrame =
-    if (small) broadcast(df) else df
-
   /** P6/J8 — `df[df.k.isin(other.k)]` (reference `feature_selection_hosp.py:194`)
-    * as a distributed semi-join. `keys` must exist in both frames.
+    * as a distributed semi-join. `keys` must exist in both frames. No
+    * broadcast hint: an unconditional `broadcast()` on an unbounded side (a
+    * 10⁸-row cohort, a corpus vocabulary) is an OOM at 100 TB, so AQE
+    * decides, broadcasting at run time iff the built side is actually under
+    * the threshold. A caller that can prove its side is bounded joins
+    * against `broadcast(keys)` itself, as [[semiTopK]] does.
     */
-  def semiFilter(df: DataFrame, keys: Seq[String], filter: DataFrame,
-      smallSide: Boolean = false): DataFrame =
-    df.join(hinted(filter.select(keys.map(col): _*).distinct(), smallSide), keys, "left_semi")
+  def semiFilter(df: DataFrame, keys: Seq[String], filter: DataFrame): DataFrame =
+    df.join(filter.select(keys.map(col): _*).distinct(), keys, "left_semi")
 
   /** J9 — rows of `df` with no partner in `other` (reference drops offending
-    * index rows, `uom_conversion.py:23-25`).
+    * index rows, `uom_conversion.py:23-25`); broadcast left to AQE as in
+    * [[semiFilter]].
     */
-  def antiFilter(df: DataFrame, keys: Seq[String], other: DataFrame,
-      smallSide: Boolean = false): DataFrame =
-    df.join(hinted(other.select(keys.map(col): _*).distinct(), smallSide), keys, "left_anti")
+  def antiFilter(df: DataFrame, keys: Seq[String], other: DataFrame): DataFrame =
+    df.join(other.select(keys.map(col): _*).distinct(), keys, "left_anti")
 
   /** J14/O4 — keep only rows whose `key` is among the top-k most frequent
     * (reference `hosp_preprocess_util.py:462-469`). Deterministic tie-break:

@@ -62,7 +62,7 @@ object RankOps {
     * `Window.partitionBy(partKeys).orderBy(sortCols)`. Strata may be few and
     * huge: a group spanning several range buckets is summed across them.
     */
-  private[operators] def prefixSums(df: DataFrame, partKeys: Seq[Column],
+  private[graft] def prefixSums(df: DataFrame, partKeys: Seq[Column],
       sortCols: Seq[Column], values: Seq[(Column, String)]): DataFrame = {
     val keys = partKeys.indices.map(i => s"__gr_k$i")
     val ranged = pinnedRangeBuckets(df, partKeys ++ sortCols)

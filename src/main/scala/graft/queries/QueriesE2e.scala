@@ -155,12 +155,12 @@ private[graft] object QueriesE2e {
       e2eCohort(s, d).select("hadm_id", "subject_id", "label")),
 
 
-    // the OVERLAPPING-visits readmission route through the facade: the
-    // all-later-visits scan with the reference's admit_j > disch_i guard
-    // (day_intervals_cohort.py:158-161) — strictOverlap=true branch
+    // the readmission label through the facade: the all-later-visits scan
+    // with the reference's admit_j > disch_i guard
+    // (day_intervals_cohort.py:158-161), exact on overlapping visits
     "e2e_cohort_readmit30" -> ((s, d) =>
       api.CohortExtractor.extract(visitsT(s, d), patientsT(s, d),
-          api.CohortConfig(task = api.Readmission(30, strictOverlap = true)))
+          api.CohortConfig(task = api.Readmission(30)))
         .select("hadm_id", "subject_id", "label")),
 
 
@@ -176,9 +176,8 @@ private[graft] object QueriesE2e {
     // 37-40,342-347 over disease_cohort.py:75-91): fabricated diagnoses
     // (lineitem) → ICD-9→10 root map (nation, the e2e_icd_map frames) →
     // root-contains("M1") keep-list → visit pool semi-filtered BEFORE the
-    // readmission-30 labeling (so only disease readmissions count) and
-    // re-filtered after — the full extract_data(disease_label=…) path
-    // under one hash oracle
+    // readmission-30 labeling (so only disease readmissions count) — the
+    // full extract_data(disease_label=…) path under one hash oracle
     "e2e_cohort_phenotype" -> ((s, d) => {
       val diag = li(s, d).select(
         col("l_orderkey").as("hadm_id"),
@@ -195,8 +194,7 @@ private[graft] object QueriesE2e {
         "icd_code", "icd_version", mapping, "diagnosis_code", "icd10cm",
         "map_order", "M1")
       api.CohortExtractor.extractPhenotype(visitsT(s, d), patientsT(s, d),
-          api.CohortConfig(task = api.Readmission(30, strictOverlap = true)),
-          ids)
+          api.CohortConfig(task = api.Readmission(30)), ids)
         .select("hadm_id", "subject_id", "label")
     }),
 
@@ -511,8 +509,8 @@ private[graft] object QueriesE2e {
          SELECT hadm_id, subject_id, label FROM cohort""",
 
 
-    // all-later-visits readmission with the admit_j > disch_i guard —
-    // mirrors nextWithinGapLabelRange's left join + max aggregation
+    // all-later-visits readmission with the admit_j > disch_i guard, as a
+    // left join + max aggregation (the engine side is one window)
     "e2e_cohort_readmit30" ->
       s"""WITH $e2eBaseCtes
          SELECT c.hadm_id, c.subject_id,

@@ -582,24 +582,18 @@ private[graft] object QueriesMl {
     }),
 
 
-    // deterministic per-epoch global shuffle: position = exact two-phase
-    // rank over (epoch, md5(epoch:id)) — reproducible training-data
-    // order on any cluster size, no single-partition sort
+    // deterministic per-epoch global shuffle: position = exact per-epoch
+    // running count over md5(epoch:id) from the prefix-sum kernel —
+    // reproducible training-data order on any cluster size, no
+    // single-partition sort
     "ml26_epoch_shuffle" -> ((s, d) => {
       val base = docs(s, d)
         .select(col("doc_id"), explode(array(lit(0), lit(1))).as("epoch"))
         .withColumn("__key", md5(concat(col("epoch").cast("string"),
           lit(":"), col("doc_id").cast("string"))))
-      val ranked = RankOps.globalRowNumber(base,
-        Seq(col("epoch").asc, col("__key").asc, col("doc_id").asc), "__grn")
-      val counts = base.groupBy("epoch").agg(count(lit(1)).as("__n"))
-      val offs = counts.alias("a")
-        .join(counts.alias("b"), col("b.epoch") < col("a.epoch"), "left")
-        .groupBy(col("a.epoch").as("epoch"))
-        .agg(coalesce(sum(col("b.__n")), lit(0L)).as("__off"))
-      ranked.join(broadcast(offs), Seq("epoch"))
-        .select(col("epoch"), col("doc_id"),
-          (col("__grn") - col("__off")).as("position"))
+      RankOps.prefixSums(base, Seq(col("epoch")),
+          Seq(col("__key").asc, col("doc_id").asc), Seq(lit(1L) -> "position"))
+        .select(col("epoch"), col("doc_id"), col("position"))
     }),
 
 

@@ -59,20 +59,15 @@ class PipelineSpec extends AnyFunSuite {
     ).toDF("subject_id", "hadm_id", "admittime", "dischtime")
     val adults = Seq((4L, 50, Option.empty[Timestamp])).toDF("subject_id", "age", "dod")
 
-    // strict semantics (admit_j > disch_i guard): 402 starts BEFORE 401's
-    // discharge → not a readmission of 401; 403 is beyond every 30d window
-    val strict = CohortExtractor.extract(overlapping, adults,
-      cfg.copy(task = Readmission(30, strictOverlap = true)))
-      .select("hadm_id", "label").as[(Long, Int)].collect().toMap
-    assert(strict === Map(401L -> 0, 402L -> 0, 403L -> 0))
-
-    // the lead(1) form, by contrast, binds 401 to the CONCURRENT 402
-    // (admitted Jan 5 ≤ Jan 20 + 30d) and mislabels it 1 — the silent
-    // divergence the flag exists to avoid
-    val lead = CohortExtractor.extract(overlapping, adults,
+    // the reference's admit_j > disch_i guard: 402 starts BEFORE 401's
+    // discharge → not a readmission of 401; 403 is beyond every 30d window.
+    // A lead(1) window would bind 401 to the CONCURRENT 402 (admitted
+    // Jan 5 ≤ Jan 20 + 30d) and mislabel it 1 (CohortOpsSpec pins that
+    // divergence); every Readmission label is the exact one.
+    val exact = CohortExtractor.extract(overlapping, adults,
       cfg.copy(task = Readmission(30)))
       .select("hadm_id", "label").as[(Long, Int)].collect().toMap
-    assert(lead === Map(401L -> 1, 402L -> 0, 403L -> 0))
+    assert(exact === Map(401L -> 0, 402L -> 0, 403L -> 0))
   }
 
   test("length-of-stay cohort: threshold label") {
@@ -107,7 +102,7 @@ class PipelineSpec extends AnyFunSuite {
       "map_order", "E11")
     assert(ids.as[Long].collect().toSet === Set(501L, 503L, 601L, 602L))
 
-    val phenoCfg = cfg.copy(task = Readmission(30, strictOverlap = true))
+    val phenoCfg = cfg.copy(task = Readmission(30))
     val out = CohortExtractor.extractPhenotype(visits, adults, phenoCfg, ids)
       .select("hadm_id", "label").as[(Long, Int)].collect().toMap
     // 502 is excluded AND must not flip 501: in the disease pool, 503 is
@@ -147,10 +142,10 @@ class PipelineSpec extends AnyFunSuite {
 
     // the readmission route under the same renames
     val v2r = CohortExtractor.extract(v2visits, v2patients,
-        v2cfg.copy(task = Readmission(30, strictOverlap = true)))
+        v2cfg.copy(task = Readmission(30)))
       .select($"encounter_id", $"label").collect().map(_.toSeq).toSet
     val v1r = CohortExtractor.extract(admissions, patients,
-        cfg.copy(task = Readmission(30, strictOverlap = true)))
+        cfg.copy(task = Readmission(30)))
       .select($"hadm_id", $"label").collect().map(_.toSeq).toSet
     assert(v2r === v1r)
   }

@@ -79,4 +79,47 @@ class CohortOpsSpec extends AnyFunSuite {
     // lead orders by admit: 10 -> 11 (overlap, within 30d of 10's ADMIT) -> 1
     assert(lead1(10L) === 1)
   }
+
+  private def rangeLabels(rows: Seq[(Option[Long], Option[Long], String, String)]) =
+    CohortOps.nextWithinGapLabelRange(
+        rows.map { case (s, v, a, d) => (s, v, ts(a), ts(d)) }
+          .toDF("subj", "visit", "admit", "disch"),
+        "subj", "admit", "disch", "visit", expr("INTERVAL 30 DAYS"), "label")
+      .select("subj", "visit", "label").as[(Option[Long], Option[Long], Int)]
+      .collect().toSeq
+
+  test("range readmission: null subject or visit keys give label 0 and match nothing") {
+    val (jan1, jan2) = ("2020-01-01 00:00:00", "2020-01-02 00:00:00")
+    val (jan10, jan11) = ("2020-01-10 00:00:00", "2020-01-11 00:00:00")
+    // every pair below is a readmission by time; only subject 4's has keys
+    val got = rangeLabels(Seq(
+      (Some(1L), Some(10L), jan1, jan2), (Some(1L), None, jan10, jan11),
+      (Some(2L), None, jan1, jan2), (Some(2L), Some(21L), jan10, jan11),
+      (None, Some(30L), jan1, jan2), (None, Some(31L), jan10, jan11),
+      (Some(4L), Some(40L), jan1, jan2), (Some(4L), Some(41L), jan10, jan11)))
+    assert(got.sortBy(r => (r._1, r._2)) === Seq(
+      (None, Some(30L), 0), (None, Some(31L), 0),
+      (Some(1L), None, 0), (Some(1L), Some(10L), 0),
+      (Some(2L), None, 0), (Some(2L), Some(21L), 0),
+      (Some(4L), Some(40L), 1), (Some(4L), Some(41L), 0)))
+  }
+
+  test("range readmission keeps and labels exact-duplicate input rows") {
+    val dup = (Some(1L), Some(10L), "2020-01-01 00:00:00", "2020-01-02 00:00:00")
+    val got = rangeLabels(Seq(dup, dup,
+      (Some(1L), Some(11L), "2020-01-10 00:00:00", "2020-01-11 00:00:00")))
+    assert(got.sortBy(_._2) === Seq(
+      (Some(1L), Some(10L), 1), (Some(1L), Some(10L), 1), (Some(1L), Some(11L), 0)))
+  }
+
+  test("range readmission plans one Window and no join") {
+    val df = CohortOps.nextWithinGapLabelRange(
+      Seq((1L, 10L, ts("2020-01-01 00:00:00"), ts("2020-01-02 00:00:00")))
+        .toDF("subj", "visit", "admit", "disch"),
+      "subj", "admit", "disch", "visit", expr("INTERVAL 30 DAYS"), "label")
+    val plan = df.queryExecution.sparkPlan
+    val nodes = plan.collect { case p => p.nodeName }
+    assert(nodes.count(_ == "Window") === 1, plan.toString)
+    assert(!nodes.exists(n => n.contains("Join") || n.contains("Cartesian")), plan.toString)
+  }
 }

@@ -73,15 +73,21 @@ class ConcordanceOpsSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val rows = Seq.fill(400)((rnd.nextInt(30).toLong,
       if (rnd.nextBoolean()) 1 else 0, rnd.nextInt(20).toDouble))
-    val df = ConcordanceOps.cIndex(rows.toDF("t", "e", "r"),
-      $"t", $"e", $"r", parts = 512)
-    val widths = df.queryExecution.executedPlan.collect {
-      case p => p.output.size
+    val prev = spark.conf.getOption("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "512")
+    try {
+      val df = ConcordanceOps.cIndex(rows.toDF("t", "e", "r"), $"t", $"e", $"r")
+      val widths = df.queryExecution.executedPlan.collect {
+        case p => p.output.size
+      }
+      assert(widths.max < 64,
+        s"a plan node is ${widths.max} columns wide — width scales with parts")
+      val (perm, conc, tied) = brute(rows)
+      val r = df.collect()(0)
+      assert((r.getLong(1), r.getLong(2), r.getLong(3)) === (perm, conc, tied))
+    } finally prev match {
+      case Some(v) => spark.conf.set("spark.sql.shuffle.partitions", v)
+      case None => spark.conf.unset("spark.sql.shuffle.partitions")
     }
-    assert(widths.max < 64,
-      s"a plan node is ${widths.max} columns wide — width scales with parts")
-    val (perm, conc, tied) = brute(rows)
-    val r = df.collect()(0)
-    assert((r.getLong(1), r.getLong(2), r.getLong(3)) === (perm, conc, tied))
   }
 }

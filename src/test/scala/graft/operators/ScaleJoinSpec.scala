@@ -150,7 +150,7 @@ class ScaleJoinSpec extends AnyFunSuite {
   test("semiFilter without a smallSide hint works through the shuffle path") {
     val fact = (1 to 5000).map(i => (i.toLong % 97, i)).toDF("k", "v")
     val keep = (0L to 40L).map(Tuple1(_)).toDF("k")
-    val hinted = JoinOps.semiFilter(fact, Seq("k"), keep, smallSide = true)
+    val hinted = fact.join(broadcast(keep.distinct()), Seq("k"), "left_semi")
     val prevB = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val prevA = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
