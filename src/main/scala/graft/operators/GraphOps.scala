@@ -31,12 +31,11 @@ object GraphOps {
     * node/edge frames never visit the driver. The rank frame is referenced
     * THREE times per iteration (scatter, dangling scan, rejoin), so an
     * unrolled lineage grows as 3^iters — `localCheckpoint` therefore
-    * truncates it every `checkpointEvery` supersteps (default: every one,
-    * the standard iterative-graph materialization; raise only for tiny
-    * iteration counts where one fused plan wins).
+    * truncates it before every superstep after the first, the standard
+    * iterative-graph materialization.
     */
   def pageRank(edges: DataFrame, src: String, dst: String, weight: String,
-      iters: Int, damping: Double, checkpointEvery: Int = 1): DataFrame = {
+      iters: Int, damping: Double): DataFrame = {
     // the edge list and its out-weights feed EVERY superstep — materialize
     // them once instead of replaying the upstream lineage per iteration
     val e = edges.select(col(src).as("__src"), col(dst).as("__dst"),
@@ -51,8 +50,7 @@ object GraphOps {
       .select(col("node"), round(lit(1.0) / col("__n"), 9).as("rank"), col("__n"))
 
     for (i <- 0 until iters) {
-      if (i > 0 && i % checkpointEvery == 0)
-        ranks = ranks.localCheckpoint(false)
+      if (i > 0) ranks = ranks.localCheckpoint(false)
       val withOut = ranks.join(outW, ranks("node") === outW("__src"), "left")
         .drop("__src")
       val contrib = withOut.filter(col("__outw").isNotNull)

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Join-shaped operators from the reference's extraction passes
@@ -75,28 +74,42 @@ object JoinOps {
   }
 
   /** J11 — point-in-interval as-of join (reference hadm_id imputation,
-    * `labs_preprocess_util.py:13-60`): for each point row, attach the
-    * interval row of the same `partKey` with `startCol <= pointTs <= endCol`;
-    * among several candidates pick the one with the latest start (smallest
-    * `pointTs - start`, the reference's tie-break :56-59). Left join: points
-    * with no enclosing interval keep a null `asOfCol`.
+    * `labs_preprocess_util.py:13-60`): for each point row, attach the start
+    * of the interval of the same `partKey` with `startCol <= pointTs <=
+    * endCol`; among several candidates the latest start wins (smallest
+    * `pointTs - start`, the reference's tie-break :56-59). Output: the point
+    * columns plus `asOfName`, one row per input point row — a point with a
+    * null key, a null `pointTs` or no enclosing interval (an interval with a
+    * null bound encloses nothing) keeps a null `asOfName`, and exact-duplicate
+    * point rows all survive.
     *
-    * Physical shape: equi-join on the partition key (shuffle co-partitioned,
-    * AQE-skew-aware) with the range predicate evaluated in the join, then a
-    * per-point `row_number` window to keep the closest candidate. At 100 TB
-    * the equi-key carries the shuffle; no cross product is ever formed.
-    *
-    * The per-point id is derived from the point's OWN columns — a
-    * `row_number` keyed on `partKey` and ordered by the remaining point
-    * columns — not from `monotonically_increasing_id`. mid values are not
-    * stable under task retry/speculation (a recomputed partition renumbers
-    * points between the join and the tie-break window); the content-derived
-    * id is invariant under recomputation and repartitioning (asserted in
-    * PropertySpec). Identical duplicate point rows get occurrence numbers in
-    * arbitrary order, which is immaterial — they are interchangeable. Bonus:
-    * the id window shuffles on `partKey`, the same key the join hashes on,
-    * so Catalyst reuses the exchange instead of adding one.
+    * Physical shape: the as-of value depends only on the point's key and
+    * timestamp, so no point needs an id. The intervals collapse to one row
+    * per key holding an array of (start, end) — bounded by the visits per
+    * subject and broadcast by AQE when small — the points left-join it on
+    * the key, and an in-row `array_max` over the enclosing starts picks the
+    * latest. No window and no second shuffle of the points; `array_max` is
+    * independent of `collect_list` order, so the result is deterministic.
+    * A hot key streams through one task holding only its own interval array
+    * (the aggregate on the interval side keeps AQE from splitting it).
     */
+  def asOfPointInInterval(
+      points: DataFrame,
+      intervals: DataFrame,
+      partKey: String,
+      pointTs: String,
+      startCol: String,
+      endCol: String,
+      asOfName: String): DataFrame = {
+    val iv = intervals.groupBy(col(partKey).as("__k"))
+      .agg(collect_list(struct(col(startCol).as("s"), col(endCol).as("e"))).as("__iv"))
+    val ts = col(pointTs)
+    points.join(iv, col(partKey) === col("__k"), "left")
+      .withColumn(asOfName, array_max(transform(
+        filter(col("__iv"), e => e("s") <= ts && ts <= e("e")), e => e("s"))))
+      .drop("__k", "__iv")
+  }
+
   /** All-pairs interval overlap within a partition key — the temporal-
     * conflict / co-occurrence primitive ("which stays overlapped", "which
     * sessions ran concurrently"). Intervals are half-open [start, end) on
@@ -179,92 +192,4 @@ object JoinOps {
       opCol: String): DataFrame =
     current.join(changes.select(col(key)), Seq(key), "left_anti")
       .unionByName(changes.filter(col(opCol) =!= "delete").drop(opCol))
-
-  /** `skewSafe = false` (default): the point id is a `row_number` window
-    * keyed on `partKey` — ONE shuffle serves both the id window and the
-    * join (Catalyst reuses the exchange). The catch, measured not guessed:
-    * that very reuse puts a `WindowExec` between the shuffle stage and the
-    * SortMergeJoin, and AQE's `OptimizeSkewedJoin` only matches a join
-    * whose children are sorts over bare shuffle stages — so a HOT partition
-    * key (one patient/session holding half the points) rides one
-    * monster task that AQE cannot split.
-    *
-    * `skewSafe = true` re-derives the id from the point's FULL row content
-    * (a `row_number` over a window keyed on every point column — spread by
-    * content, so no hot key; identical duplicate rows get interchangeable
-    * occurrence numbers exactly as before), AND inserts an explicit
-    * repartition on the point identity between the join and the tie-break.
-    * Both are load-bearing: the id change gives the join its own bare
-    * shuffle stage underneath, and the repartition frees the join's OUTPUT
-    * partitioning — any per-point grouping contains `partKey`, so
-    * `hashpartitioning(partKey)` subset-satisfies it and the tie-break
-    * would otherwise sit exchange-free on the join, forcing AQE to
-    * preserve the join's clustering (`ValidateRequirements` then vetoes
-    * the skew split). Net cost: three balanced shuffles of the points
-    * instead of one — versus one task carrying the hot key to the horizon.
-    * Skew-splittability is asserted in ScaleJoinSpec; same rows out either
-    * way. Pick the route by key distribution.
-    *
-    * Operational caveat (measured): AQE detects skew from COMPRESSED map
-    * output bytes. A hot key whose rows arrive as one sorted low-entropy
-    * run (exactly what the id window emits for narrow point schemas) can
-    * lz4-compress down to the cold partitions' size, and the rule then
-    * sees "0 skewed partitions" even though the row-count skew is 30×.
-    * Real point rows carry payload columns with entropy, which keeps the
-    * byte statistics honest — but if you project points down to (key, ts)
-    * before this join at 100 TB, byte-based skew detection may go blind;
-    * prefer the salted route there.
-    */
-  def asOfPointInInterval(
-      points: DataFrame,
-      intervals: DataFrame,
-      partKey: String,
-      pointTs: String,
-      startCol: String,
-      endCol: String,
-      asOfName: String,
-      skewSafe: Boolean = false): DataFrame = {
-    val p =
-      if (skewSafe) {
-        // occurrence number among EXACT duplicate rows only: the window
-        // clusters by full content, so cardinality per partition follows
-        // duplicate multiplicity, not the hot key
-        val occW = Window.partitionBy(points.columns.map(col).toSeq: _*)
-          .orderBy(lit(1).asc)
-        points.withColumn("__pid", row_number().over(occW))
-      } else {
-        val restCols = points.columns.filterNot(_ == partKey).map(col(_).asc)
-        val idOrder = if (restCols.isEmpty) Array(lit(1).asc) else restCols
-        val idW = Window.partitionBy(col(partKey)).orderBy(idOrder.toSeq: _*)
-        points.withColumn("__pid", row_number().over(idW))
-      }
-    val iv = intervals.select(
-      col(partKey).as("__k"),
-      col(startCol).as("__start"),
-      col(endCol).as("__end"))
-    val joined = p.join(
-      iv,
-      p(partKey) === col("__k") &&
-        p(pointTs) >= col("__start") && p(pointTs) <= col("__end"),
-      "left")
-    // default: __pid is unique within its partKey group → (partKey, __pid)
-    // identifies one input point. skewSafe: __pid is only the duplicate-
-    // occurrence number, so the identity spans (all point columns, __pid) —
-    // every point column is constant within a group either way, so the
-    // groups (and results) coincide; only the shuffle key width differs
-    val idCols =
-      if (skewSafe) points.columns.map(p(_)).toSeq :+ col("__pid")
-      else Seq(p(partKey), col("__pid"))
-    val w = Window.partitionBy(idCols: _*)
-      .orderBy(col("__start").desc_nulls_last)
-    // skewSafe: the explicit exchange that decouples the tie-break from
-    // the join's output partitioning (see scaladoc) — without it the skew
-    // split is vetoed even though the join's inputs are splittable
-    val tieBreakSrc = if (skewSafe) joined.repartition(idCols: _*) else joined
-    tieBreakSrc
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .withColumn(asOfName, col("__start"))
-      .drop("__pid", "__rn", "__k", "__start", "__end")
-  }
 }

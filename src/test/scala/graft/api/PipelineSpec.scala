@@ -49,6 +49,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("readmission with overlapping stays: strictOverlap routes to the range form") {
+    // the flag is gone: checks that Readmission(30) gives the exact labels
     // subject 4: visit 401 (Jan 1-20) OVERLAPS concurrent visit 402
     // (Jan 5-8, e.g. a transfer record); 403 is months later. NO visit
     // starts within 30 days after any discharge, so every strict label is 0.

@@ -37,6 +37,33 @@ class JoinOpsSpec extends AnyFunSuite {
     assert(got.size === 5) // exactly one output row per point
   }
 
+  test("asOfPointInInterval: duplicates survive, nulls match nothing, one join and no window") {
+    val intervals = Seq(
+      (Option(1L), Option(ts("2020-01-01 00:00:00")), ts("2020-01-01 10:00:00")),
+      (Option(1L), Option(ts("2020-01-01 00:00:00")), ts("2020-01-01 06:00:00")), // same start
+      (Option(2L), Option.empty[Timestamp], ts("2020-01-01 10:00:00")), // null start
+      (Option.empty[Long], Option(ts("2020-01-01 00:00:00")), ts("2020-01-01 10:00:00"))
+    ).toDF("k", "start", "end")
+    val at5 = Option(ts("2020-01-01 05:00:00"))
+    val points = Seq(
+      (100L, Option(1L), at5), // in both intervals that share a start
+      (100L, Option(1L), at5), // exact duplicate of the row above
+      (101L, Option.empty[Long], at5), // null key
+      (102L, Option(1L), Option.empty[Timestamp]), // null ts
+      (103L, Option(2L), at5) // only a null-start interval
+    ).toDF("pid", "k", "t")
+    val df = JoinOps.asOfPointInInterval(points, intervals, "k", "t", "start", "end", "asof")
+    assert(df.columns.toSeq === Seq("pid", "k", "t", "asof"))
+    val got = df.select("pid", "asof").as[(Long, Option[Timestamp])].collect().sortBy(_._1)
+    val start = Option(ts("2020-01-01 00:00:00"))
+    assert(got.toSeq === Seq(100L -> start, 100L -> start, 101L -> None, 102L -> None,
+      103L -> None))
+    val plan = df.queryExecution.sparkPlan
+    val nodes = plan.collect { case p => p.nodeName }
+    assert(!nodes.contains("Window"), plan.toString)
+    assert(nodes.count(_.contains("Join")) === 1, plan.toString)
+  }
+
   test("firstMatchLookup keeps the first row per key by order column") {
     val mapping = Seq(
       ("k1", "v-late", 5L), ("k1", "v-first", 1L), ("k1", "v-mid", 3L),

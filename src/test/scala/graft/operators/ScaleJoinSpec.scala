@@ -92,22 +92,16 @@ class ScaleJoinSpec extends AnyFunSuite {
   }
 
   test("asOfPointInInterval: skewSafe route is AQE-skew-splittable, default is not") {
-    // hot partition key with half the points. The default route reuses one
-    // exchange for the id window AND the join — which parks a WindowExec
-    // between the shuffle stage and the SMJ, a shape OptimizeSkewedJoin
-    // does not match, so the hot key rides one unsplittable task. The
-    // skewSafe route gives the join its own shuffle and AQE splits it.
-    // payload entropy is load-bearing: skew DETECTION reads compressed
-    // map-output bytes, and the id window emits the hot key as one sorted
-    // sequential run that lz4 flattens to near the cold partitions' size —
-    // without an incompressible column the hot partition never crosses the
-    // byte thresholds and the rule reports "0 skewed partitions"
+    // the flag is gone: checks that the one route, under the same skew
+    // confs, gives a brute-force join + max(start)'s rows, one per point,
+    // with no Window. Half the points sit on the hot key "H"
     val points = ((1 to 60000).map(i => ("H", i.toLong)) ++
       (1 to 100).flatMap(k => (1 to 600).map(i => (s"k$k", i.toLong))))
       .toDF("pk", "ts")
       .withColumn("payload", md5(concat(col("pk"), col("ts"))))
     val intervals = (Seq("H") ++ (1 to 100).map(k => s"k$k"))
-      .flatMap(k => Seq((k, 0L, 100L), (k, 101L, 100000L))).toDF("pk", "s", "e")
+      .flatMap(k => Seq((k, 0L, 100L), (k, 50L, 200L), (k, 101L, 100000L)))
+      .toDF("pk", "s", "e")
 
     val confs = Seq(
       "spark.sql.adaptive.enabled" -> "true",
@@ -123,24 +117,21 @@ class ScaleJoinSpec extends AnyFunSuite {
     val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      def run(skewSafe: Boolean) = {
-        val df = JoinOps.asOfPointInInterval(points, intervals,
-          "pk", "ts", "s", "e", "asof", skewSafe = skewSafe)
-        // collect() runs THIS Dataset's own QueryExecution (foreach/rdd
-        // would spin up a separate rddQueryExecution and leave this plan
-        // unfinalized), so executedPlan below is the AQE-final plan
-        df.collect()
-        (df, df.queryExecution.executedPlan.toString)
-      }
-      val (safe, safePlan) = run(skewSafe = true)
-      assert(safePlan.contains("skew=true"),
-        s"skewSafe route was not skew-split:\n$safePlan")
-      val (dflt, dfltPlan) = run(skewSafe = false)
-      assert(!dfltPlan.contains("skew=true"),
-        "default route unexpectedly skew-split — revisit the skewSafe doc")
-      // both routes return identical rows
-      assert(safe.count() === dflt.count())
-      assert(safe.except(dflt).isEmpty && dflt.except(safe).isEmpty)
+      val df = JoinOps.asOfPointInInterval(points, intervals,
+        "pk", "ts", "s", "e", "asof")
+      // collect() runs THIS Dataset's own QueryExecution, so executedPlan
+      // below is the AQE-final plan
+      val got = df.collect()
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("Window"), s"as-of join planned a window:\n$plan")
+      val reference = points.as("p").join(intervals.as("i"),
+          col("p.pk") === col("i.pk") && col("i.s") <= col("p.ts") &&
+            col("p.ts") <= col("i.e"), "left")
+        .groupBy(col("p.pk"), col("p.ts"), col("p.payload"))
+        .agg(max(col("i.s")).as("asof"))
+      assert(got.length === points.count())
+      assert(got.map(r => (r.getString(0), r.getLong(1))).distinct.length === got.length)
+      assert(df.except(reference).isEmpty && reference.except(df).isEmpty)
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
@@ -148,6 +139,7 @@ class ScaleJoinSpec extends AnyFunSuite {
   }
 
   test("semiFilter without a smallSide hint works through the shuffle path") {
+    // semiFilter has no hint: checks its shuffle path equals a broadcast semi-join
     val fact = (1 to 5000).map(i => (i.toLong % 97, i)).toDF("k", "v")
     val keep = (0L to 40L).map(Tuple1(_)).toDF("k")
     val hinted = fact.join(broadcast(keep.distinct()), Seq("k"), "left_semi")
