@@ -100,7 +100,7 @@ object SparkEntry {
   private[graft] def spanProf(s: SparkSession, d: String): graft.operators.SpanProfile =
     cached(s, d, "span") {
       QualityOps.spanProfileFromToks(sharedToks(s, d), "doc_id",
-        minLen = 5, cap = 64, checkpoint = pinCk(s))
+        checkpoint = pinCk(s))
     }
 
   private[graft] def gramProf(s: SparkSession, d: String): graft.operators.GramProfile =

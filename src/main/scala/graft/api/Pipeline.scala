@@ -108,9 +108,10 @@ object CohortExtractor {
 }
 
 /** §3.2 `feature_icu` / `feature_nonicu` — per-modality extraction against
-  * the cohort. Every step is a combinator from `graft.operators`; the
-  * cohort side is broadcast (it is orders of magnitude smaller than the
-  * event tables at MIMIC scale and beyond).
+  * the cohort. Every step is a combinator from `graft.operators`. No join
+  * here forces a broadcast of the cohort: AQE picks the build side from
+  * runtime sizes, and at small sizes it broadcasts whichever side is
+  * smaller — in the `icu_tensors` benchmark that is the event side.
   */
 object FeatureExtractor {
 

@@ -22,6 +22,8 @@ object CleaningOps {
     * `cutoff`, drop the non-modal rows; otherwise keep the group untouched.
     * Mode tie-break: higher count, then lexicographically smaller category
     * (the reference inherits pandas' value_counts order; we pin it).
+    * A NULL category is a category of its own (it can be the mode), and
+    * rows with a NULL `key` pass through untouched.
     */
   def dominantCategoryFilter(df: DataFrame, key: String, category: String, cutoff: Double): DataFrame = {
     // the struct minimum is the mode: higher count, then smaller category
@@ -33,7 +35,8 @@ object CleaningOps {
       .select(col(key), col("__top.c").as("__mode"),
         ((-col("__top.n")).cast("double") / col("__tot")).as("__share"), col("__ndist"))
     df.join(stats, Seq(key), "left")
-      .filter(!(col("__ndist") > 1 && col("__share") > cutoff && col(category) =!= col("__mode")))
+      .filter(col(key).isNull ||
+        !(col("__ndist") > 1 && col("__share") > cutoff && !(col(category) <=> col("__mode"))))
       .drop("__mode", "__share", "__ndist")
   }
 
@@ -45,18 +48,19 @@ object CleaningOps {
     * builtin is an ObjectHashAggregate that collects a value→count map per
     * group and sorts it single-threaded at eval time — measured ~5× slower
     * than ranking here, and memory-unbounded for high-cardinality values.
-    * This form is one shuffle keyed on `key` (a `row_number` + `count`
-    * window pair sharing the exchange) and a hash aggregate that picks out
-    * the two boundary ranks per percentile.
+    * This form is one shuffle keyed on `key`, one Window node (`row_number`
+    * and a whole-partition `count` on the same ordered spec) and a hash
+    * aggregate that picks out the two boundary ranks per percentile.
     */
   private def percentileBounds(df: DataFrame, key: String, value: String,
       lo: Double, hi: Double): DataFrame = {
     val w = Window.partitionBy(key).orderBy(col(value))
-    val wk = Window.partitionBy(key)
     val ranked = df.select(col(key), col(value))
       .filter(col(value).isNotNull) // the builtin aggregate ignores nulls too
       .withColumn("__r", row_number().over(w).cast("long"))
-      .withColumn("__n", count(lit(1)).over(wk).cast("long"))
+      .withColumn("__n", count(lit(1))
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        .cast("long"))
     def pick(p: Double, suffix: String) = {
       val h = (col("__n") - 1).cast("double") * lit(p)
       val fl = floor(h).cast("long")
@@ -110,7 +114,8 @@ object CleaningOps {
   /** A6 — per-group percentile clamp (reference outlier removal,
     * `outlier_removal.py:11-37`, impute branch): clamp `value` into
     * `[pct(lo), pct(hi)]` computed per `key` with exact type-7 linear
-    * interpolation (matching `numpy.percentile`).
+    * interpolation (matching `numpy.percentile`). Rows with a NULL `key`
+    * pass through unclamped.
     */
   def percentileClamp(df: DataFrame, key: String, value: String, lo: Double, hi: Double): DataFrame =
     df.join(percentileBounds(df, key, value, lo, hi), Seq(key), "left")
@@ -118,22 +123,24 @@ object CleaningOps {
       .drop("__lo", "__hi")
 
   /** A6 (drop branch) — null-out values outside the per-group percentile
-    * band and drop those rows (`outlier_removal.py:20-21`).
+    * band and drop those rows (`outlier_removal.py:20-21`). Rows with a
+    * NULL `key` are kept: they belong to no group with a band.
     */
   def percentileDrop(df: DataFrame, key: String, value: String, lo: Double, hi: Double): DataFrame =
     df.join(percentileBounds(df, key, value, lo, hi), Seq(key), "left")
-      .filter(col(value) >= col("__lo") && col(value) <= col("__hi"))
+      .filter(col(key).isNull || (col(value) >= col("__lo") && col(value) <= col("__hi")))
       .drop("__lo", "__hi")
 
   /** Group-relative quantile gate (corpus curation: "keep documents at or
     * above their domain's p-quantile of a quality signal"). Same two-pass
     * shape as the clamp: exact type-7 quantile per group, joined back
-    * AQE-sized, filter is a plain predicate.
+    * AQE-sized, filter is a plain predicate. Rows with a NULL `key` are
+    * kept.
     */
   def quantileGate(df: DataFrame, key: String, value: String, p: Double): DataFrame =
     df.join(percentileBounds(df, key, value, p, p).select(col(key), col("__lo").as("__thr")),
         Seq(key), "left")
-      .filter(col(value) >= col("__thr"))
+      .filter(col(key).isNull || col(value) >= col("__thr"))
       .drop("__thr")
 
   /** Robust per-group outlier flags via median/MAD z-score: |x − med| /

@@ -367,37 +367,32 @@ object QualityOps {
     * as one ~500-token span, not as k-gram coverage.
     *
     * Structure (the suffix-array neighborhood, relationally):
-    *  1. Candidate positions: a span of length ≥ `minLen` starting at p
-    *     requires p's `minLen`-gram to repeat globally — the
+    *  1. Candidate positions: a span of length ≥ `MinLen` (5) starting at
+    *     p requires p's `MinLen`-gram to repeat globally — the
     *     [[dupSpanCoverage]] inverted-index filter, so only genuinely
     *     duplicated positions (not all n positions) carry a suffix key.
     *     This loses nothing: a position's best partner shares its gram,
     *     so both survive the filter and their LCP is computed exactly.
-    *  2. Sorted-suffix neighborhood: each candidate's `cap`-token suffix
+    *  2. Sorted-suffix neighborhood: each candidate's `Cap`-token (64) suffix
     *     prefix is globally sorted (two-phase exact rank — no
     *     single-partition exchange) and LCP'd against its immediate
     *     sorted neighbor. In a sorted suffix list the max-LCP partner is
     *     always adjacent, so dupLen(p) = max(LCP prev, LCP next) is the
-    *     exact maximal duplicated length from p, clipped at `cap`.
-    *  3. Maximal spans: intervals [p, p+dupLen) with dupLen ≥ minLen are
+    *     exact maximal duplicated length from p, clipped at `Cap`.
+    *  3. Maximal spans: intervals [p, p+dupLen) with dupLen ≥ MinLen are
     *     unioned per doc via one running-max window (gaps-and-islands);
     *     islands merge only on OVERLAP, so two abutting-but-distinct
     *     duplicated spans stay separate.
     *
     * All arithmetic is exact integers; the only double is the closing
     * coverage ratio. Scale: the suffix frame is |duplicated positions| ×
-    * cap tokens — proportional to actual duplication volume, never the
+    * `Cap` tokens — proportional to actual duplication volume, never the
     * n² suffix text; sort is range-partitioned; every join is an
     * equi-join on rank or id.
-    */
-  def exactSubstrSpans(docs: DataFrame, id: String, text: String,
-      minLen: Int = 5, cap: Int = 64): DataFrame =
-    exactSubstrSpans(spanProfile(docs, id, text, minLen, cap))
-
-  /** [[exactSubstrSpans]] over a pre-built [[SpanProfile]] — the shared-
-    * front-end form: token counts and islands come off the profile's
-    * checkpointed frames, so the whole ExactSubstr family pays ONE
-    * suffix rank instead of one per member.
+    *
+    * Token counts and islands come off the profile's checkpointed frames,
+    * so the whole ExactSubstr family pays ONE suffix rank, not one per
+    * member.
     */
   def exactSubstrSpans(p: SpanProfile): DataFrame = {
     val perIsland = p.islands
@@ -425,7 +420,7 @@ object QualityOps {
     * spans.
     */
   private[operators] def islandsFromAdjacency(ranked: DataFrame,
-      adj: DataFrame, id: String, minLen: Int): DataFrame = {
+      adj: DataFrame, id: String): DataFrame = {
     val nxt = adj.select(col("__rn"), col("__lcpn"))
     val spans = ranked
       .join(nxt, Seq("__rn"), "left")
@@ -434,7 +429,7 @@ object QualityOps {
       .select(col(id), col("pos"),
         greatest(coalesce(col("__lcpn"), lit(0L)),
           coalesce(col("__lcpp"), lit(0L))).as("__len"))
-      .filter(col("__len") >= minLen)
+      .filter(col("__len") >= SpanProfile.MinLen)
     val w = Window.partitionBy(col(id)).orderBy(col("pos"))
     val islands = spans
       .withColumn("__rmax", max(col("pos") + col("__len"))
@@ -463,11 +458,6 @@ object QualityOps {
     * beyond d22's own machinery.
     * Output: `id, n_toks, n_kept, scrubbed`.
     */
-  def exactSubstrScrub(docs: DataFrame, id: String, text: String,
-      minLen: Int = 5, cap: Int = 64): DataFrame =
-    exactSubstrScrub(spanProfile(docs, id, text, minLen, cap))
-
-  /** [[exactSubstrScrub]] over a pre-built [[SpanProfile]]. */
   def exactSubstrScrub(p: SpanProfile): DataFrame = {
     val spansPerDoc = p.islands
       .groupBy(col(p.id))
@@ -487,7 +477,7 @@ object QualityOps {
     * share verbatim material, and how long their longest shared span is
     * (the report behind "license boilerplate vs mirrored article"
     * triage and span-level dedup keep-lists). Rank-adjacent suffix pairs
-    * with token-LCP ≥ `minLen` from the [[exactSubstrSpans]] machinery,
+    * with token-LCP ≥ `MinLen` from the [[exactSubstrSpans]] machinery,
     * restricted to pairs from DIFFERENT docs, normalized (doc_a <
     * doc_b) and grouped — adjacency chains cover every duplication
     * cluster transitively (the Lee et al. 2022 structure) without ever
@@ -495,10 +485,9 @@ object QualityOps {
     * of each duplication cluster, not its closure — in a cluster of ≥3
     * docs sharing a span, pair (a, c) may never be suffix-rank-adjacent;
     * [[dupSpanClusters]] closes the gap at cluster level.
+    * Output: `doc_a, doc_b, n_adjacent, max_shared_span`.
     */
-  def dupSpanPairs(docs: DataFrame, id: String, text: String,
-      minLen: Int = 5, cap: Int = 64): DataFrame =
-    spanProfile(docs, id, text, minLen, cap).pairs
+  def dupSpanPairs(p: SpanProfile): DataFrame = p.pairs
 
   /** The rank-adjacency frame: one row per adjacent pair in the sorted
     * suffix list — `(__rn, __da, __db, __lcpn)` where `__rn` is the LEFT
@@ -518,10 +507,9 @@ object QualityOps {
     * frame (the [[islandsFromAdjacency]] sibling, same
     * one-rank-many-views motive).
     */
-  private[operators] def pairsFromAdjacency(adj: DataFrame,
-      minLen: Int): DataFrame =
+  private[operators] def pairsFromAdjacency(adj: DataFrame): DataFrame =
     adj
-      .filter(col("__lcpn") >= minLen && col("__da") =!= col("__db"))
+      .filter(col("__lcpn") >= SpanProfile.MinLen && col("__da") =!= col("__db"))
       .groupBy(least(col("__da"), col("__db")).as("doc_a"),
         greatest(col("__da"), col("__db")).as("doc_b"))
       .agg(count(lit(1)).as("n_adjacent"),
@@ -544,12 +532,6 @@ object QualityOps {
     * on the |pairs|-bounded edge frame.
     * Output: `id, n_toks, n_kept, kept_intact, scrubbed`.
     */
-  def exactSubstrScrubKeepOne(docs: DataFrame, id: String, text: String,
-      minLen: Int = 5, cap: Int = 64, ccMaxIter: Int = 30): DataFrame =
-    exactSubstrScrubKeepOne(
-      spanProfile(docs, id, text, minLen, cap, ccMaxIter))
-
-  /** [[exactSubstrScrubKeepOne]] over a pre-built [[SpanProfile]]. */
   def exactSubstrScrubKeepOne(p: SpanProfile): DataFrame = {
     val nonRep = p.components
       .filter(col("doc_id") =!= col("canonical_id"))
@@ -586,11 +568,6 @@ object QualityOps {
     * hash aggregates and one bounded label-prop loop on a frame that is
     * |dup pairs|-sized, never corpus-sized.
     */
-  def dupSpanClusters(docs: DataFrame, id: String, text: String,
-      minLen: Int = 5, cap: Int = 64, ccMaxIter: Int = 30): DataFrame =
-    dupSpanClusters(spanProfile(docs, id, text, minLen, cap, ccMaxIter))
-
-  /** [[dupSpanClusters]] over a pre-built [[SpanProfile]]. */
   def dupSpanClusters(p: SpanProfile): DataFrame = {
     val comp = p.components
     val clusterSpan = p.pairs
@@ -609,7 +586,7 @@ object QualityOps {
   /** Span-level benchmark decontamination — the ExactSubstr complement of
     * the doc-level n-gram overlap check ([[graft.dedup.DedupOps
     * .decontaminate]]): which EVAL docs share a verbatim token span of
-    * ≥ `minLen` with ANY train doc, and how long. Lee et al. 2022 report
+    * ≥ `MinLen` with ANY train doc, and how long. Lee et al. 2022 report
     * exactly this leak class (benchmark passages embedded inside training
     * pages) surviving doc-level dedup.
     *
@@ -630,8 +607,7 @@ object QualityOps {
     * `(id, n_train_partners, max_shared_span, contaminated)`.
     */
   def spanDecontaminate(train: DataFrame, evalDocs: DataFrame, id: String,
-      text: String, minLen: Int = 5, cap: Int = 64,
-      ccMaxIter: Int = 30): DataFrame = {
+      text: String): DataFrame = {
     // ids key the shared suffix rank, so an id collision would silently
     // merge two DIFFERENT documents into one suffix neighborhood and
     // corrupt every contamination verdict downstream — fail loudly
@@ -649,7 +625,7 @@ object QualityOps {
       train.select(col(id), col(text)).withColumn("__eval", lit(false))
         .unionByName(evalDocs.select(col(id), col(text))
           .withColumn("__eval", lit(true))),
-      id, text, col("__eval"), minLen, cap, ccMaxIter)
+      id, text, col("__eval"))
   }
 
   /** Single-scan form of [[spanDecontaminate]] for the common case where
@@ -660,15 +636,13 @@ object QualityOps {
     * set markers, eval keep-list — projects off the same scan).
     */
   def spanDecontaminateMarked(docs: DataFrame, id: String, text: String,
-      isEval: Column, minLen: Int = 5, cap: Int = 64,
-      ccMaxIter: Int = 30): DataFrame = {
+      isEval: Column): DataFrame = {
     val base = graft.Tables.spread(docs.select(col(id), col(text), isEval.as("__eval")))
       .select(col(id), TextFns.tokens(col(text)).as("__t"), col("__eval"))
       .select(col(id), col("__t"), size(col("__t")).as("n_toks"),
         col("__eval"))
       .localCheckpoint(false)
-    val p = spanProfileFromToks(base.drop("__eval"), id, minLen, cap,
-      ccMaxIter, _.localCheckpoint(false))
+    val p = spanProfileFromToks(base.drop("__eval"), id)
     spanDecontaminate(p, base.select(col(id), col("__eval")))
   }
 
@@ -707,54 +681,50 @@ object QualityOps {
   /** Build the shared [[SpanProfile]] for the ExactSubstr family: ONE
     * corpus scan + tokenize + suffix rank, off which every member view
     * (span report, scrub, pairs, clusters, keep-one, decontaminate)
-    * derives. Each derived frame is checkpointed via `checkpoint` on
-    * first use, so running the WHOLE family costs one front end instead
-    * of one per member — at 100 TB the suffix rank is by far the
-    * family's dominant term (a global sort of every duplicated
-    * position's cap-token suffix), so a five-member curation pipeline
+    * derives. Each derived frame is lazily local-checkpointed on first
+    * use, so running the WHOLE family costs one front end instead of one
+    * per member — at 100 TB the suffix rank is by far the family's
+    * dominant term (a global sort of every duplicated position's
+    * `SpanProfile.Cap`-token suffix), so a five-member curation pipeline
     * pays it once.
-    *
-    * `checkpoint` defaults to a lazy local checkpoint; callers that pin
-    * the profile across separately-issued queries (the SparkEntry shared
-    * cache) pass an eager pinning variant instead.
     */
-  def spanProfile(docs: DataFrame, id: String, text: String,
-      minLen: Int = 5, cap: Int = 64, ccMaxIter: Int = 30,
-      checkpoint: DataFrame => DataFrame = _.localCheckpoint(false))
-      : SpanProfile = {
-    val toks = checkpoint(
+  def spanProfile(docs: DataFrame, id: String, text: String): SpanProfile =
+    spanProfileFromToks(
       graft.Tables.spread(docs.select(col(id), col(text)))
         .select(col(id), TextFns.tokens(col(text)).as("__t"))
-        .select(col(id), col("__t"), size(col("__t")).as("n_toks")))
-    spanProfileFromToks(toks, id, minLen, cap, ccMaxIter, checkpoint)
-  }
+        .select(col(id), col("__t"), size(col("__t")).as("n_toks"))
+        .localCheckpoint(false),
+      id)
 
   /** [[spanProfile]] over an already-tokenized `(id, __t, n_toks)` frame
     * (which should itself be checkpointed if it will be scanned more
     * than once — e.g. [[spanDecontaminateMarked]]'s single-scan base, or
     * the SparkEntry corpus-wide token frame shared with [[GramProfile]]).
+    * `checkpoint` defaults to a lazy local checkpoint; callers that pin
+    * the profile across separately-issued queries (the SparkEntry shared
+    * cache) pass an eager pinning variant instead.
     */
   private[graft] def spanProfileFromToks(toks: DataFrame, id: String,
-      minLen: Int = 5, cap: Int = 64, ccMaxIter: Int = 30,
       checkpoint: DataFrame => DataFrame = _.localCheckpoint(false))
       : SpanProfile =
-    new SpanProfile(id, minLen, cap, checkpoint, toks, ccMaxIter)
+    new SpanProfile(id, checkpoint, toks)
 
   /** Shared front half of the ExactSubstr family: candidate positions
-    * (those whose `minLen`-gram repeats corpus-wide, via the inverted
-    * index) carrying their `cap`-token suffix prefixes, globally ranked
-    * by the two-phase exact sort. Token arrays are fetched once per DOC
-    * before slicing, not once per candidate position.
+    * (those whose `SpanProfile.MinLen`-gram repeats corpus-wide, via the
+    * inverted index) carrying their `SpanProfile.Cap`-token suffix
+    * prefixes, globally ranked by the two-phase exact sort. Token arrays
+    * are fetched once per DOC before slicing, not once per candidate
+    * position.
     */
   private[operators] def rankedDupSuffixes(toks: DataFrame, id: String,
-      minLen: Int, cap: Int,
-      ck: DataFrame => DataFrame = _.localCheckpoint(false)): DataFrame = {
+      ck: DataFrame => DataFrame): DataFrame = {
+    import SpanProfile.{Cap, MinLen}
     val grams = toks
-      .filter(col("n_toks") >= minLen)
+      .filter(col("n_toks") >= MinLen)
       .select(col(id), col("__t"),
-        explode(sequence(lit(0), size(col("__t")) - minLen)).as("pos"))
+        explode(sequence(lit(0), size(col("__t")) - MinLen)).as("pos"))
       .select(col(id), col("pos"),
-        md5(array_join(slice(col("__t"), col("pos") + 1, lit(minLen)), " "))
+        md5(array_join(slice(col("__t"), col("pos") + 1, lit(MinLen)), " "))
           .as("__h"))
     val dupHashes = grams.groupBy("__h").agg(count(lit(1)).as("__c"))
       .filter(col("__c") >= 2).select("__h")
@@ -763,7 +733,7 @@ object QualityOps {
     val suffixes = candByDoc.join(toks.select(col(id), col("__t")), Seq(id))
       .select(col(id), col("__t"), explode(col("__ps")).as("pos"))
       .select(col(id), col("pos"),
-        slice(col("__t"), col("pos") + 1, lit(cap)).as("__sfx"))
+        slice(col("__t"), col("pos") + 1, lit(Cap)).as("__sfx"))
       .withColumn("__key", array_join(col("__sfx"), " "))
     // fresh aliases above the checkpoint leaf: the LogicalRDD keeps the
     // upstream attribute ids, and a later join of this frame against
@@ -924,10 +894,9 @@ object QualityOps {
   * and the connected-component cluster closure — computed lazily on
   * first use and checkpointed through `ck` so later consumers reuse the
   * materialized result instead of re-deriving it. Built by
-  * [[QualityOps.spanProfile]]; consumed by the profile overloads of
+  * [[QualityOps.spanProfile]]; the only input of
   * [[QualityOps.exactSubstrSpans]], [[QualityOps.exactSubstrScrub]],
-  * [[QualityOps.dupSpanPairs]] (= [[pairs]]),
-  * [[QualityOps.dupSpanClusters]],
+  * [[QualityOps.dupSpanPairs]], [[QualityOps.dupSpanClusters]],
   * [[QualityOps.exactSubstrScrubKeepOne]] and
   * [[QualityOps.spanDecontaminate]].
   *
@@ -936,38 +905,48 @@ object QualityOps {
   */
 final class SpanProfile private[operators] (
     private[operators] val id: String,
-    private[operators] val minLen: Int,
-    private[operators] val cap: Int,
     private[operators] val ck: DataFrame => DataFrame,
     /** `(id, __t, n_toks)` — one row per doc, token arrays materialized. */
-    val toks: DataFrame,
-    private[operators] val ccMaxIter: Int) {
+    val toks: DataFrame) {
 
   /** `(id, pos, __sfx, __key, __rn)` — globally ranked dup suffixes.
     * Lazy so sharing `toks` with other profiles never triggers the
     * suffix sort until a span view actually needs it.
     */
-  lazy val ranked: DataFrame =
-    QualityOps.rankedDupSuffixes(toks, id, minLen, cap, ck)
+  private[operators] lazy val ranked: DataFrame =
+    QualityOps.rankedDupSuffixes(toks, id, ck)
 
   /** `(__rn, __da, __db, __lcpn)` — adjacent ranked-suffix pairs with
     * their token LCP; islands AND pairs derive from this one self-join.
     */
-  lazy val adjacency: DataFrame =
+  private[operators] lazy val adjacency: DataFrame =
     ck(QualityOps.adjacentLcp(ranked, id))
 
   /** `(id, __s, __e)` — merged maximal duplicated-token intervals. */
-  lazy val islands: DataFrame =
-    ck(QualityOps.islandsFromAdjacency(ranked, adjacency, id, minLen))
+  private[operators] lazy val islands: DataFrame =
+    ck(QualityOps.islandsFromAdjacency(ranked, adjacency, id))
 
   /** `(doc_a, doc_b, n_adjacent, max_shared_span)` — normalized cross-doc
     * attribution pairs (a SPANNING set of each duplication cluster).
     */
-  lazy val pairs: DataFrame =
-    ck(QualityOps.pairsFromAdjacency(adjacency, minLen))
+  private[operators] lazy val pairs: DataFrame =
+    ck(QualityOps.pairsFromAdjacency(adjacency))
 
   /** `(doc_id, canonical_id)` — the cluster closure of [[pairs]]. */
-  lazy val components: DataFrame =
+  private[operators] lazy val components: DataFrame =
     ck(graft.dedup.DedupOps.connectedComponents(pairs, "doc_a", "doc_b",
-      ccMaxIter))
+      SpanProfile.CcMaxIter))
+}
+
+object SpanProfile {
+  /** Shortest duplicated span reported, in tokens (Lee et al. 2022 use a
+    * fixed threshold too); also the candidate-filter gram length.
+    */
+  private[operators] val MinLen = 5
+  /** Suffix-prefix length in tokens: per-position LCPs clip here, and the
+    * island union recovers longer spans.
+    */
+  private[operators] val Cap = 64
+  /** Round bound of the cluster closure's connected components. */
+  private[operators] val CcMaxIter = 30
 }

@@ -84,10 +84,6 @@ object WindowOps {
       .drop("__li_p", "__li_n")
   }
 
-  /** W8 — gap since the previous row in the partition
-    * (reference inter-visit day deltas, `preprocess_outcomes.py:129-139`).
-    * `gap` receives (previous, current).
-    */
   /** Exact trailing-k-row median per entity — the robust smoother for
     * noisy clinical / telemetry series (a rolling mean is one artifact
     * spike away from useless; the reference smooths with pandas
@@ -126,6 +122,10 @@ object WindowOps {
       when(den > 0, round((n * sxy - sx * sy) / sqrt(den), 6)))
   }
 
+  /** W8 — gap since the previous row in the partition
+    * (reference inter-visit day deltas, `preprocess_outcomes.py:129-139`).
+    * `gap` receives (previous, current).
+    */
   def lagGap(df: DataFrame, partKeys: Seq[String], orderCols: Seq[String],
       value: Column, gap: (Column, Column) => Column, name: String): DataFrame = {
     val w = spec(partKeys, orderCols)

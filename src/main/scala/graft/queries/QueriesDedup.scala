@@ -191,7 +191,8 @@ private[graft] object QueriesDedup {
     // cross-doc attribution of duplicated spans: rank-adjacent suffix
     // pairs with LCP >= 5 from different docs, normalized and grouped —
     // which pairs share verbatim material and their longest shared span
-    "d23_dupspan_pairs" -> ((s, d) => spanProf(s, d).pairs),
+    "d23_dupspan_pairs" -> ((s, d) =>
+      QualityOps.dupSpanPairs(spanProf(s, d))),
 
 
     // cluster-level closure of d23: the adjacent-pair graph through d08's

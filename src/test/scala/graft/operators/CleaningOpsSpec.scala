@@ -24,14 +24,37 @@ class CleaningOpsSpec extends AnyFunSuite {
     assert(kept.filter($"item" === "g3").count() === 1)
   }
 
+  test("null keys pass the cleaners untouched and a NULL modal unit is kept") {
+    // null-key rows belong to no group; in k=1 the NULL unit is the mode
+    // (4 of 5, share 0.8 > 0.7), so only its 'g' row goes; k=2 is an even
+    // split and stays whole — 8 of 9 rows survive
+    val df = Seq[(Option[Int], Option[String], Double)](
+      (None, Some("mg"), 1.0), (None, Some("mg"), 2.0),
+      (Some(1), None, 1.0), (Some(1), None, 2.0), (Some(1), None, 3.0),
+      (Some(1), None, 4.0), (Some(1), Some("g"), 5.0),
+      (Some(2), Some("a"), 1.0), (Some(2), Some("b"), 2.0)).toDF("k", "u", "v")
+    val kept = CleaningOps.dominantCategoryFilter(df, "k", "u", 0.7)
+    assert(kept.count() === 8)
+    assert(kept.filter($"k".isNull).count() === 2)
+    assert(kept.filter($"k" === 1 && $"u".isNull).count() === 4)
+    assert(kept.filter($"u" === "g").count() === 0)
+    // a [min, max] band drops nothing; the median gate keeps both null keys
+    assert(CleaningOps.percentileDrop(df, "k", "v", 0.0, 1.0).count() === 9)
+    assert(CleaningOps.quantileGate(df, "k", "v", 0.5)
+      .filter($"k".isNull).count() === 2)
+  }
+
   test("percentileClamp bounds values to exact per-group percentiles") {
     // 0..100 per group: p02/p98 of 0..100 with type-7 interpolation = 2.0/98.0
     val df = (0 to 100).map(v => ("k", v.toDouble)).toDF("item", "v")
-    val got = CleaningOps.percentileClamp(df, "item", "v", 0.02, 0.98)
-      .select("v").as[Double].collect()
+    val clamped = CleaningOps.percentileClamp(df, "item", "v", 0.02, 0.98)
+    val got = clamped.select("v").as[Double].collect()
     assert(got.min === 2.0 && got.max === 98.0)
     assert(got.count(_ == 2.0) === 3)  // 0,1,2 clamp to 2
     assert(got.count(_ == 98.0) === 3) // 98,99,100
+    // row_number and the group count share one Window node
+    val plan = clamped.queryExecution.sparkPlan
+    assert(plan.collect { case w if w.nodeName == "Window" => w }.size === 1, plan.toString)
   }
 
   test("percentileDrop removes out-of-band rows") {

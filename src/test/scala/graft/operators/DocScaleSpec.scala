@@ -56,24 +56,26 @@ class DocScaleSpec extends AnyFunSuite {
 
   private def work(f: => Unit): Double =
     graft.TestSpark.shuffleRecords(f).toDouble.max(1.0)
+  private def prof(df: org.apache.spark.sql.DataFrame): SpanProfile =
+    QualityOps.spanProfile(df, "doc_id", "text")
 
   test("ExactSubstr spans/pairs/scrub: 10x the docs shuffles ~10x, not 100x") {
     val d1 = docsDf(400)
     val d10 = docsDf(4000)
-    val s1 = work(QualityOps.exactSubstrSpans(d1, "doc_id", "text").count())
-    val s10 = work(QualityOps.exactSubstrSpans(d10, "doc_id", "text").count())
+    val s1 = work(QualityOps.exactSubstrSpans(prof(d1)).count())
+    val s10 = work(QualityOps.exactSubstrSpans(prof(d10)).count())
     info(f"d22 spans |D|x10 shuffle-record ratio: ${s10 / s1}%.1f " +
       f"(${s1.toLong} -> ${s10.toLong})")
     assert(s10 / s1 < 30.0,
       f"exactSubstrSpans shuffle scaling ${s10 / s1}%.1fx for 10x docs — " +
         "quadratic tail in the suffix-rank machinery?")
-    val p1 = work(QualityOps.dupSpanPairs(d1, "doc_id", "text").count())
-    val p10 = work(QualityOps.dupSpanPairs(d10, "doc_id", "text").count())
+    val p1 = work(QualityOps.dupSpanPairs(prof(d1)).count())
+    val p10 = work(QualityOps.dupSpanPairs(prof(d10)).count())
     info(f"d23 pairs |D|x10 shuffle-record ratio: ${p10 / p1}%.1f " +
       f"(${p1.toLong} -> ${p10.toLong})")
     assert(p10 / p1 < 30.0, f"dupSpanPairs shuffle scaling ${p10 / p1}%.1fx")
-    val c1 = work(QualityOps.exactSubstrScrub(d1, "doc_id", "text").count())
-    val c10 = work(QualityOps.exactSubstrScrub(d10, "doc_id", "text").count())
+    val c1 = work(QualityOps.exactSubstrScrub(prof(d1)).count())
+    val c10 = work(QualityOps.exactSubstrScrub(prof(d10)).count())
     info(f"d24 scrub |D|x10 shuffle-record ratio: ${c10 / c1}%.1f " +
       f"(${c1.toLong} -> ${c10.toLong})")
     assert(c10 / c1 < 30.0, f"exactSubstrScrub shuffle scaling ${c10 / c1}%.1fx")

@@ -16,6 +16,8 @@ class ExactSubstrSpec extends AnyFunSuite {
     pieces.flatten.mkString(" ")
   private def toks(prefix: String, n: Int): Seq[String] =
     (1 to n).map(i => s"$prefix$i")
+  private def prof(df: org.apache.spark.sql.DataFrame): SpanProfile =
+    QualityOps.spanProfile(df, "doc_id", "text")
 
   test("a planted 50-token verbatim duplicate is reported as one ~50 span") {
     val span = toks("s", 50)
@@ -23,7 +25,7 @@ class ExactSubstrSpec extends AnyFunSuite {
     val b = doc(toks("w", 20), span, toks("x", 20))
     val c = doc(toks("y", 40)) // no duplication anywhere
     val df = Seq((1L, a), (2L, b), (3L, c)).toDF("doc_id", "text")
-    val r = QualityOps.exactSubstrSpans(df, "doc_id", "text")
+    val r = QualityOps.exactSubstrSpans(prof(df))
       .orderBy("doc_id").collect()
     assert(r.length === 3)
     for (i <- 0 to 1) {
@@ -44,7 +46,7 @@ class ExactSubstrSpec extends AnyFunSuite {
     val a = doc(toks("u", 10), span, toks("v", 10))
     val b = doc(toks("w", 10), span, toks("x", 10))
     val df = Seq((1L, a), (2L, b)).toDF("doc_id", "text")
-    val r = QualityOps.exactSubstrSpans(df, "doc_id", "text")
+    val r = QualityOps.exactSubstrSpans(prof(df))
       .orderBy("doc_id").collect()
     assert(r.map(_.getAs[Long]("max_span")).toSeq === Seq(80L, 80L))
     assert(r.map(_.getAs[Long]("n_spans")).toSeq === Seq(1L, 1L))
@@ -53,7 +55,7 @@ class ExactSubstrSpec extends AnyFunSuite {
   test("within-doc repetition counts as duplication (full self-coverage)") {
     val rep = toks("x", 10)
     val df = Seq((1L, doc(rep, rep))).toDF("doc_id", "text")
-    val r = QualityOps.exactSubstrSpans(df, "doc_id", "text").head()
+    val r = QualityOps.exactSubstrSpans(prof(df)).head()
     assert(r.getAs[Long]("covered_tokens") === 20L)
     assert(r.getAs[Double]("coverage") === 1.0)
   }
@@ -67,7 +69,7 @@ class ExactSubstrSpec extends AnyFunSuite {
     val b = doc(toks("m", 5), s1, toks("n", 5))
     val c = doc(toks("r", 5), s2, toks("t", 5))
     val df = Seq((1L, a), (2L, b), (3L, c)).toDF("doc_id", "text")
-    val r = QualityOps.exactSubstrSpans(df, "doc_id", "text")
+    val r = QualityOps.exactSubstrSpans(prof(df))
       .orderBy("doc_id").collect()
     assert(r(0).getAs[Long]("n_spans") === 2L)
     assert(r(0).getAs[Long]("max_span") === 10L)
@@ -75,11 +77,11 @@ class ExactSubstrSpec extends AnyFunSuite {
   }
 
   test("sub-threshold shared grams (< minLen) report nothing") {
-    val shared = toks("s", 4) // below minLen = 5
+    val shared = toks("s", 4) // below SpanProfile.MinLen = 5
     val a = doc(toks("u", 10), shared, toks("v", 10))
     val b = doc(toks("w", 10), shared, toks("x", 10))
     val df = Seq((1L, a), (2L, b)).toDF("doc_id", "text")
-    val r = QualityOps.exactSubstrSpans(df, "doc_id", "text").collect()
+    val r = QualityOps.exactSubstrSpans(prof(df)).collect()
     assert(r.forall(_.getAs[Long]("n_spans") === 0L))
   }
 
@@ -89,7 +91,7 @@ class ExactSubstrSpec extends AnyFunSuite {
     val b = doc(toks("w", 20), span, toks("x", 20))
     val c = doc(toks("y", 40))
     val df = Seq((1L, a), (2L, b), (3L, c)).toDF("doc_id", "text")
-    val r = QualityOps.exactSubstrScrub(df, "doc_id", "text")
+    val r = QualityOps.exactSubstrScrub(prof(df))
       .collect().map(x => x.getAs[Long]("doc_id") -> x).toMap
     assert(r(1L).getAs[Long]("n_toks") === 90L)
     assert(r(1L).getAs[Long]("n_kept") === 40L)
@@ -114,10 +116,10 @@ class ExactSubstrSpec extends AnyFunSuite {
       (3L, doc(toks("w", 10), span)),
       (4L, doc(toks("z", 30)))) // clean doc: absent from the report
       .toDF("doc_id", "text")
-    val pairs = QualityOps.dupSpanPairs(df, "doc_id", "text")
+    val pairs = QualityOps.dupSpanPairs(prof(df))
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b")))
     assert(pairs.length < 3, s"adjacency already closed? $pairs")
-    val rows = QualityOps.dupSpanClusters(df, "doc_id", "text").collect()
+    val rows = QualityOps.dupSpanClusters(prof(df)).collect()
     val byDoc = rows.map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(byDoc.keySet === Set(1L, 2L, 3L))
     Seq(1L, 2L, 3L).foreach { d =>
@@ -134,7 +136,7 @@ class ExactSubstrSpec extends AnyFunSuite {
       (1L, doc(sA, toks("u", 5))), (2L, doc(toks("v", 5), sA)),
       (7L, doc(sB)), (9L, doc(sB, toks("x", 4))))
       .toDF("doc_id", "text")
-    val rows = QualityOps.dupSpanClusters(df, "doc_id", "text").collect()
+    val rows = QualityOps.dupSpanClusters(prof(df)).collect()
     val byDoc = rows.map(r => r.getAs[Long]("doc_id") ->
       (r.getAs[Long]("cluster_id"), r.getAs[Long]("cluster_size"),
         r.getAs[Long]("cluster_max_span"))).toMap
@@ -152,7 +154,7 @@ class ExactSubstrSpec extends AnyFunSuite {
       (8L, doc(toks("w", 10), span)),
       (9L, doc(toks("z", 30)))) // clean doc: untouched
       .toDF("doc_id", "text")
-    val rows = QualityOps.exactSubstrScrubKeepOne(df, "doc_id", "text")
+    val rows = QualityOps.exactSubstrScrubKeepOne(prof(df))
       .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(rows.keySet === Set(3L, 5L, 8L, 9L))
     // representative = min doc id of the cluster keeps everything
@@ -175,7 +177,7 @@ class ExactSubstrSpec extends AnyFunSuite {
     val span = toks("s", 10)
     val df = Seq((1L, doc(span, toks("u", 5), span)),
       (2L, doc(toks("z", 30)))).toDF("doc_id", "text")
-    val rows = QualityOps.exactSubstrScrubKeepOne(df, "doc_id", "text")
+    val rows = QualityOps.exactSubstrScrubKeepOne(prof(df))
       .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(rows(1L).getAs[Boolean]("kept_intact"))
     assert(rows(1L).getAs[Long]("n_kept") === 25L)
@@ -222,7 +224,7 @@ class ExactSubstrSpec extends AnyFunSuite {
     val df = (1L to 30L)
       .map(i => (i, doc(toks(s"u$i-", 6), span)))
       .toDF("doc_id", "text")
-    val rows = QualityOps.dupSpanClusters(df, "doc_id", "text").collect()
+    val rows = QualityOps.dupSpanClusters(prof(df)).collect()
     assert(rows.length === 30)
     assert(rows.map(_.getAs[Long]("cluster_id")).toSet === Set(1L))
     assert(rows.map(_.getAs[Long]("cluster_size")).toSet === Set(30L))
@@ -238,8 +240,8 @@ class ExactSubstrSpec extends AnyFunSuite {
   }
 
   test("the shared SpanProfile reproduces every standalone family member") {
-    // one front end, five views: each profile overload must emit exactly
-    // the rows of its docs-based form (the SparkEntry shared-cache path)
+    // one profile reused across every member (the SparkEntry shared-cache
+    // path) gives the same rows as a fresh profile built per member
     val span = toks("s", 20)
     val df = Seq(
       (1L, doc(toks("u", 10), span)),
@@ -247,19 +249,19 @@ class ExactSubstrSpec extends AnyFunSuite {
       (3L, doc(toks("w", 10), span)),
       (4L, doc(toks("z", 30))))
       .toDF("doc_id", "text")
-    val p = QualityOps.spanProfile(df, "doc_id", "text")
+    val p = prof(df)
     def rows(d: org.apache.spark.sql.DataFrame): Set[String] =
       d.collect().map(_.toString).toSet
     assert(rows(QualityOps.exactSubstrSpans(p)) ===
-      rows(QualityOps.exactSubstrSpans(df, "doc_id", "text")))
+      rows(QualityOps.exactSubstrSpans(prof(df))))
     assert(rows(QualityOps.exactSubstrScrub(p)) ===
-      rows(QualityOps.exactSubstrScrub(df, "doc_id", "text")))
-    assert(rows(p.pairs) ===
-      rows(QualityOps.dupSpanPairs(df, "doc_id", "text")))
+      rows(QualityOps.exactSubstrScrub(prof(df))))
+    assert(rows(QualityOps.dupSpanPairs(p)) ===
+      rows(QualityOps.dupSpanPairs(prof(df))))
     assert(rows(QualityOps.dupSpanClusters(p)) ===
-      rows(QualityOps.dupSpanClusters(df, "doc_id", "text")))
+      rows(QualityOps.dupSpanClusters(prof(df))))
     assert(rows(QualityOps.exactSubstrScrubKeepOne(p)) ===
-      rows(QualityOps.exactSubstrScrubKeepOne(df, "doc_id", "text")))
+      rows(QualityOps.exactSubstrScrubKeepOne(prof(df))))
     import org.apache.spark.sql.functions.{col, lit}
     val markers = df.select(col("doc_id"), (col("doc_id") <= 2L).as("__eval"))
     assert(rows(QualityOps.spanDecontaminate(p, markers)) ===
@@ -271,10 +273,10 @@ class ExactSubstrSpec extends AnyFunSuite {
     val span = toks("s", 10)
     val a = doc(span, toks("u", 5), span) // within-doc repetition
     val df = Seq((1L, a), (2L, doc(toks("z", 30)))).toDF("doc_id", "text")
-    val spans = QualityOps.exactSubstrSpans(df, "doc_id", "text")
+    val spans = QualityOps.exactSubstrSpans(prof(df))
       .collect().map(x => x.getAs[Long]("doc_id") ->
         x.getAs[Long]("covered_tokens")).toMap
-    val scrub = QualityOps.exactSubstrScrub(df, "doc_id", "text")
+    val scrub = QualityOps.exactSubstrScrub(prof(df))
       .collect().map(x => x.getAs[Long]("doc_id") ->
         (x.getAs[Long]("n_toks") - x.getAs[Long]("n_kept"))).toMap
     assert(spans === scrub)

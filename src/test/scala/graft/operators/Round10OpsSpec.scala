@@ -14,6 +14,8 @@ class Round10OpsSpec extends AnyFunSuite {
 
   private def toks(prefix: String, n: Int): Seq[String] =
     (1 to n).map(i => s"$prefix$i")
+  private def prof(df: org.apache.spark.sql.DataFrame): SpanProfile =
+    QualityOps.spanProfile(df, "doc_id", "text")
 
   // --- dupSpanPairs -------------------------------------------------------
 
@@ -23,7 +25,7 @@ class Round10OpsSpec extends AnyFunSuite {
     val b = (toks("w", 20) ++ span ++ toks("x", 20)).mkString(" ")
     val c = toks("y", 60).mkString(" ") // shares nothing
     val df = Seq((1L, a), (2L, b), (3L, c)).toDF("doc_id", "text")
-    val r = QualityOps.dupSpanPairs(df, "doc_id", "text").collect()
+    val r = QualityOps.dupSpanPairs(prof(df)).collect()
     assert(r.length === 1)
     assert(r(0).getAs[Long]("doc_a") === 1L)
     assert(r(0).getAs[Long]("doc_b") === 2L)
@@ -34,7 +36,7 @@ class Round10OpsSpec extends AnyFunSuite {
     val rep = toks("x", 10)
     val df = Seq((1L, (rep ++ rep).mkString(" ")),
       (2L, toks("z", 30).mkString(" "))).toDF("doc_id", "text")
-    assert(QualityOps.dupSpanPairs(df, "doc_id", "text").count() === 0L)
+    assert(QualityOps.dupSpanPairs(prof(df)).count() === 0L)
   }
 
   // --- lexicalRichness ----------------------------------------------------
