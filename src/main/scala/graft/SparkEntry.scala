@@ -105,7 +105,7 @@ object SparkEntry {
 
   private[graft] def gramProf(s: SparkSession, d: String): graft.operators.GramProfile =
     cached(s, d, "gram") {
-      SummaryOps.gramProfile(sharedToks(s, d), "doc_id", pinCk(s))
+      SummaryOps.gramProfileFromToks(sharedToks(s, d), "doc_id", pinCk(s))
     }
 
   /** t43's char-trigram counts frame, pinned beside the token profiles:

@@ -97,8 +97,8 @@ object CorpusCurator {
       if (gates.isEmpty) docs else docs.filter(gates.reduce(_ && _))
     if (cfg.minBigramLogProb == Double.NegativeInfinity) rowGated
     else {
-      val ok = graft.operators.SummaryOps
-        .bigramLogProb(rowGated, cfg.idCol, cfg.textCol)
+      import graft.operators.SummaryOps.{bigramLogProb, gramProfile}
+      val ok = bigramLogProb(gramProfile(rowGated, cfg.idCol, cfg.textCol))
         .filter(col("avg_logprob").isNull ||
           col("avg_logprob") >= cfg.minBigramLogProb)
         .select(cfg.idCol)

@@ -17,16 +17,17 @@ import graft.functions.TextFns
   *                        terciles (Wenzek et al. 2020)
   *  - [[dsirWeights]]   — Data Selection via Importance Resampling's
   *                        hashed-n-gram log importance weights
-  *                        (Xie et al. 2023)
+  *                        (Xie et al. 2023), over [[DsirDim]] buckets
   *  - [[dupSpanCoverage]] — fraction of each doc covered by corpus-
   *                        duplicated token spans (Lee et al. 2022,
   *                        "Deduplicating Training Data Makes Language
   *                        Models Better" — the ExactSubstr measure)
   *
-  * All four are deterministic pure functions of the corpus (no RNG, no
-  * float-sum ordering: integer sufficient statistics or per-term
-  * fixed-point quantization throughout), so each is hash-oracle-able
-  * against a SQL engine.
+  * The two LM gates take a [[GramProfile]] ([[SummaryOps.gramProfile]]),
+  * the bigram-LM family's one front end. All four are deterministic
+  * pure functions of the corpus (no RNG, no float-sum ordering: integer
+  * sufficient statistics or per-term fixed-point quantization
+  * throughout), so each is hash-oracle-able against a SQL engine.
   */
 object QualityOps {
 
@@ -86,17 +87,9 @@ object QualityOps {
     * bucket = ⌊(rank−1)·3 / n⌋ against a one-row count frame. Docs with
     * no bigrams (< 2 tokens) are excluded — they have no LM score.
     */
-  def perplexityBuckets(docs: DataFrame, id: String, text: String): DataFrame =
-    perplexityBucketsScored(SummaryOps.bigramLogProb(docs, id, text), id)
-
-  /** [[perplexityBuckets]] over a pre-built
-    * [[GramProfile]] — the shared-front-end form.
-    */
-  def perplexityBuckets(p: GramProfile): DataFrame =
-    perplexityBucketsScored(SummaryOps.bigramLogProb(p), p.id)
-
-  private def perplexityBucketsScored(lp: DataFrame, id: String): DataFrame = {
-    val scored = lp
+  def perplexityBuckets(p: GramProfile): DataFrame = {
+    val id = p.id
+    val scored = SummaryOps.bigramLogProb(p)
       .filter(col("n_bigrams") > 0)
       .select(col(id), round(exp(-col("avg_logprob")), 6).as("ppl"))
     val ranked = RankOps.globalRowNumber(scored,
@@ -112,59 +105,38 @@ object QualityOps {
 
   /** DSIR hashed-n-gram importance weights (Xie et al. 2023): estimate a
     * bag-of-hashed-bigrams unigram model p over the TARGET slice and q
-    * over the RAW corpus, both add-1 smoothed over `dim` hash buckets;
-    * each document's weight is its mean per-bigram log importance ratio
-    * ln(p_b / q_b) — the score importance resampling then samples by.
+    * over the RAW corpus, both add-1 smoothed over [[DsirDim]] hash
+    * buckets; each document's weight is its mean per-bigram log
+    * importance ratio ln(p_b / q_b) — the score importance resampling
+    * then samples by.
+    *
+    * `markers` is `(id, __tgt: boolean)`: `__tgt` marks the target slice,
+    * and the markers also SCOPE the pass — only marked docs are modeled
+    * and scored (the composed quality gate restricts it to rule
+    * survivors), so the profile's collapsed gram frame is filtered, never
+    * re-exploded. Multiplicities ride the `__m` column: bucket counts and
+    * per-doc sums weight by it, the per-occurrence arithmetic.
+    *
+    * Id contract ([[SummaryOps.gramProfile]]'s): one marker row per id,
+    * and a null id is unmarked — its doc surfaces with `n_bigrams` 0 and
+    * a null weight and adds nothing to the model. Docs with no bigrams
+    * surface the same way.
     *
     * Cross-engine exactness: bucket counts are exact integers (two hash
     * aggregates); the per-bucket log ratio is ONE double computed from
     * those integers, quantized to integer nanos at the bucket table
-    * (≤ `dim` rows, broadcast); per-doc sums are therefore exact BIGINT
-    * sums, closed by a single division — the pageRank fixed-point
-    * contract. Docs with no bigrams surface with null weight.
+    * (≤ [[DsirDim]] rows, broadcast); per-doc sums are therefore exact
+    * BIGINT sums, closed by a single division — the pageRank fixed-point
+    * contract.
     *
-    * Scale: explode-bigram → bucket is map-side; the two count
-    * aggregates shuffle `dim`-bounded keys; the per-doc score is one
-    * hash aggregate on the doc id. The target predicate is evaluated on
-    * the same pass — the corpus is read once.
+    * Scale: bigram → bucket is map-side over the collapsed frame; the two
+    * count aggregates shuffle [[DsirDim]]-bounded keys; the per-doc score
+    * is one hash aggregate on the doc id.
     */
-  def dsirWeights(docs: DataFrame, id: String, text: String,
-      isTarget: Column, dim: Int = 128): DataFrame = {
-    val bg = bucketedBigrams(docs, id, text, isTarget, dim)
-    val perDoc = bg.join(broadcast(bucketRatiosFrom(bg, dim)), Seq("__b"))
-      .groupBy(col(id))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("__lrq")).as("__s"))
-    docs.select(col(id)).join(perDoc, Seq(id), "left")
-      .select(col(id), coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        round(col("__s") / col("n_bigrams") / 1e9, 6).as("dsir_w"))
-  }
-
-  /** [[dsirWeights]] over a pre-built [[GramProfile]] — the shared-
-    * front-end form. `markers` is `(id, __tgt: boolean)` and also SCOPES
-    * the pass: only marked docs are modeled and scored (the composed
-    * quality gate restricts it to rule survivors), so the corpus's
-    * collapsed gram frame is filtered, never re-exploded. Multiplicities
-    * ride the `__m` column: bucket counts and per-doc sums weight by it,
-    * which is exactly the per-occurrence arithmetic of the docs form.
-    */
-  def dsirWeights(p: GramProfile, markers: DataFrame, dim: Int): DataFrame = {
+  def dsirWeights(p: GramProfile, markers: DataFrame): DataFrame = {
     val id = p.id
-    val bg = p.docBigrams
-      .join(markers.select(col(id), col("__tgt").cast("int").as("__tgt")),
-        Seq(id))
-      .withColumn("__b",
-        pmod(conv(substring(md5(col("__bg")), 1, 4), 16, 10).cast("int"),
-          lit(dim)))
-    val counts = bg.groupBy("__b")
-      .agg(sum(col("__m")).as("__r"),
-        sum(col("__m") * col("__tgt")).cast("long").as("__t"))
-    val totals = counts.agg(sum(col("__r")).as("__rt"), sum(col("__t")).as("__tt"))
-    val ratios = counts.crossJoin(broadcast(totals))
-      .select(col("__b"),
-        round(log((col("__t") + 1.0) / (col("__tt") + lit(dim.toDouble)) *
-          (col("__rt") + lit(dim.toDouble)) / (col("__r") + 1.0)) * 1e9, 0)
-          .cast("long").as("__lrq"))
-    val perDoc = bg.join(broadcast(ratios), Seq("__b"))
+    val bg = markedBigrams(p, markers)
+    val perDoc = bg.join(broadcast(dsirRatios(bg)), Seq("__b"))
       .groupBy(col(id))
       .agg(sum(col("__m")).as("n_bigrams"),
         sum(col("__m") * col("__lrq")).as("__s"))
@@ -173,62 +145,56 @@ object QualityOps {
         round(col("__s") / col("n_bigrams") / 1e9, 6).as("dsir_w"))
   }
 
-  /** The FROZEN DSIR model as a standalone frame: per-bucket
-    * nano-quantized log importance ratio, ≤ `dim` rows — exactly the
-    * table [[dsirWeights]] scores against. Train it batch-side, collect
-    * it (bounded by construction), and hand it to the streaming twin
+  /** The FROZEN DSIR model as a standalone frame `(bucket, lrq)`: per-
+    * bucket nano-quantized log importance ratio, ≤ [[DsirDim]] rows —
+    * exactly the table [[dsirWeights]] scores against for the same
+    * `(p, markers)`. Train it batch-side, collect it (bounded by
+    * construction), and hand it to the streaming twin
     * ([[graft.streaming.EventStreams.qualityGateStream]]) to gate a live
     * feed statelessly.
     */
-  def dsirBucketRatios(docs: DataFrame, id: String, text: String,
-      isTarget: Column, dim: Int = 128): DataFrame =
-    bucketRatiosFrom(bucketedBigrams(docs, id, text, isTarget, dim), dim)
+  def dsirBucketRatios(p: GramProfile, markers: DataFrame): DataFrame =
+    dsirRatios(markedBigrams(p, markers))
       .select(col("__b").as("bucket"), col("__lrq").as("lrq"))
 
-  /** One row per (doc, bigram occurrence) with its hash bucket — the
-    * single corpus pass both DSIR aggregates re-aggregate.
+  /** Hash buckets of the DSIR model, shared by the batch scorer and the
+    * streaming gate, so a model can only be scored at the width it was
+    * trained at.
     */
-  private def bucketedBigrams(docs: DataFrame, id: String, text: String,
-      isTarget: Column, dim: Int): DataFrame =
-    graft.Tables.spread(docs.select(col(id), col(text), isTarget.cast("int").as("__tgt")))
-      .select(col(id), col("__tgt"),
-        explode(TextFns.rawShingles(TextFns.tokens(col(text)), 2)).as("__bg"))
-      .withColumn("__b",
-        pmod(conv(substring(md5(col("__bg")), 1, 4), 16, 10).cast("int"),
-          lit(dim)))
+  private[graft] val DsirDim = 128
 
-  /** ln(p_b/q_b) per bucket from exact integer counts, pinned to nanos;
-    * buckets with no mass at all simply never join (no bigram hashes
-    * there), so add-1 smoothing over `dim` buckets is applied to the
-    * observed-bucket table only — identical on both engines.
+  /** The DSIR bucket of a bigram string: md5-prefix hash mod [[DsirDim]]. */
+  private[graft] def dsirBucket(bigram: Column): Column =
+    pmod(conv(substring(md5(bigram), 1, 4), 16, 10).cast("int"),
+      lit(DsirDim))
+
+  /** `(id, __bg, __m, __tgt, __b)` — the profile's collapsed bigrams of
+    * the marked docs with their target flag and hash bucket.
     */
-  private def bucketRatiosFrom(bg: DataFrame, dim: Int): DataFrame = {
+  private def markedBigrams(p: GramProfile, markers: DataFrame): DataFrame =
+    p.docBigrams
+      .join(markers.select(col(p.id), col("__tgt").cast("int").as("__tgt")),
+        Seq(p.id))
+      .withColumn("__b", dsirBucket(col("__bg")))
+
+  /** ln(p_b/q_b) per bucket `(__b, __lrq)` from exact integer counts,
+    * pinned to nanos; buckets with no mass at all simply never join (no
+    * bigram hashes there), so add-1 smoothing over [[DsirDim]] buckets is
+    * applied to the observed-bucket table only — identical on both
+    * engines.
+    */
+  private def dsirRatios(bg: DataFrame): DataFrame = {
     val counts = bg.groupBy("__b")
-      .agg(count(lit(1)).as("__r"), sum(col("__tgt")).cast("long").as("__t"))
+      .agg(sum(col("__m")).as("__r"),
+        sum(col("__m") * col("__tgt")).cast("long").as("__t"))
     val totals = counts.agg(sum(col("__r")).as("__rt"), sum(col("__t")).as("__tt"))
     counts.crossJoin(broadcast(totals))
       .select(col("__b"),
-        round(log((col("__t") + 1.0) / (col("__tt") + lit(dim.toDouble)) *
-          (col("__rt") + lit(dim.toDouble)) / (col("__r") + 1.0)) * 1e9, 0)
+        round(log((col("__t") + 1.0) / (col("__tt") + lit(DsirDim.toDouble)) *
+          (col("__rt") + lit(DsirDim.toDouble)) / (col("__r") + 1.0)) * 1e9, 0)
           .cast("long").as("__lrq"))
   }
 
-  /** ExactSubstr duplication coverage (Lee et al. 2022): the fraction of
-    * each document's token positions covered by some `k`-token span that
-    * occurs ≥ 2 times corpus-wide. Where [[graft.dedup.DedupOps]] asks
-    * "which DOCUMENT PAIRS are near-dups", this asks "how much of THIS
-    * doc is boilerplate that appears elsewhere" — the signal behind
-    * span-level dedup and the memorization audits.
-    *
-    * Plan: posexplode each doc's k-gram starts (positions 0..n−k), hash
-    * the joined gram, count grams globally (one hash agg), keep hashes
-    * with count ≥ 2, join back to positions (inner — non-dup positions
-    * drop early), then per-doc interval union WITHOUT an interval-merge
-    * loop: spans all have length k and arrive position-sorted, so union
-    * length = Σ min(k, next_start − start) with the last span
-    * contributing k — one lead() window per doc. All-integer until the
-    * closing division.
-    */
   /** Char-n-gram language identification (the Cavnar–Trenkle 1994 n-gram
     * categorization family, in its add-1 multinomial form): train per-
     * language char-trigram models on the corpus's own declared labels,
@@ -327,6 +293,22 @@ object QualityOps {
       .agg(count(lit(1)).as("n"))
   }
 
+  /** ExactSubstr duplication coverage (Lee et al. 2022): the fraction of
+    * each document's token positions covered by some `k`-token span that
+    * occurs ≥ 2 times corpus-wide. Where [[graft.dedup.DedupOps]] asks
+    * "which DOCUMENT PAIRS are near-dups", this asks "how much of THIS
+    * doc is boilerplate that appears elsewhere" — the signal behind
+    * span-level dedup and the memorization audits.
+    *
+    * Plan: posexplode each doc's k-gram starts (positions 0..n−k), hash
+    * the joined gram, count grams globally (one hash agg), keep hashes
+    * with count ≥ 2, join back to positions (inner — non-dup positions
+    * drop early), then per-doc interval union WITHOUT an interval-merge
+    * loop: spans all have length k and arrive position-sorted, so union
+    * length = Σ min(k, next_start − start) with the last span
+    * contributing k — one lead() window per doc. All-integer until the
+    * closing division.
+    */
   def dupSpanCoverage(docs: DataFrame, id: String, text: String,
       k: Int): DataFrame = {
     val toks = graft.Tables.spread(docs.select(col(id), col(text)))

@@ -205,19 +205,6 @@ object SummaryOps {
           .as("jsd"))
   }
 
-  // ---- approximate scale paths ----------------------------------------
-  // Exact countDistinct / percentile shuffle every distinct value; at
-  // 100 TB the sketch forms below are the production path (bounded-size
-  // partials that merge associatively — one narrow shuffle regardless of
-  // cardinality). They have no cross-engine oracle by nature (sketch
-  // internals differ per engine), so they are spec-gated: ApproxSpec
-  // asserts the error envelope against the exact forms on the same data.
-
-  /** A7 scale path — HyperLogLog++ distinct count per group with relative
-    * standard deviation `rsd` (default 5%). Partials are fixed-size HLL
-    * registers, so the shuffle is |groups| rows no matter how many
-    * distinct values exist.
-    */
   /** Per-document average bigram log-likelihood under an add-1-smoothed
     * bigram model trained on the corpus itself — the cheap
     * perplexity-style fluency score of a quality-filter stack (docs whose
@@ -239,47 +226,29 @@ object SummaryOps {
     * — the shuffle-order-independent convention every other float
     * reduction in the engine follows. A raw double Σ m·ln(p) over ~10⁶
     * bigrams could flip the 6th decimal with partition order at scale;
-    * this cannot.
-    */
-  def bigramLogProb(docs: DataFrame, id: String, text: String): DataFrame = {
-    import graft.functions.TextFns
-    val toks = graft.Tables.spread(docs.select(col(id), col(text)))
-      .select(col(id), TextFns.tokens(col(text)).as("__t"))
-    bigramLogProb(gramProfile(toks, id))
-  }
-
-  /** [[bigramLogProb]] over a pre-built [[GramProfile]] — the shared-
-    * front-end form, returning the profile's checkpointed
-    * [[GramProfile.selfLogProb]] frame (built once, reused by every
-    * self-trained consumer).
+    * this cannot. The result is the profile's checkpointed
+    * [[GramProfile.selfLogProb]] frame, built once and reused by every
+    * self-trained consumer.
     */
   def bigramLogProb(p: GramProfile): DataFrame = p.selfLogProb
 
   /** The actual self-trained scoring plan (what
-    * [[GramProfile.selfLogProb]] checkpoints): per-doc exact DECIMAL sum
-    * of pico-quantized model log-probs over the collapsed gram frame.
+    * [[GramProfile.selfLogProb]] checkpoints).
     */
-  private[operators] def selfLogProbOf(p: GramProfile): DataFrame = {
-    val id = p.id
-    val scored = p.docBigrams
-      .join(p.addOneModel, Seq("__bg"))
-      .groupBy(col(id))
-      .agg(sum(col("__m")).as("n_bigrams"),
-        sum(col("__m").cast("decimal(18,0)") * col("__lpq").cast("decimal(18,0)"))
-          .as("__llq"))
-    p.toks.select(col(id)).join(scored, Seq(id), "left")
-      .select(col(id), coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        round(col("__llq").cast("double") / lit(1e12) / col("n_bigrams"), 6)
-          .as("avg_logprob"))
-  }
+  private[operators] def selfLogProbOf(p: GramProfile): DataFrame =
+    perDocLogProb(p, p.docBigrams.join(p.addOneModel, Seq("__bg")),
+      "avg_logprob")
 
   /** [[bigramLogProb]] with the model corpus decoupled from the scored
     * corpus — the true CCNet shape (Wenzek et al. 2020), where the LM is
-    * trained on the TARGET domain and scores everything. Bigrams and
-    * previous-tokens unseen in the training slice fall back to the add-1
-    * floor ((0+1)/(0+V)) via LEFT joins — exactly the smoothing the
-    * self-trained form never exercises. Same two hash aggregates + two
-    * joins; V is a 1-row broadcast over the TRAIN vocabulary.
+    * trained on the TARGET domain and scores everything. `trainIds` names
+    * the training slice of the profile's corpus; the model counts are
+    * re-aggregates of the profile's collapsed gram frames over that slice
+    * (no second tokenize of the train side), and every profile doc is
+    * scored. Bigrams and previous-tokens unseen in the training slice
+    * fall back to the add-1 floor ((0+1)/(0+V)) via LEFT joins — exactly
+    * the smoothing the self-trained form never exercises. V is a 1-row
+    * broadcast over the TRAIN vocabulary.
     *
     * Determinism ([[bigramLogProb]]'s convention): each of the three
     * smoothing cases is pico-quantized at its own bounded frame — known
@@ -289,73 +258,81 @@ object SummaryOps {
     * previous token is always in the train vocabulary, so "bigram known,
     * prev unknown" cannot occur.)
     */
-  def bigramLogProbAgainst(train: DataFrame, score: DataFrame, id: String,
-      text: String): DataFrame = {
-    import graft.functions.TextFns
-    def toks(df: DataFrame) =
-      graft.Tables.spread(df.select(col(id), col(text)))
-        .select(col(id), TextFns.tokens(col(text)).as("__t"))
-    val trainToks = toks(train)
-    val bgCounts = trainToks
-      .select(explode(TextFns.rawShingles(col("__t"), 2)).as("__bg"))
-      .groupBy("__bg").agg(count(lit(1)).as("__cbg"))
-    val uniCounts = trainToks.select(explode(col("__t")).as("__tok"))
-      .groupBy("__tok").agg(count(lit(1)).as("__cu"))
-    bigramLogProbAgainstCounts(gramProfile(toks(score), id),
-      bgCounts, uniCounts)
-  }
-
-  /** [[bigramLogProbAgainst]] over a pre-built [[GramProfile]], for the
-    * common shape where the TRAIN slice is a subset of the scored corpus
-    * (the CCNet/DSIR target-domain case): `trainIds` names the slice and
-    * both the model counts and the scoring re-aggregate the profile's
-    * collapsed gram frames — no second tokenize of the train side.
-    */
   def bigramLogProbAgainst(p: GramProfile, trainIds: DataFrame): DataFrame = {
     val tIds = trainIds.select(col(p.id))
-    bigramLogProbAgainstCounts(p,
+    val uniCounts = p.docUnigrams.join(tIds, Seq(p.id), "left_semi")
+      .groupBy("__tok").agg(sum(col("__m")).as("__cu"))
+    val model = addOneModel(
       p.docBigrams.join(tIds, Seq(p.id), "left_semi")
         .groupBy("__bg").agg(sum(col("__m")).as("__cbg")),
-      p.docUnigrams.join(tIds, Seq(p.id), "left_semi")
-        .groupBy("__tok").agg(sum(col("__m")).as("__cu")))
-  }
-
-  /** Shared back half: score the profile's corpus under a bigram model
-    * given by its raw count frames `(__bg, __cbg)` / `(__tok, __cu)`.
-    */
-  private def bigramLogProbAgainstCounts(p: GramProfile,
-      bgCounts: DataFrame, uniCounts: DataFrame): DataFrame = {
-    val id = p.id
-    val vocab = uniCounts.agg(count(lit(1)).cast("double").as("__v"))
-    val model = bgCounts
-      .withColumn("__prev", substring_index(col("__bg"), " ", 1))
-      .join(uniCounts.withColumnRenamed("__tok", "__prev"), Seq("__prev"))
-      .crossJoin(broadcast(vocab))
-      .select(col("__bg"),
-        round(log((col("__cbg") + 1.0) / (col("__cu") + col("__v"))) * 1e12, 0)
-          .cast("long").as("__lpq"))
-    val prevModel = uniCounts.crossJoin(broadcast(vocab))
+      uniCounts)
+    val v = vocab(uniCounts)
+    val prevModel = uniCounts.crossJoin(broadcast(v))
       .select(col("__tok").as("__prev"),
         round(log(lit(1.0) / (col("__cu") + col("__v"))) * 1e12, 0)
           .cast("long").as("__ppq"))
-    val baseQ = vocab.select(
+    val baseQ = v.select(
       round(log(lit(1.0) / col("__v")) * 1e12, 0).cast("long").as("__bq"))
-    val scored = p.docBigrams
-      .join(model, Seq("__bg"), "left")
-      .withColumn("__prev", substring_index(col("__bg"), " ", 1))
-      .join(prevModel, Seq("__prev"), "left")
-      .crossJoin(broadcast(baseQ))
-      .groupBy(col(id))
-      .agg(sum(col("__m")).as("n_bigrams"),
-        sum(col("__m").cast("decimal(18,0)") *
-          coalesce(col("__lpq"), col("__ppq"), col("__bq"))
-            .cast("decimal(18,0)")).as("__llq"))
-    p.toks.select(col(id)).join(scored, Seq(id), "left")
-      .select(col(id), coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        round(col("__llq").cast("double") / lit(1e12) / col("n_bigrams"), 6)
-          .as("avg_logprob"))
+    perDocLogProb(p, p.docBigrams
+        .join(model, Seq("__bg"), "left")
+        .withColumn("__prev", substring_index(col("__bg"), " ", 1))
+        .join(prevModel, Seq("__prev"), "left")
+        .crossJoin(broadcast(baseQ))
+        .select(col(p.id), col("__m"),
+          coalesce(col("__lpq"), col("__ppq"), col("__bq")).as("__lpq")),
+      "avg_logprob")
   }
 
+  /** The add-1 bigram model over raw count frames `(__bg, __cbg)` /
+    * `(__tok, __cu)`: `(__bg, __lpq)`, ln((c(prev,cur)+1)/(c(prev)+V))
+    * pico-quantized at this (distinct-bigram-bounded) frame.
+    */
+  private[operators] def addOneModel(bgCounts: DataFrame,
+      uniCounts: DataFrame): DataFrame =
+    bgCounts
+      .withColumn("__prev", substring_index(col("__bg"), " ", 1))
+      .join(uniCounts.withColumnRenamed("__tok", "__prev"), Seq("__prev"))
+      .crossJoin(broadcast(vocab(uniCounts)))
+      .select(col("__bg"),
+        round(log((col("__cbg") + 1.0) / (col("__cu") + col("__v"))) * 1e12, 0)
+          .cast("long").as("__lpq"))
+
+  /** 1-row `(__v)` — the unigram vocabulary size as double. */
+  private def vocab(uniCounts: DataFrame): DataFrame =
+    uniCounts.agg(count(lit(1)).cast("double").as("__v"))
+
+  /** The per-doc tail every LM scorer shares: over `(id, __m, __lpq)`,
+    * the exact DECIMAL sum of multiplicity × pico log-prob per doc,
+    * left-joined onto every profile id (docs with no scored bigram come
+    * out with `n_bigrams` 0 and a null score) and closed by one division
+    * rounded to 6 as column `out`.
+    */
+  private def perDocLogProb(p: GramProfile, scored: DataFrame,
+      out: String): DataFrame = {
+    val id = p.id
+    val sums = scored.groupBy(col(id))
+      .agg(sum(col("__m")).as("n_bigrams"),
+        sum(col("__m").cast("decimal(18,0)") * col("__lpq").cast("decimal(18,0)"))
+          .as("__llq"))
+    p.toks.select(col(id)).join(sums, Seq(id), "left")
+      .select(col(id), coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
+        round(col("__llq").cast("double") / lit(1e12) / col("n_bigrams"), 6)
+          .as(out))
+  }
+
+  // ---- approximate scale paths ----------------------------------------
+  // Exact countDistinct / percentile shuffle every distinct value; at
+  // 100 TB the sketch forms below are the production path (bounded-size
+  // partials that merge associatively — one narrow shuffle regardless of
+  // cardinality). They have no cross-engine oracle by nature (sketch
+  // internals differ per engine), so they are spec-gated: ApproxSpec
+  // asserts the error envelope against the exact forms on the same data.
+
+  /** A7 scale path — HyperLogLog++ distinct count per group with relative
+    * standard deviation `rsd` (default 5%). Partials are fixed-size HLL
+    * registers, so the shuffle is |groups| rows no matter how many
+    * distinct values exist.
+    */
   def approxDistinctCount(df: DataFrame, group: String, c: String,
       rsd: Double = 0.05): DataFrame =
     df.groupBy(group).agg(approx_count_distinct(col(c), rsd).as("approx_distinct"))
@@ -433,18 +410,7 @@ object SummaryOps {
     * training corpus itself means every scored bigram is in the model
     * (the t28 self-trained contract); docs with < 2 tokens surface null.
     */
-  def knBigramLogProb(docs: DataFrame, id: String, text: String,
-      discount: Double = 0.75): DataFrame = {
-    import graft.functions.TextFns
-    val toks = graft.Tables.spread(docs.select(col(id), col(text)))
-      .select(col(id), TextFns.tokens(col(text)).as("__t"))
-    knBigramLogProb(gramProfile(toks, id), discount)
-  }
-
-  /** [[knBigramLogProb]] over a pre-built [[GramProfile]]. */
-  def knBigramLogProb(p: GramProfile, discount: Double): DataFrame = {
-    val id = p.id
-    val bg = p.docBigrams
+  def knBigramLogProb(p: GramProfile): DataFrame = {
     val bgCounts = p.bgCounts
       .withColumn("__v", substring_index(col("__bg"), " ", 1))
       .withColumn("__w", substring_index(col("__bg"), " ", -1))
@@ -457,19 +423,14 @@ object SummaryOps {
       .crossJoin(broadcast(nbb))
       .select(col("__bg"),
         round(log(
-          (greatest(col("__cbg") - lit(discount), lit(0.0)) +
-            lit(discount) * col("__n1v") * (col("__n1w") / col("__nbb"))) /
+          (greatest(col("__cbg") - lit(KnDiscount), lit(0.0)) +
+            lit(KnDiscount) * col("__n1v") * (col("__n1w") / col("__nbb"))) /
             col("__cv")) * 1e12, 0).cast("long").as("__lpq"))
-    val scored = bg.join(model, Seq("__bg"))
-      .groupBy(col(id))
-      .agg(sum(col("__m")).as("n_bigrams"),
-        sum(col("__m").cast("decimal(18,0)") * col("__lpq").cast("decimal(18,0)"))
-          .as("__llq"))
-    p.toks.select(col(id)).join(scored, Seq(id), "left")
-      .select(col(id), coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        round(col("__llq").cast("double") / lit(1e12) / col("n_bigrams"), 6)
-          .as("avg_logprob_kn"))
+    perDocLogProb(p, p.docBigrams.join(model, Seq("__bg")), "avg_logprob_kn")
   }
+
+  /** [[knBigramLogProb]]'s absolute discount D. */
+  private val KnDiscount = 0.75
 
   /** Count–Min sketch build (Cormode & Muthukrishnan 2005): the
     * fixed-memory frequency monitor for the 100 TB path. Each row hashes
@@ -514,19 +475,40 @@ object SummaryOps {
       .agg(min(coalesce(col("cnt"), lit(0L))).as("est"))
       .select(col("__k").as("key"), col("est"))
 
-  /** Build the shared [[GramProfile]] for the bigram-LM family over an
-    * already-tokenized `(id, __t, ...)` frame (one row per doc; pass a
-    * checkpointed frame when it will be scanned more than once). Every
-    * LM view — self-trained scoring ([[bigramLogProb]]), target-trained
-    * scoring ([[bigramLogProbAgainst]]), Kneser-Ney
+  /** Build the shared [[GramProfile]] for the bigram-LM family: the one
+    * place the family tokenizes (`Tables.spread` → `TextFns.tokens` as
+    * `__t`). Every LM view — self-trained scoring ([[bigramLogProb]]),
+    * target-trained scoring ([[bigramLogProbAgainst]]), Kneser-Ney
     * ([[knBigramLogProb]]), CCNet terciles
-    * ([[QualityOps.perplexityBuckets]]) and DSIR weights
-    * ([[QualityOps.dsirWeights]]) — re-aggregates the profile's
-    * collapsed per-doc gram frames instead of re-exploding the corpus.
+    * ([[QualityOps.perplexityBuckets]]) and DSIR
+    * ([[QualityOps.dsirWeights]], [[QualityOps.dsirBucketRatios]]) —
+    * re-aggregates the profile's collapsed per-doc gram frames instead of
+    * re-exploding the corpus; the frames are checkpointed lazily on first
+    * use.
+    *
+    * Id contract: one row per `id`, and a null id is unmarked. Rows
+    * sharing an id merge into one doc whose bigrams a marker join counts
+    * once per marker row. A null-id doc's bigrams train the self-trained
+    * models, but it never joins a marker or its own score: it is absent
+    * from the DSIR model and comes out of every scorer with `n_bigrams` 0
+    * and a null score. Neither case is checked (a check costs a job).
     */
-  def gramProfile(toks: DataFrame, id: String,
-      checkpoint: DataFrame => DataFrame = _.localCheckpoint(false))
-      : GramProfile =
+  def gramProfile(docs: DataFrame, id: String, text: String): GramProfile = {
+    import graft.functions.TextFns
+    gramProfileFromToks(
+      graft.Tables.spread(docs.select(col(id), col(text)))
+        .select(col(id), TextFns.tokens(col(text)).as("__t")),
+      id, _.localCheckpoint(false))
+  }
+
+  /** [[gramProfile]] over an already-tokenized `(id, __t, ...)` frame (one
+    * row per doc; pass a checkpointed frame when it will be scanned more
+    * than once). `checkpoint` pins each derived frame: [[gramProfile]]
+    * passes a lazy local checkpoint, the SparkEntry shared cache an eager
+    * pinning variant.
+    */
+  private[graft] def gramProfileFromToks(toks: DataFrame, id: String,
+      checkpoint: DataFrame => DataFrame): GramProfile =
     new GramProfile(id, checkpoint, toks)
 }
 
@@ -566,22 +548,12 @@ final class GramProfile private[operators] (
   lazy val uniCounts: DataFrame =
     ck(docUnigrams.groupBy("__tok").agg(sum(col("__m")).as("__cu")))
 
-  /** 1-row `(__v)` — unigram vocabulary size as double. */
-  lazy val vocab: DataFrame =
-    uniCounts.agg(count(lit(1)).cast("double").as("__v"))
-
-  /** `(__bg, __lpq)` — the self-trained add-1 model, pico-quantized at
-    * this (distinct-corpus-bigram-bounded) frame; the join side every
-    * self-trained scorer re-reads.
+  /** `(__bg, __lpq)` — the self-trained add-1 model
+    * ([[SummaryOps.addOneModel]] over the corpus counts); the join side
+    * every self-trained scorer re-reads.
     */
-  lazy val addOneModel: DataFrame = ck(
-    bgCounts
-      .withColumn("__prev", substring_index(col("__bg"), " ", 1))
-      .join(uniCounts.withColumnRenamed("__tok", "__prev"), Seq("__prev"))
-      .crossJoin(broadcast(vocab))
-      .select(col("__bg"),
-        round(log((col("__cbg") + 1.0) / (col("__cu") + col("__v"))) * 1e12, 0)
-          .cast("long").as("__lpq")))
+  lazy val addOneModel: DataFrame =
+    ck(SummaryOps.addOneModel(bgCounts, uniCounts))
 
   /** `(id, n_bigrams, avg_logprob)` — the corpus scored under its own
     * add-1 model ([[SummaryOps.bigramLogProb]]'s output), shared by the

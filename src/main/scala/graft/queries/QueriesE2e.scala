@@ -453,7 +453,7 @@ private[graft] object QueriesE2e {
       val markers = base
         .select(col("doc_id"), (col("lang") === "en").as("__tgt"))
         .join(keepIds, Seq("doc_id"), "left_semi")
-      QualityOps.dsirWeights(p, markers, dim = 128)
+      QualityOps.dsirWeights(p, markers)
         .filter(col("dsir_w").isNotNull)
         .orderBy(col("dsir_w").desc, col("doc_id").asc)
         .limit(100)

@@ -547,7 +547,7 @@ private[graft] object QueriesMl {
     "ml24_dsir_weights" -> ((s, d) =>
       QualityOps.dsirWeights(gramProf(s, d),
         docs(s, d).select(col("doc_id"),
-          (col("lang") === "en").as("__tgt")), dim = 128)),
+          (col("lang") === "en").as("__tgt")))),
 
 
     // entropy ℓ-diversity profile per (nation, segment) quasi-identifier
@@ -573,7 +573,7 @@ private[graft] object QueriesMl {
     "ml25_dsir_resample" -> ((s, d) => {
       val w = QualityOps.dsirWeights(gramProf(s, d),
           docs(s, d).select(col("doc_id"),
-            (col("lang") === "en").as("__tgt")), dim = 128)
+            (col("lang") === "en").as("__tgt")))
         .filter(col("dsir_w").isNotNull)
       FoldOps.weightedSample(w, col("doc_id"), exp(col("dsir_w")), n = 50)
         .withColumn("priority",

@@ -566,7 +566,7 @@ private[graft] object QueriesText {
     // distinct-bigram frame, pico-pinned model logprobs, exact DECIMAL
     // per-doc sums — the modern-smoothing sibling of t28
     "t46_kneser_ney" -> ((s, d) =>
-      SummaryOps.knBigramLogProb(gramProf(s, d), discount = 0.75)),
+      SummaryOps.knBigramLogProb(gramProf(s, d))),
 
 
     // the TRUE CCNet filter shape (Wenzek et al. 2020): a bigram LM

@@ -556,8 +556,9 @@ object EventStreams {
     * `QualityOps.gopherRules`), and DSIR scoring against a FROZEN
     * batch-trained bucket-ratio model is stateless per doc — the
     * per-doc bigram sum folds INSIDE the row with higher-order
-    * functions against a ≤`dim`-entry map literal, replaying the batch
-    * op's exact arithmetic (same md5-bucket hash, same nano-quantized
+    * functions against a ≤ `QualityOps.DsirDim`-entry map literal,
+    * replaying the batch op's exact arithmetic (the same
+    * `QualityOps.dsirBucket` hash at the same width, same nano-quantized
     * ratios, same long sum, same closing double sequence). Bigrams
     * hashing to buckets absent from the model contribute nothing —
     * mirroring the batch inner join against the observed-bucket table.
@@ -566,7 +567,7 @@ object EventStreams {
     * new map. Batch ≡ stream asserted in StreamingSpec.
     */
   def qualityGateStream(docs: DataFrame, id: String, text: String,
-      model: Map[Int, Long], dim: Int,
+      model: Map[Int, Long],
       minWords: Int = 50, maxWords: Int = 100000): DataFrame = {
     import graft.functions.TextFns
     val mdl = typedLit(model)
@@ -582,8 +583,7 @@ object EventStreams {
       graft.operators.QualityOps.gopherStopwords)
     val lrqs = filter(
       transform(TextFns.rawShingles(toks, 2), b =>
-        try_element_at(mdl,
-          pmod(conv(substring(md5(b), 1, 4), 16, 10).cast("int"), lit(dim)))),
+        try_element_at(mdl, graft.operators.QualityOps.dsirBucket(b))),
       x => x.isNotNull)
     val nb = size(lrqs).cast("long")
     val s = aggregate(lrqs, lit(0L), (acc, x) => acc + x)

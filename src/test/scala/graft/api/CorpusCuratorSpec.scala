@@ -16,6 +16,9 @@ class CorpusCuratorSpec extends AnyFunSuite {
 
   private val d = "/root/testdata/sf0.001"
 
+  private def prof(df: org.apache.spark.sql.DataFrame) =
+    graft.operators.SummaryOps.gramProfile(df, "doc_id", "text")
+
   private def split(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val all = Tables.documents(spark, d)
     (all.filter(col("doc_id") % 37 =!= 0), all.filter(col("doc_id") % 37 === 0))
@@ -143,7 +146,7 @@ class CorpusCuratorSpec extends AnyFunSuite {
       (10L, "alpha beta gamma alpha beta gamma alpha beta gamma", "en", "s"),
       (11L, "one two three four five six seven eight nine ten", "en", "s"))
       .toDF("doc_id", "text", "lang", "source")
-    val scores = graft.operators.SummaryOps.bigramLogProb(rep, "doc_id", "text")
+    val scores = graft.operators.SummaryOps.bigramLogProb(prof(rep))
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(scores(10L) > scores(11L))
     val kept = CorpusCurator.fluencyFilter(rep,

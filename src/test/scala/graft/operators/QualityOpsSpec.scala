@@ -13,6 +13,24 @@ class QualityOpsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  private def prof(df: org.apache.spark.sql.DataFrame): GramProfile =
+    SummaryOps.gramProfile(df, "doc_id", "text")
+
+  /** DSIR weights with `isTarget` as the marker of every doc. */
+  private def dsir(docs: org.apache.spark.sql.DataFrame,
+      isTarget: org.apache.spark.sql.Column) =
+    QualityOps.dsirWeights(prof(docs),
+      docs.select(col("doc_id"), isTarget.as("__tgt")))
+
+  /** The target-trained LM over `train ∪ score`, trained on `train`'s
+    * ids and reported for `score`'s.
+    */
+  private def against(train: org.apache.spark.sql.DataFrame,
+      score: org.apache.spark.sql.DataFrame) =
+    SummaryOps.bigramLogProbAgainst(prof(train.unionByName(score)),
+        train.select("doc_id"))
+      .join(score.select("doc_id"), Seq("doc_id"), "left_semi")
+
   // --- Gopher rules ------------------------------------------------------
 
   test("gopherRules: flags and composite keep on crafted docs") {
@@ -48,7 +66,7 @@ class QualityOpsSpec extends AnyFunSuite {
       (3L, "a b c d a b c d"), (4L, "c d c d a b a b"),
       (5L, "e f g h i j k l"), (6L, "m n o p q r s t"))
       .toDF("doc_id", "text")
-    val r = QualityOps.perplexityBuckets(docs, "doc_id", "text")
+    val r = QualityOps.perplexityBuckets(prof(docs))
       .orderBy("ppl").collect()
     assert(r.length === 6)
     assert(r.map(_.getAs[String]("bucket")).toSeq ===
@@ -65,8 +83,7 @@ class QualityOpsSpec extends AnyFunSuite {
       (1L, "x y x y x y", 1), (2L, "x y x y x y", 1), (3L, "x y x y", 1),
       (4L, "p q p q p q", 0), (5L, "p q p q", 0), (6L, "x y p q", 0))
       .toDF("doc_id", "text", "is_en")
-    val r = QualityOps.dsirWeights(docs, "doc_id", "text",
-        col("is_en") === 1, dim = 32)
+    val r = dsir(docs, col("is_en") === 1)
       .collect().map(x => x.getLong(0) -> x.getAs[Double]("dsir_w")).toMap
     assert(r(1) > 0) // built from target-dominant bigrams
     assert(r(4) < 0) // built from raw-only bigrams
@@ -75,10 +92,49 @@ class QualityOpsSpec extends AnyFunSuite {
 
   test("dsirWeights: docs without bigrams surface with null weight") {
     val docs = Seq((1L, "solo", 1), (2L, "a b", 0)).toDF("doc_id", "text", "t")
-    val r = QualityOps.dsirWeights(docs, "doc_id", "text", col("t") === 1)
+    val r = dsir(docs, col("t") === 1)
       .orderBy("doc_id").collect()
     assert(r(0).getLong(1) === 0L && r(0).isNullAt(2))
     assert(r(1).getLong(1) === 1L && !r(1).isNullAt(2))
+  }
+
+  test("dsirWeights: a null-id doc is unmarked and leaves the other weights alone") {
+    val fixture = Seq(
+      (Option(1L), "x y x y x y", 1), (Option(2L), "x y x y x y", 1),
+      (Option(3L), "x y x y", 1), (Option(4L), "p q p q p q", 0),
+      (Option(5L), "p q p q", 0), (Option(6L), "x y p q", 0))
+    // a target doc made of off-target bigrams: modeled, it would move
+    // every weight
+    val withNull = (fixture :+ ((None: Option[Long], "p q p q p q", 1)))
+      .toDF("doc_id", "text", "is_en")
+    def weights(docs: org.apache.spark.sql.DataFrame) =
+      dsir(docs, col("is_en") === 1).collect()
+        .map(x => Option(x.get(0)) -> ((x.getLong(1), Option(x.get(2)))))
+    val got = weights(withNull).toMap
+    assert(got(None) === ((0L, None)))
+    assert(got - None === weights(fixture.toDF("doc_id", "text", "is_en")).toMap)
+  }
+
+  test("one GramProfile reused across the LM family equals a fresh profile per member") {
+    val docs = Seq(
+      (1L, "x y x y z", "en"), (2L, "x y z x y", "en"), (3L, "p q x y", "fr"),
+      (4L, "p q p q r", "fr"), (5L, "solo", "en"), (6L, "z x y p q", "de"),
+      (7L, "r p q p", "de")).toDF("doc_id", "text", "lang")
+    val trainIds = docs.filter(col("lang") === "en").select("doc_id")
+    val markers = docs.select(col("doc_id"), (col("lang") === "en").as("__tgt"))
+    val members: Seq[(String, GramProfile => org.apache.spark.sql.DataFrame)] =
+      Seq("bigramLogProb" -> (p => SummaryOps.bigramLogProb(p)),
+        "bigramLogProbAgainst" -> (p => SummaryOps.bigramLogProbAgainst(p, trainIds)),
+        "knBigramLogProb" -> (p => SummaryOps.knBigramLogProb(p)),
+        "perplexityBuckets" -> (p => QualityOps.perplexityBuckets(p)),
+        "dsirWeights" -> (p => QualityOps.dsirWeights(p, markers)),
+        "dsirBucketRatios" -> (p => QualityOps.dsirBucketRatios(p, markers)))
+    val shared = prof(docs)
+    val reused = members.map { case (n, m) => n -> m(shared).collect().toSet }
+    reused.zip(members).foreach { case ((n, got), (_, m)) =>
+      assert(got.nonEmpty, n)
+      assert(got === m(prof(docs)).collect().toSet, n)
+    }
   }
 
   // --- ExactSubstr duplicated-span coverage ------------------------------
@@ -367,8 +423,7 @@ class QualityOpsSpec extends AnyFunSuite {
     // target, so ln(p/q) = 0 in every bucket regardless of content
     val docs = Seq((1L, "a b c a b"), (2L, "x y z"), (3L, "q w e r t"))
       .toDF("doc_id", "text")
-    val r = QualityOps.dsirWeights(docs, "doc_id", "text", lit(true),
-      dim = 16).collect()
+    val r = dsir(docs, lit(true)).collect()
     assert(r.forall(x => x.isNullAt(2) || x.getAs[Double]("dsir_w") === 0.0))
     assert(r.exists(x => !x.isNullAt(2)))
   }
@@ -462,8 +517,7 @@ class QualityOpsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val train = Seq((1L, "a b")).toDF("doc_id", "text") // V = 2 unigrams
     val score = Seq((9L, "z w")).toDF("doc_id", "text") // fully unseen
-    val r = SummaryOps.bigramLogProbAgainst(train, score, "doc_id", "text")
-      .head()
+    val r = against(train, score).head()
     val want = BigDecimal(math.log(1.0 / 2.0))
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     assert(r.getLong(1) === 1L)
@@ -474,7 +528,7 @@ class QualityOpsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val train = Seq((1L, "x y x y x y"), (2L, "x y x y")).toDF("doc_id", "text")
     val score = Seq((10L, "x y x y"), (11L, "p q p q")).toDF("doc_id", "text")
-    val r = SummaryOps.bigramLogProbAgainst(train, score, "doc_id", "text")
+    val r = against(train, score)
       .collect().map(x => x.getLong(0) -> x.getAs[Double]("avg_logprob")).toMap
     assert(r(10L) > r(11L))
   }

@@ -16,6 +16,8 @@ class Round10OpsSpec extends AnyFunSuite {
     (1 to n).map(i => s"$prefix$i")
   private def prof(df: org.apache.spark.sql.DataFrame): SpanProfile =
     QualityOps.spanProfile(df, "doc_id", "text")
+  private def gramProf(df: org.apache.spark.sql.DataFrame): GramProfile =
+    SummaryOps.gramProfile(df, "doc_id", "text")
 
   // --- dupSpanPairs -------------------------------------------------------
 
@@ -87,7 +89,7 @@ class Round10OpsSpec extends AnyFunSuite {
     // bigrams of "a b a b a c": ab x2, ba x2, ac x1
     // ctx a: cv=3 n1v=2; ctx b: cv=2 n1v=1; cont b/a/c: n1w=1 each; nbb=3
     val df = Seq((1L, "a b a b a c")).toDF("doc_id", "text")
-    val r = SummaryOps.knBigramLogProb(df, "doc_id", "text").head()
+    val r = SummaryOps.knBigramLogProb(gramProf(df)).head()
     assert(r.getAs[Long]("n_bigrams") === 5L)
     val pAB = (2 - 0.75 + 0.75 * 2 * (1.0 / 3)) / 3
     val pBA = (2 - 0.75 + 0.75 * 1 * (1.0 / 3)) / 2
@@ -100,7 +102,7 @@ class Round10OpsSpec extends AnyFunSuite {
   test("knBigramLogProb: a deterministic single-continuation corpus scores 0") {
     // one bigram "x y": P(y|x) = (1−D)/1 + (D·1/1)·(1/1) = 1 → ln = 0
     val df = Seq((1L, "x y")).toDF("doc_id", "text")
-    val r = SummaryOps.knBigramLogProb(df, "doc_id", "text").head()
+    val r = SummaryOps.knBigramLogProb(gramProf(df)).head()
     assert(r.getAs[Long]("n_bigrams") === 1L)
     assert(r.getAs[Double]("avg_logprob_kn") === 0.0)
   }

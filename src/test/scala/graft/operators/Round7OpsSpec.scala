@@ -328,11 +328,14 @@ class Round7OpsSpec extends AnyFunSuite {
 
   // ---- bigram LM ----
 
+  private def prof(df: org.apache.spark.sql.DataFrame): GramProfile =
+    SummaryOps.gramProfile(df, "doc_id", "text")
+
   test("bigramLogProb: add-1 smoothed transition scores, hand-checked") {
     // corpus: "a b a", "b a", "x" → c(a)=3, c(b)=2, c(x)=1, V=3
     // bigram counts: "a b"=1, "b a"=2
     val df = Seq((1L, "a b a"), (2L, "b a"), (3L, "x")).toDF("doc_id", "text")
-    val out = SummaryOps.bigramLogProb(df, "doc_id", "text")
+    val out = SummaryOps.bigramLogProb(prof(df))
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), if (r.isNullAt(2)) null else r.getDouble(2))).toMap
     // doc1: [ln(2/6) + ln(3/5)]/2 = -0.804719

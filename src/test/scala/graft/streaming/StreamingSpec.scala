@@ -724,15 +724,15 @@ class StreamingSpec extends AnyFunSuite {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
     // the FROZEN model: batch-trained bucket ratios, bounded collect
-    val dim = 128
-    val model = graft.operators.QualityOps
-      .dsirBucketRatios(docs, "doc_id", "text", col("lang") === "en", dim)
+    val p = graft.operators.SummaryOps.gramProfile(docs, "doc_id", "text")
+    val markers = docs.select(col("doc_id"), (col("lang") === "en").as("__tgt"))
+    val model = graft.operators.QualityOps.dsirBucketRatios(p, markers)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(model.nonEmpty && model.size <= dim)
+    assert(model.nonEmpty && model.size <= graft.operators.QualityOps.DsirDim)
 
     val stream = EventStreams.qualityGateStream(
       spark.readStream.schema(rawSchema).parquet(dir.toString),
-      "doc_id", "text", model, dim)
+      "doc_id", "text", model)
     val q = stream.writeStream
       .format("memory").queryName("qgate").outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
@@ -742,8 +742,7 @@ class StreamingSpec extends AnyFunSuite {
     val batch = graft.operators.QualityOps
       .gopherRules(docs, "doc_id", "text")
       .select(col("doc_id"), col("keep"))
-      .join(graft.operators.QualityOps.dsirWeights(docs, "doc_id", "text",
-        col("lang") === "en", dim), Seq("doc_id"))
+      .join(graft.operators.QualityOps.dsirWeights(p, markers), Seq("doc_id"))
       .select(col("doc_id"), col("keep"), col("n_bigrams"), col("dsir_w"))
       .as[(Long, Int, Long, Option[Double])].collect().toSet
 
